@@ -17,6 +17,20 @@ manifest written LAST as the atomic commit marker; a crash mid-round leaves
 no manifest, so resume re-runs the round from the previous committed state,
 exactly like an uncommitted Iceberg snapshot). Per-round, per-hash-partition
 lineage rows (row counts in/out by stage) land in ``metrics/``.
+``init_crawl`` also records the checkpoint's state format (the ``part_id``
+derivation, ``seen.PART_ID_HASH``), and ``run_round`` refuses to resume a
+checkpoint whose format is missing or differs: its seen set and filters
+are keyed by other partitions, so the probe would miss seen URLs.
+
+A round pays a fixed cost per Spark job, not per URL, so the commit keeps
+the job count down. The filter state commits in one pass
+(``seen.commit_bloom``: one cogrouped Arrow UDF over the new URLs' hashes
+and the previous filter, persisted once) that writes ``bloom``,
+``bloom_words`` and ``metrics``. Every snapshot read is pinned to its
+surface's schema in ``SURFACE_SCHEMAS``, so no read starts a
+schema-inference job. The probe's geometry check is one small ``collect``.
+A round with compaction runs 20 Spark jobs on 4 cores (34 before these
+three changes).
 
 Everything that determines crawl order is a pure function of the data
 (priority hash, url tiebreak, discovery condition) — never of partitioning
@@ -76,12 +90,37 @@ def discover_children(
 # snapshot state backends
 # ---------------------------------------------------------------------------
 
+# The one schema registry of the state surfaces (Spark DDL column lists).
+# The parquet backend reads every snapshot with it — no schema-inference
+# job per read — and the Iceberg backend declares its tables from it; a
+# test checks the written parquet footers against it. ``metrics`` rows
+# carry their round; the Iceberg backend adds ``round`` to the others.
+SURFACE_SCHEMAS = {
+    "frontier": "url_canon STRING, host STRING",
+    "scheduled": "host STRING, url_canon STRING, priority BIGINT, slot INT",
+    "seen_delta": "url_canon STRING, host STRING, part_id INT",
+    # seen.BLOOM_SCHEMA
+    "bloom": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
+              "n_keys BIGINT"),
+    # probe-form filter state (seen.WORDS_SCHEMA): converted once at
+    # commit so every later probe skips the bits->words pass
+    "bloom_words": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
+                    "n_hashes INT"),
+    "metrics": ("part_id INT, n_new BIGINT, bloom_keys BIGINT, "
+                "fill_ratio DOUBLE, est_fpp DOUBLE, round INT"),
+}
+
+
 def _rdir(ckpt: str, k: int, sub: str) -> str:
     return os.path.join(ckpt, "rounds", f"r={k:04d}", sub)
 
 
 def _manifest_path(ckpt: str, k: int) -> str:
     return os.path.join(ckpt, f"MANIFEST-{k:04d}.json")
+
+
+def _format_path(ckpt: str) -> str:
+    return os.path.join(ckpt, "STATE_FORMAT.json")
 
 
 class ParquetStateBackend:
@@ -108,19 +147,27 @@ class ParquetStateBackend:
         df.write.mode("overwrite").parquet(_rdir(self.ckpt, k, sub))
         return int(obs.get["n"]) if obs is not None else None
 
+    def _scan(self, sub: str, *paths: str) -> DataFrame:
+        """Snapshot scan pinned to the surface's registered schema."""
+        return self.spark.read.schema(SURFACE_SCHEMAS[sub]).parquet(*paths)
+
+    def _delta_paths(self, start: int, upto: int) -> list[str]:
+        return [
+            _rdir(self.ckpt, k, "seen_delta")
+            for k in range(start, upto + 1)
+            if fsio.exists(self.spark, _rdir(self.ckpt, k, "seen_delta"))
+        ]
+
     def read(self, k: int, sub: str) -> DataFrame:
-        return self.spark.read.parquet(_rdir(self.ckpt, k, sub))
+        return self._scan(sub, _rdir(self.ckpt, k, sub))
 
     def exists(self, k: int, sub: str) -> bool:
         return fsio.exists(self.spark, _rdir(self.ckpt, k, sub))
 
     def read_seen_upto(self, upto: int) -> DataFrame:
-        paths = [
-            _rdir(self.ckpt, k, "seen_delta")
-            for k in range(upto + 1)
-            if fsio.exists(self.spark, _rdir(self.ckpt, k, "seen_delta"))
-        ]
-        return self.spark.read.parquet(*paths).select("url_canon")
+        return self._scan(
+            "seen_delta", *self._delta_paths(0, upto)
+        ).select("url_canon")
 
     # -- compacted seen set (bucketed) ----------------------------------
     #
@@ -159,11 +206,7 @@ class ParquetStateBackend:
         (marker written LAST — an interrupted compaction is invisible and
         simply re-runs). Deltas are disjoint by construction (each holds
         only genuinely-new URLs), so this is a straight rewrite."""
-        full = self.spark.read.parquet(*[
-            _rdir(self.ckpt, k, "seen_delta")
-            for k in range(upto + 1)
-            if fsio.exists(self.spark, _rdir(self.ckpt, k, "seen_delta"))
-        ])
+        full = self._scan("seen_delta", *self._delta_paths(0, upto))
         path = _rdir(self.ckpt, upto, "seen_compact")
         (
             full.select("url_canon", "host", "part_id")
@@ -208,7 +251,7 @@ class ParquetStateBackend:
             if not self.spark.catalog.tableExists(name):
                 self.spark.sql(
                     f"CREATE TABLE {name} "
-                    "(url_canon STRING, host STRING, part_id INT) "
+                    f"({SURFACE_SCHEMAS['seen_delta']}) "
                     "USING PARQUET CLUSTERED BY (url_canon) "
                     "SORTED BY (url_canon) "
                     f"INTO {self.SEEN_BUCKETS} BUCKETS "
@@ -216,13 +259,9 @@ class ParquetStateBackend:
                 )
             compacted = self.spark.table(name).select("url_canon")
             start = c + 1
-        paths = [
-            _rdir(self.ckpt, k, "seen_delta")
-            for k in range(start, upto + 1)
-            if fsio.exists(self.spark, _rdir(self.ckpt, k, "seen_delta"))
-        ]
+        paths = self._delta_paths(start, upto)
         deltas = (
-            self.spark.read.parquet(*paths).select("url_canon")
+            self._scan("seen_delta", *paths).select("url_canon")
             if paths
             else None
         )
@@ -246,6 +285,17 @@ class ParquetStateBackend:
             fsio.read_text(self.spark, _manifest_path(self.ckpt, k))
         )
 
+    def write_format(self, fmt: dict) -> None:
+        fsio.write_text(self.spark, _format_path(self.ckpt), json.dumps(fmt))
+
+    def read_format(self) -> dict:
+        """The checkpoint's state format, {} for one written before the
+        format was recorded."""
+        path = _format_path(self.ckpt)
+        if not fsio.exists(self.spark, path):
+            return {}
+        return json.loads(fsio.read_text(self.spark, path))
+
     def scheduled_with_rounds(self, last: int) -> DataFrame:
         """All committed scheduled snapshots 1..last as ONE multi-path scan
         with the round recovered from the snapshot path."""
@@ -257,7 +307,7 @@ class ParquetStateBackend:
         ]
         if not paths:
             raise ValueError("no scheduled rounds committed")
-        return self.spark.read.parquet(*paths).withColumn(
+        return self._scan("scheduled", *paths).withColumn(
             "round",
             F.regexp_extract(
                 F.input_file_name(), r"r=(\d+)/scheduled", 1
@@ -286,18 +336,67 @@ def read_seen(spark: SparkSession, ckpt, upto: int) -> DataFrame:
     return _backend(spark, ckpt).read_seen_upto(upto)
 
 
+def _commit_bloom(st, k: int, new_urls: DataFrame, prev: DataFrame,
+                  metrics: bool) -> None:
+    """Commit round k's filter state in one pass (seen.commit_bloom): the
+    merged ``bloom``, its probe-form ``bloom_words`` — paid once here so
+    every later probe of the snapshot skips the conversion — and, with
+    ``metrics``, the per-partition lineage rows. The pass is persisted
+    once and every surface is written from it."""
+    state = seen.commit_bloom(
+        seen.with_url_hashes(new_urls.select("url_canon"), n_parts=N_PARTS),
+        prev,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        st.write(state.select(*seen.BLOOM_SCHEMA.names), k, "bloom")
+        st.write(state.select(*seen.WORDS_SCHEMA.names), k, "bloom_words")
+        if metrics:
+            st.write(
+                state.select(
+                    "part_id", "n_new", F.col("n_keys").alias("bloom_keys"),
+                    "fill_ratio", "est_fpp", F.lit(k).alias("round"),
+                ),
+                k, "metrics",
+            )
+    finally:
+        state.unpersist()
+
+
+def _state_format() -> dict:
+    """What a checkpoint's stored state depends on beyond its schemas: the
+    part_id derivation that keys seen_delta rows and the bloom filters."""
+    return {"part_id_hash": seen.PART_ID_HASH}
+
+
+def _check_state_format(st, ckpt) -> None:
+    got = st.read_format()
+    if got != _state_format():
+        raise ValueError(
+            f"checkpoint {ckpt} was written with state format {got or None}"
+            f", this code reads {_state_format()}: its part_ids and bloom "
+            "filters use another derivation, so the probe would miss seen "
+            "URLs and crawl them again — re-initialize it with init_crawl "
+            "on a fresh checkpoint"
+        )
+
+
 def init_crawl(spark: SparkSession, seeds: DataFrame, ckpt) -> None:
     """Round 0 commit: frontier = seeds, seen = seeds, nothing scheduled.
     ``seeds`` must have (url_canon, host)."""
     st = _backend(spark, ckpt)
+    st.write_format(_state_format())
     seeds = seeds.select("url_canon", "host").dropDuplicates(["url_canon"])
     n = st.write(seeds, 0, "frontier", count=True)
-    hashed = seen.with_url_hashes(st.read(0, "frontier"), n_parts=N_PARTS)
-    st.write(hashed.select("url_canon", "host", "part_id"), 0, "seen_delta")
-    st.write(seen.build_bloom(hashed), 0, "bloom")
-    # probe-form state: pay the words conversion once at commit so every
-    # later probe of this snapshot skips it (seen.probe_bloom_jvm)
-    st.write(seen.bloom_words(st.read(0, "bloom")), 0, "bloom_words")
+    frontier = st.read(0, "frontier")
+    st.write(
+        seen.with_url_hashes(frontier, n_parts=N_PARTS).select(
+            "url_canon", "host", "part_id"),
+        0, "seen_delta",
+    )
+    _commit_bloom(
+        st, 0, frontier, spark.createDataFrame([], seen.BLOOM_SCHEMA),
+        metrics=False,
+    )
     st.write_manifest(
         0, {"round": 0, "n_frontier": n, "n_scheduled": 0, "n_new": n}
     )
@@ -324,6 +423,7 @@ def run_round(
     prev = st.latest_round()
     if prev is None:
         raise ValueError(f"no committed state under {ckpt}; call init_crawl first")
+    _check_state_format(st, ckpt)
     k = prev + 1
 
     frontier = st.read(prev, "frontier")
@@ -397,37 +497,24 @@ def run_round(
     )
     new_urls = st.read(k, "seen_delta")
 
+    # the merged filter, plus per-partition lineage metrics for this round
+    # (scale observability: one row per hash partition, not per URL) with
+    # the committed bloom's fill ratio / estimated fpp so operators see the
+    # filter saturating
     if bloom is not None:
-        delta_bloom = seen.build_bloom(
-            seen.with_url_hashes(new_urls.select("url_canon"), n_parts=N_PARTS)
-        )
-        st.write(seen.merge_bloom(bloom, delta_bloom), k, "bloom")
-        # probe-form state for the NEXT round's filter_unseen (see
-        # init_crawl) — one conversion pass here instead of one per probe
-        st.write(seen.bloom_words(st.read(k, "bloom")), k, "bloom_words")
-
-    # per-partition lineage metrics for this round (scale observability:
-    # one row per hash partition, not per URL), plus the committed bloom's
-    # fill ratio / estimated fpp so operators see the filter saturating
-    lineage = new_urls.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    if bloom is not None:
-        bstats = seen.bloom_stats(
-            st.read(k, "bloom")
-        ).withColumnRenamed("n_keys", "bloom_keys")
-        lineage = lineage.join(bstats, "part_id", "full_outer").withColumn(
-            "n_new", F.coalesce(F.col("n_new"), F.lit(0))
-        )
+        _commit_bloom(st, k, new_urls, bloom, metrics=True)
     else:
         # keep the metrics schema stable across use_bloom settings (the
         # Iceberg backend writes into a fixed-schema table)
-        lineage = (
-            lineage.withColumn("bloom_keys", F.lit(None).cast("bigint"))
+        st.write(
+            new_urls.groupBy("part_id")
+            .agg(F.count(F.lit(1)).alias("n_new"))
+            .withColumn("bloom_keys", F.lit(None).cast("bigint"))
             .withColumn("fill_ratio", F.lit(None).cast("double"))
             .withColumn("est_fpp", F.lit(None).cast("double"))
+            .withColumn("round", F.lit(k)),
+            k, "metrics",
         )
-    st.write(lineage.withColumn("round", F.lit(k)), k, "metrics")
 
     next_frontier = frontier.join(
         sched.select("url_canon"), "url_canon", "left_anti"

@@ -35,22 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .crawl import SURFACE_SCHEMAS
+
 # Spark 4.x / Scala 2.13 runtime artifact for --packages
 ICEBERG_RUNTIME_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
-
-_SURFACE_SCHEMAS = {
-    "frontier": "url_canon STRING, host STRING",
-    "scheduled": "host STRING, url_canon STRING, priority BIGINT, slot INT",
-    "seen_delta": "url_canon STRING, host STRING, part_id INT",
-    "bloom": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
-              "n_keys BIGINT"),
-    # probe-form filter state (seen.WORDS_SCHEMA): converted once at
-    # commit so every later probe skips the bits->words pass
-    "bloom_words": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
-                    "n_hashes INT"),
-    "metrics": ("part_id INT, n_new BIGINT, bloom_keys BIGINT, "
-                "fill_ratio DOUBLE, est_fpp DOUBLE"),
-}
 
 _MANIFEST_SCHEMA = "round INT, n_frontier BIGINT, n_scheduled BIGINT, n_new BIGINT"
 
@@ -106,10 +94,12 @@ class IcebergStateBackend:
     # -- DDL -----------------------------------------------------------------
     def _ensure_tables(self) -> None:
         self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.db}")
-        for name, cols in _SURFACE_SCHEMAS.items():
+        for name, cols in SURFACE_SCHEMAS.items():
+            if not cols.endswith("round INT"):
+                cols += ", round INT"
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {self.db}.{name} "
-                f"({cols}, round INT) USING iceberg PARTITIONED BY (round)"
+                f"({cols}) USING iceberg PARTITIONED BY (round)"
             )
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {self.db}.manifest "
@@ -203,6 +193,24 @@ class IcebergStateBackend:
             "n_frontier": int(r["n_frontier"]),
             "n_scheduled": int(r["n_scheduled"]),
             "n_new": int(r["n_new"]),
+        }
+
+    # the state format lives in the manifest table's properties, as
+    # "frontier.<key>" entries
+    def write_format(self, fmt: dict) -> None:
+        props = ", ".join(f"'frontier.{k}' = '{v}'" for k, v in fmt.items())
+        self.spark.sql(
+            f"ALTER TABLE {self.db}.manifest SET TBLPROPERTIES ({props})"
+        )
+
+    def read_format(self) -> dict:
+        rows = self.spark.sql(
+            f"SHOW TBLPROPERTIES {self.db}.manifest"
+        ).collect()
+        return {
+            r["key"][len("frontier."):]: r["value"]
+            for r in rows
+            if r["key"].startswith("frontier.")
         }
 
     def scheduled_with_rounds(self, last: int) -> DataFrame:

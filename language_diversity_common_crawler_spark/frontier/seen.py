@@ -3,9 +3,13 @@ with a cuckoo-filter fallback where deletions are needed (north rule).
 
 Design for 10^10 URLs (SURVEY.md §4.3):
 
-- The bitset is **partitioned by hash range**: ``part_id = pmod(xxhash64(url),
-  n_parts)``. Each partition owns an independent bloom filter over only its
-  keys, stored as one ``binary`` row. At 1% fpp, 10^10 keys need ~12 GB of
+- The bitset is **partitioned by hash range**: ``part_id =
+  pmod(xxhash64(url, 2), n_parts)``. Each partition owns an independent
+  bloom filter over only its keys, stored as one ``binary`` row. The
+  partition hash is independent of the probe hashes ``h1``/``h2``: a
+  ``part_id`` taken from ``h1`` would pin the low bits of ``h1`` that the
+  power-of-two probe mask keeps, and crowd every key of a partition into a
+  fraction of its bit positions. At 1% fpp, 10^10 keys need ~12 GB of
   bitset total — partitioned over e.g. 4096 parts that is ~3 MB per task,
   loaded only by the task probing that hash range. The preferred probe
   (:func:`probe_bloom_jvm`) re-encodes each slice as ``array<bigint>``
@@ -23,6 +27,11 @@ Design for 10^10 URLs (SURVEY.md §4.3):
   the overwhelming majority of candidate URLs are re-discoveries of seen
   URLs or brand-new — the bloom collapses the anti-join's probe side to the
   (small) maybe set, which is what makes the 10^10-row anti-join cheap.
+- A crawl round commits its filter in one pass (:func:`commit_bloom`):
+  merged bits, probe-form words and fill/fpp stats from one cogrouped
+  Arrow UDF. :func:`build_bloom`, :func:`merge_bloom`, :func:`bloom_words`
+  and :func:`bloom_stats` stay as the reference it is tested against; all
+  of them share the same numpy bitset kernels.
 - Deletions (e.g. recrawl-after-TTL) can't come out of a bloom filter; the
   :class:`CuckooFilter` variant supports ``delete`` and serializes to the
   same per-partition ``binary`` row layout.
@@ -45,6 +54,7 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -57,6 +67,17 @@ from ..plans.barrier import with_barrier_columns
 # producer/consumer (batch crawl rounds, streaming dedup state, bench jobs)
 # must agree on this or probe against the wrong bitset slice
 N_PARTS = 64
+
+# default per-partition filter geometry: 1 Mi bits (128 KiB) and 7 probes.
+# build_bloom's defaults and every crawl round's commit_bloom use these, so
+# the filters a crawl commits always merge by OR
+N_BITS_PER_PART = 1 << 20
+N_HASHES = 7
+
+# how part_id is derived (see with_url_hashes). Crawl checkpoints and the
+# streaming dedup state record it, and refuse state written under another
+# derivation: probing a URL in the wrong partition misses its bits
+PART_ID_HASH = "pmod(xxhash64(url, 2), n_parts)"
 
 BLOOM_SCHEMA = StructType(
     [
@@ -73,13 +94,17 @@ def with_url_hashes(
     df: DataFrame, url_col: str = "url_canon", n_parts: int = 64
 ) -> DataFrame:
     """Attach (h1, h2, part_id) 64-bit hash columns, JVM-side (xxhash64 in
-    whole-stage codegen — pure map, no shuffle)."""
-    h1 = F.xxhash64(F.col(url_col))
-    h2 = F.xxhash64(F.col(url_col), F.lit(1))
+    whole-stage codegen — pure map, no shuffle). ``part_id`` comes from a
+    third, independent hash (:data:`PART_ID_HASH`), so the keys of one
+    partition still spread over every bit position of its filter."""
     return (
-        df.withColumn("h1", h1)
-        .withColumn("h2", h2)
-        .withColumn("part_id", F.pmod(h1, F.lit(n_parts)).cast("int"))
+        df.withColumn("h1", F.xxhash64(F.col(url_col)))
+        .withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
+        .withColumn(
+            "part_id",
+            F.pmod(F.xxhash64(F.col(url_col), F.lit(2)), F.lit(n_parts))
+            .cast("int"),
+        )
     )
 
 
@@ -103,8 +128,59 @@ def _u64_col(tbl: pa.Table, name: str) -> np.ndarray:
     return col.combine_chunks().to_numpy(zero_copy_only=False).view(np.uint64)
 
 
+# -- bitset kernels: the one implementation of each step, shared by the
+#    reference UDFs below, the one-pass commit (commit_bloom) and the
+#    streaming dedup state (streaming/seen_state.py)
+
+def _set_bits(
+    bits: np.ndarray, n_bits: int, n_hashes: int,
+    h1: np.ndarray, h2: np.ndarray,
+) -> None:
+    """Insert (h1, h2) keys into one bitset slice, in place."""
+    for i in range(n_hashes):
+        idx = _bit_indices(h1, h2, i, n_bits)
+        np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
+
+
+def _or_bits(bitsets) -> np.ndarray:
+    """Bitwise OR of same-length bitsets (bytes-like), as a new array."""
+    merged = np.frombuffer(bitsets[0], dtype=np.uint8).copy()
+    for x in bitsets[1:]:
+        merged |= np.frombuffer(x, dtype=np.uint8)
+    return merged
+
+
+def _words(bits: np.ndarray) -> np.ndarray:
+    """Little-endian int64 word view of a bitset (see :func:`bloom_words`)."""
+    return bits.view("<i8")
+
+
+def _fill_ratio(bits: np.ndarray, n_bits: int) -> float:
+    return float(np.unpackbits(bits).sum()) / float(n_bits)
+
+
+def _check_mergeable(fn: str, part_id: int, n_bits, n_hashes) -> None:
+    """Filters merge by OR only when they share one geometry."""
+    if len(set(n_bits)) > 1 or len(set(n_hashes)) > 1:
+        raise ValueError(
+            f"{fn}: incompatible filter geometries in part {part_id}: "
+            f"n_bits={set(n_bits)} n_hashes={set(n_hashes)} — merging "
+            "filters with different geometry would create false negatives"
+        )
+
+
+def _check_word_aligned(fn: str, n_bits: int) -> None:
+    if n_bits % 64:
+        raise ValueError(
+            f"{fn}: n_bits={n_bits} is not a multiple of 64 — "
+            "the word encoding requires whole int64 words"
+        )
+
+
 def build_bloom(
-    hashed: DataFrame, n_bits_per_part: int = 1 << 20, n_hashes: int = 7
+    hashed: DataFrame,
+    n_bits_per_part: int = N_BITS_PER_PART,
+    n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """Per-partition bloom filters from a hashed URL DataFrame.
 
@@ -120,11 +196,8 @@ def build_bloom(
 
     def _build(tbl: pa.Table) -> pa.Table:
         bits = np.zeros(n_bytes, dtype=np.uint8)
-        h1 = _u64_col(tbl, "h1")
-        h2 = _u64_col(tbl, "h2")
-        for i in range(n_hashes):
-            idx = _bit_indices(h1, h2, i, n_bits_per_part)
-            np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
+        _set_bits(bits, n_bits_per_part, n_hashes,
+                  _u64_col(tbl, "h1"), _u64_col(tbl, "h2"))
         return pa.table(
             {
                 "part_id": pa.array(
@@ -149,21 +222,12 @@ def merge_bloom(a: DataFrame, b: DataFrame) -> DataFrame:
     Bloom filters of identical geometry merge by bitwise OR."""
 
     def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["n_bits"].nunique() > 1 or pdf["n_hashes"].nunique() > 1:
-            raise ValueError(
-                "merge_bloom: incompatible filter geometries in part "
-                f"{int(pdf['part_id'].iloc[0])}: n_bits={set(pdf['n_bits'])} "
-                f"n_hashes={set(pdf['n_hashes'])} — merging filters with "
-                "different geometry would create false negatives"
-            )
-        arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]]
-        merged = arrs[0].copy()
-        for x in arrs[1:]:
-            merged |= x
+        _check_mergeable("merge_bloom", int(pdf["part_id"].iloc[0]),
+                         pdf["n_bits"], pdf["n_hashes"])
         return pd.DataFrame(
             {
                 "part_id": [int(pdf["part_id"].iloc[0])],
-                "bits": [merged.tobytes()],
+                "bits": [_or_bits(list(pdf["bits"])).tobytes()],
                 "n_bits": [int(pdf["n_bits"].iloc[0])],
                 "n_hashes": [int(pdf["n_hashes"].iloc[0])],
                 "n_keys": [int(pdf["n_keys"].sum())],  # upper bound
@@ -189,8 +253,7 @@ def bloom_stats(bloom: DataFrame) -> DataFrame:
                 pdf["part_id"], pdf["bits"], pdf["n_bits"],
                 pdf["n_hashes"], pdf["n_keys"],
             ):
-                arr = np.frombuffer(bits, dtype=np.uint8)
-                fill = float(np.unpackbits(arr).sum()) / float(n_bits)
+                fill = _fill_ratio(np.frombuffer(bits, dtype=np.uint8), n_bits)
                 rows.append(
                     (int(part_id), int(n_keys), fill, fill ** int(n_hashes))
                 )
@@ -440,34 +503,118 @@ def bloom_words(bloom: DataFrame) -> DataFrame:
     ``merge_bloom`` pass."""
 
     def _conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["n_bits"].nunique() > 1 or pdf["n_hashes"].nunique() > 1:
-            raise ValueError(
-                "bloom_words: incompatible filter geometries in part "
-                f"{int(pdf['part_id'].iloc[0])}: n_bits={set(pdf['n_bits'])} "
-                f"n_hashes={set(pdf['n_hashes'])} — merging filters with "
-                "different geometry would create false negatives"
-            )
+        _check_mergeable("bloom_words", int(pdf["part_id"].iloc[0]),
+                         pdf["n_bits"], pdf["n_hashes"])
         n_bits = int(pdf["n_bits"].iloc[0])
-        if n_bits % 64:
-            raise ValueError(
-                f"bloom_words: n_bits={n_bits} is not a multiple of 64 — "
-                "the word encoding requires whole int64 words"
-            )
-        arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]]
-        merged = arrs[0].copy()
-        for x in arrs[1:]:
-            merged |= x
-        words = np.frombuffer(merged.tobytes(), dtype="<i8")
+        _check_word_aligned("bloom_words", n_bits)
         return pd.DataFrame(
             {
                 "part_id": [int(pdf["part_id"].iloc[0])],
-                "words": [words],
+                "words": [_words(_or_bits(list(pdf["bits"])))],
                 "n_bits": [n_bits],
                 "n_hashes": [int(pdf["n_hashes"].iloc[0])],
             }
         )
 
     return bloom.groupBy("part_id").applyInPandas(_conv, WORDS_SCHEMA)
+
+
+COMMIT_SCHEMA = StructType(
+    BLOOM_SCHEMA.fields
+    + [
+        StructField("words", ArrayType(LongType(), False), False),
+        StructField("n_new", LongType(), False),
+        StructField("fill_ratio", DoubleType(), False),
+        StructField("est_fpp", DoubleType(), False),
+    ]
+)
+
+
+def commit_bloom(new_hashed: DataFrame, prev: DataFrame) -> DataFrame:
+    """A round's whole filter commit in one pass: per ``part_id``, the
+    merged bitset (the :data:`BLOOM_SCHEMA` columns), its probe-form
+    ``words``, ``n_new`` (the part's keys in ``new_hashed``), ``fill_ratio``
+    and ``est_fpp``.
+
+    Equal bit for bit to the reference composition ``merge_bloom(prev,
+    build_bloom(new_hashed))``, then :func:`bloom_words` and
+    :func:`bloom_stats` of the merge, plus a per-part count of
+    ``new_hashed``: a part with no new keys carries its previous row
+    forward with ``n_new`` 0, and ``prev`` may be empty (round 0). New
+    keys go in at the default geometry (:data:`N_BITS_PER_PART`,
+    :data:`N_HASHES`), which ``prev`` rows must share. It is
+    one cogrouped ``applyInArrow`` over ``(part_id, h1, h2)`` and the
+    previous rows, so the commit crosses the Python boundary once and
+    reads back nothing it wrote."""
+    n_bytes = (N_BITS_PER_PART + 7) // 8
+    words_type = pa.list_(pa.field("element", pa.int64(), nullable=False))
+
+    def _commit(new: pa.Table, old: pa.Table) -> pa.Table:
+        part_id = (new if new.num_rows else old).column("part_id")[0].as_py()
+        if old.num_rows:
+            nb = old.column("n_bits").to_pylist()
+            nh = old.column("n_hashes").to_pylist()
+            if new.num_rows:
+                # the new keys are hashed at this geometry, as build_bloom
+                # would, so the previous filter must share it
+                nb.append(N_BITS_PER_PART)
+                nh.append(N_HASHES)
+            _check_mergeable("commit_bloom", part_id, nb, nh)
+            bits = _or_bits([b.as_buffer() for b in old.column("bits")])
+            n_bits, k = nb[0], nh[0]
+            n_keys = sum(old.column("n_keys").to_pylist())
+        else:
+            bits = np.zeros(n_bytes, dtype=np.uint8)
+            n_bits, k, n_keys = N_BITS_PER_PART, N_HASHES, 0
+        _check_word_aligned("commit_bloom", n_bits)
+        if new.num_rows:
+            _set_bits(bits, n_bits, k, _u64_col(new, "h1"), _u64_col(new, "h2"))
+        words = _words(bits)
+        fill = _fill_ratio(bits, n_bits)
+        return pa.table(
+            {
+                "part_id": pa.array([part_id], type=pa.int32()),
+                "bits": pa.array([bits.tobytes()], type=pa.binary()),
+                "n_bits": pa.array([n_bits], type=pa.int64()),
+                "n_hashes": pa.array([k], type=pa.int32()),
+                "n_keys": pa.array([n_keys + new.num_rows], type=pa.int64()),
+                "words": pa.ListArray.from_arrays(
+                    pa.array([0, words.size], type=pa.int32()),
+                    pa.array(words),
+                    type=words_type,
+                ),
+                "n_new": pa.array([new.num_rows], type=pa.int64()),
+                "fill_ratio": pa.array([fill], type=pa.float64()),
+                "est_fpp": pa.array([fill ** int(k)], type=pa.float64()),
+            }
+        )
+
+    return (
+        new_hashed.select("part_id", "h1", "h2")
+        .groupBy("part_id")
+        .cogroup(prev.select(*BLOOM_SCHEMA.names).groupBy("part_id"))
+        .applyInArrow(_commit, COMMIT_SCHEMA)
+    )
+
+
+def _filter_geometry(bloom: DataFrame) -> dict:
+    """Geometry of a filter set from one column-pruned ``collect()`` of
+    ``(part_id, n_bits, n_hashes)`` — a single job, one small row per
+    part. Keys: n_bits and n_hashes extrema (``nb_min`` ...), ``total``
+    bits, ``n_rows`` and distinct ``n_parts``; extrema and total are None
+    for an empty set."""
+    rows = bloom.select("part_id", "n_bits", "n_hashes").collect()
+    nb = [int(r["n_bits"]) for r in rows]
+    nh = [int(r["n_hashes"]) for r in rows]
+    return {
+        "nb_min": min(nb, default=None),
+        "nb_max": max(nb, default=None),
+        "nh_min": min(nh, default=None),
+        "nh_max": max(nh, default=None),
+        "total": sum(nb) if rows else None,
+        "n_rows": len(rows),
+        "n_parts": len({r["part_id"] for r in rows}),
+    }
 
 
 def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
@@ -533,7 +680,7 @@ def probe_bloom_jvm(
     Requires single-geometry, power-of-two ``n_bits`` (a multiple of 64);
     :func:`filter_unseen` auto-mode falls back to the Arrow paths
     otherwise. ``geometry`` = precomputed ``(n_bits, n_hashes,
-    total_bits)`` to skip the metadata aggregate when the caller already
+    total_bits)`` to skip the geometry collect when the caller already
     ran it.
 
     ``bloom`` may be either the canonical binary form (converted here via
@@ -542,7 +689,7 @@ def probe_bloom_jvm(
     a crawl commit can write once so every later probe skips the
     conversion pass. A words-form input must be pre-merged: one row per
     ``part_id`` (a duplicate part would duplicate candidate rows through
-    the join; the geometry aggregate enforces this).
+    the join; the geometry check enforces this).
 
     Candidates carrying a pre-existing ``maybe_seen`` column raise (the
     output barrier appends, it does not replace) — drop the stale flag
@@ -550,15 +697,7 @@ def probe_bloom_jvm(
     duplicate-column select for that input, never a meaningful result."""
     words_form = "words" in bloom.columns
     if geometry is None:
-        g = bloom.agg(
-            F.min("n_bits").alias("nb_min"),
-            F.max("n_bits").alias("nb_max"),
-            F.min("n_hashes").alias("nh_min"),
-            F.max("n_hashes").alias("nh_max"),
-            F.sum("n_bits").alias("total"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("part_id").alias("n_parts"),
-        ).collect()[0]
+        g = _filter_geometry(bloom)
         if g["total"] is None:
             raise ValueError(
                 "probe_bloom_jvm: empty filter set — no geometry to probe "
@@ -641,8 +780,8 @@ def filter_unseen(
     slice; ``"auto"`` (default) reads the filter geometry and picks
     ``jvm`` whenever the geometry supports it (single geometry,
     power-of-two n_bits — true for every ``build_bloom`` default), else
-    sizes between broadcast and cogroup. The geometry check is a
-    column-pruned metadata scan for a storage-backed bloom; for a
+    sizes between broadcast and cogroup. The geometry check is one
+    ``collect()`` of ``(part_id, n_bits, n_hashes)``, a single job; for a
     COMPUTED bloom (``build_bloom(...)`` passed straight in) it executes
     the build — auto/jvm therefore persist the bloom first so the probe
     reuses the result instead of building twice. The default 256 MB
@@ -676,15 +815,7 @@ def filter_unseen(
         # computed one (build_bloom(...) passed straight in) — persist so
         # the probe below reuses that work instead of building twice
         bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-        g = bloom.agg(
-            F.min("n_bits").alias("nb_min"),
-            F.max("n_bits").alias("nb_max"),
-            F.min("n_hashes").alias("nh_min"),
-            F.max("n_hashes").alias("nh_max"),
-            F.sum("n_bits").alias("total"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("part_id").alias("n_parts"),
-        ).collect()[0]
+        g = _filter_geometry(bloom)
         total_bits = g["total"]
         jvm_ok = (
             total_bits is not None

@@ -13,7 +13,9 @@ the shard globs express), zero stack noise, unchanged semantics for
 non-glob paths.
 
 Only the basename may carry glob characters; a glob mid-directory (not a
-shape any caller uses) falls through to the literal load.
+shape any caller uses) falls through to the literal load. A basename glob
+that matches no file raises ``FileNotFoundError``: a mistyped shard glob
+must fail loudly, never read as an empty DataFrame.
 """
 
 from __future__ import annotations
@@ -34,19 +36,26 @@ def split_basename_glob(path: str) -> tuple[str, str | None]:
     return path, None
 
 
+def _load(spark, fmt: str, path: str):
+    base, glob = split_basename_glob(path)
+    reader = spark.read.format(fmt)
+    if glob is None:
+        return reader.load(base)
+    df = reader.option("pathGlobFilter", glob).load(base)
+    # the file listing is done when the DataFrame is built, so
+    # inputFiles() costs no job
+    if not df.inputFiles():
+        raise FileNotFoundError(
+            f"no file under {base!r} matches the shard glob {glob!r}"
+        )
+    return df
+
+
 def load_binary(spark, path: str):
     """binaryFile batch load with the glob routed via pathGlobFilter."""
-    base, glob = split_basename_glob(path)
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(base)
+    return _load(spark, "binaryFile", path)
 
 
 def load_text(spark, path: str):
     """text batch load with the glob routed via pathGlobFilter."""
-    base, glob = split_basename_glob(path)
-    reader = spark.read
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.text(base)
+    return _load(spark, "text", path)

@@ -9,11 +9,11 @@ at ``n_bits/8`` bytes per partition regardless of URL count, the bounded-
 memory trade every real crawler makes (false positives drop a URL that was
 never seen, at the configured fpp; false negatives cannot happen).
 
-The grouping key is ``part_id = pmod(xxhash64(url), n_parts)`` — the SAME
-partitioning as the batch seen-set (frontier/seen.py), so a batch-built
-bloom snapshot could seed the stream state and vice versa. Bit math is
-identical (Kirsch-Mitzenmacher double hashing, numpy-vectorized per Arrow
-batch).
+The grouping key is ``part_id = pmod(xxhash64(url, 2), n_parts)`` — the
+SAME partitioning as the batch seen-set (frontier/seen.py), so a batch-built
+bloom snapshot could seed the stream state and vice versa. Bit math is the
+batch filter's own kernels (Kirsch-Mitzenmacher double hashing,
+numpy-vectorized per batch).
 """
 
 from __future__ import annotations
@@ -33,7 +33,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..frontier.seen import N_PARTS, _bit_indices, with_url_hashes
+from ..frontier.seen import (
+    N_BITS_PER_PART,
+    N_HASHES,
+    N_PARTS,
+    PART_ID_HASH,
+    _probe_hashes,
+    _set_bits,
+    with_url_hashes,
+)
 
 OUT_SCHEMA = StructType(
     [
@@ -48,6 +56,8 @@ STATE_SCHEMA = StructType(
         StructField("n_keys", LongType(), True),
         StructField("n_bits", LongType(), True),
         StructField("n_hashes", IntegerType(), True),
+        # seen.PART_ID_HASH of the query that built the state
+        StructField("part_id_hash", StringType(), True),
     ]
 )
 
@@ -56,8 +66,8 @@ def streaming_unseen_urls(
     url_stream: DataFrame,
     url_col: str = "url_canon",
     n_parts: int = N_PARTS,
-    n_bits_per_part: int = 1 << 20,
-    n_hashes: int = 7,
+    n_bits_per_part: int = N_BITS_PER_PART,
+    n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """First occurrence of each URL across the whole stream, approximate
     (bloom): emits a row the first time a URL's bits were not all set.
@@ -71,7 +81,14 @@ def streaming_unseen_urls(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            (bits_b, n_keys, st_bits, st_hashes) = state.get
+            (bits_b, n_keys, st_bits, st_hashes, st_part) = state.get
+            if st_part != PART_ID_HASH:
+                raise ValueError(
+                    "streaming_unseen_urls: checkpointed state was keyed by "
+                    f"part_id = {st_part}, not {PART_ID_HASH} — start the "
+                    "query on a fresh checkpoint (probing a URL in another "
+                    "partition's filter would miss its bits)"
+                )
             if st_bits != n_bits_per_part or st_hashes != n_hashes:
                 raise ValueError(
                     "streaming_unseen_urls: checkpointed state was built "
@@ -93,21 +110,18 @@ def streaming_unseen_urls(
             # sequential bit-set (stable original order preserved by a
             # first-occurrence mask on the url itself)
             first_in_batch = ~pdf[url_col].duplicated().to_numpy()
-            maybe_seen = np.ones(len(pdf), dtype=bool)
-            for i in range(n_hashes):
-                idx = _bit_indices(h1, h2, i, n_bits_per_part)
-                maybe_seen &= (bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
+            maybe_seen = _probe_hashes(bits, n_bits_per_part, n_hashes, h1, h2)
             new_mask = (~maybe_seen) & first_in_batch
-            for i in range(n_hashes):
-                idx = _bit_indices(h1, h2, i, n_bits_per_part)
-                np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
+            _set_bits(bits, n_bits_per_part, n_hashes, h1, h2)
             n_keys += int(new_mask.sum())
             out = pdf.loc[new_mask, [url_col]]
             if len(out):
                 yield pd.DataFrame(
                     {"part_id": part_id, "url_canon": out[url_col].values}
                 )
-        state.update((bits.tobytes(), n_keys, n_bits_per_part, n_hashes))
+        state.update(
+            (bits.tobytes(), n_keys, n_bits_per_part, n_hashes, PART_ID_HASH)
+        )
 
     return hashed.groupBy("part_id").applyInPandasWithState(
         _dedup,

@@ -687,6 +687,177 @@ def test_crawl_metrics_lineage(spark, tmp_path):
     assert all(r["bloom_keys"] > 0 for r in rows)
 
 
+def _jobs_in_group(spark, group: str) -> int:
+    """Spark jobs run under ``group``, read from the status store — the
+    way perfbench/sparkstats.py attributes jobs to a span."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return sum(
+        1
+        for i in range(jobs.length())
+        if jobs.apply(i).jobGroup().isDefined()
+        and jobs.apply(i).jobGroup().get() == group
+    )
+
+
+def _same_rows(a, b) -> bool:
+    return (a.count() == b.count() and a.exceptAll(b).count() == 0
+            and b.exceptAll(a).count() == 0)
+
+
+ROUND_JOB_BUDGET = 22
+
+
+def test_round_commit_matches_reference_and_job_budget(spark, tmp_path):
+    """Each round's one-pass filter commit (seen.commit_bloom) equals the
+    reference composition bit for bit: ``bloom`` = merge_bloom(prev,
+    build_bloom(new)), ``bloom_words`` = bloom_words(that), ``metrics`` =
+    bloom_stats(that) + per-part n_new. A round (compaction included)
+    stays within its Spark job budget."""
+    ckpt = str(tmp_path / "ckpt")
+    crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
+    rules = _spark_rules(spark)
+    sc = spark.sparkContext
+    jobs = []
+    for k in (1, 2):
+        group = f"commit-test-{tmp_path.name}-{k}"
+        sc.setJobGroup(group, f"round {k}")
+        try:
+            crawl.run_round(spark, ckpt, budget=2, rules=rules,
+                            compact_every=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(_jobs_in_group(spark, group))
+    st = crawl.ParquetStateBackend(spark, ckpt)
+    assert st.latest_compact() == 1
+    assert all(0 < n <= ROUND_JOB_BUDGET for n in jobs), jobs
+
+    for k in (0, 1, 2):
+        prev = (
+            st.read(k - 1, "bloom") if k
+            else spark.createDataFrame([], seen.BLOOM_SCHEMA)
+        )
+        new_hashed = seen.with_url_hashes(
+            st.read(k, "seen_delta").select("url_canon"),
+            n_parts=crawl.N_PARTS,
+        )
+        merged = seen.merge_bloom(prev, seen.build_bloom(new_hashed)).cache()
+        assert _same_rows(st.read(k, "bloom"), merged), k
+        assert _same_rows(st.read(k, "bloom_words"),
+                          seen.bloom_words(merged)), k
+        if k:
+            n_new = new_hashed.groupBy("part_id").agg(
+                F.count(F.lit(1)).alias("n_new"))
+            want = (
+                seen.bloom_stats(merged)
+                .withColumnRenamed("n_keys", "bloom_keys")
+                .join(n_new, "part_id", "left")
+                .select(
+                    "part_id",
+                    F.coalesce("n_new", F.lit(0)).alias("n_new"),
+                    "bloom_keys", "fill_ratio", "est_fpp",
+                    F.lit(k).alias("round"),
+                )
+            )
+            assert _same_rows(st.read(k, "metrics"), want), k
+        merged.unpersist()
+
+
+def test_state_footers_match_schema_registry(spark, tmp_path):
+    """Every surface a round commits has the parquet footer (names and
+    types) of its SURFACE_SCHEMAS entry — the schema the pinned state
+    reads apply without inferring it."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    ckpt = str(tmp_path / "ckpt")
+    _spark_run(spark, ckpt, 1)
+    for sub, ddl in crawl.SURFACE_SCHEMAS.items():
+        want = [
+            (f.name, f.dataType.simpleString())
+            for f in spark.createDataFrame([], ddl).schema
+        ]
+        files = glob.glob(
+            os.path.join(ckpt, "rounds", "r=0001", sub, "*.parquet")
+        )
+        assert files, sub
+        for path in files:
+            got = [
+                (f.name, f.dataType.simpleString())
+                for f in from_arrow_schema(pq.read_schema(path))
+            ]
+            assert got == want, (sub, path)
+
+
+def test_bloom_realized_fpp_matches_estimate(spark):
+    """A filter loaded at ~10 bits/key answers unseen keys maybe-seen at
+    its estimated rate (within 2x). The partition hash must be independent
+    of the probe hashes: a part_id taken from h1 pins the low bits of
+    every probe index in a partition, and the realized rate climbs far
+    above bloom_stats' estimate."""
+    n_bits = 1 << 11
+    n_keys = crawl.N_PARTS * n_bits // 10
+    keys = seen.with_url_hashes(
+        spark.range(n_keys).select(
+            F.concat(F.lit("https://in.example/"), F.col("id").cast("string"))
+            .alias("url_canon")),
+        n_parts=crawl.N_PARTS,
+    )
+    bloom = seen.build_bloom(keys, n_bits_per_part=n_bits).cache()
+    unseen = seen.with_url_hashes(
+        spark.range(50_000).select(
+            F.concat(F.lit("https://out.example/"), F.col("id").cast("string"))
+            .alias("url_canon")),
+        n_parts=crawl.N_PARTS,
+    )
+    fp = seen.probe_bloom_jvm(unseen, bloom).filter("maybe_seen").count()
+    est = seen.bloom_stats(bloom).agg(F.avg("est_fpp")).collect()[0][0]
+    bloom.unpersist()
+    realized = fp / 50_000
+    assert est / 2 <= realized <= 2 * est, (realized, est)
+
+
+def test_resume_refuses_checkpoint_of_other_part_id_derivation(
+        spark, tmp_path, monkeypatch):
+    """A checkpoint committed under the earlier part_id derivation
+    (pmod(h1, n), no recorded state format) must not resume: its seen set
+    and filters sit in other partitions, and the probe would miss seen
+    URLs. run_round raises, as it does for a format naming another
+    derivation; a fresh init_crawl records the current one."""
+    def old_hashes(df, url_col="url_canon", n_parts=64):
+        h1 = F.xxhash64(F.col(url_col))
+        return (
+            df.withColumn("h1", h1)
+            .withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
+            .withColumn("part_id", F.pmod(h1, F.lit(n_parts)).cast("int"))
+        )
+
+    ckpt = str(tmp_path / "old")
+    with monkeypatch.context() as m:
+        m.setattr(seen, "with_url_hashes", old_hashes)
+        m.setattr(crawl.ParquetStateBackend, "write_format",
+                  lambda self, fmt: None)
+        crawl.init_crawl(spark, _spark_seeds(spark, 20), ckpt)
+    st = crawl.ParquetStateBackend(spark, ckpt)
+    assert st.read_format() == {}
+    with pytest.raises(ValueError, match="re-initialize"):
+        crawl.run_round(spark, ckpt, budget=2)
+    assert crawl.latest_round(spark, ckpt) == 0
+
+    st.write_format({"part_id_hash": "pmod(h1, n_parts)"})
+    with pytest.raises(ValueError, match="re-initialize"):
+        crawl.run_round(spark, ckpt, budget=2)
+
+    fresh = str(tmp_path / "fresh")
+    crawl.init_crawl(spark, _spark_seeds(spark, 20), fresh)
+    assert crawl.ParquetStateBackend(spark, fresh).read_format() == {
+        "part_id_hash": seen.PART_ID_HASH}
+
+
 def test_iceberg_backend_flagging(spark):
     """The Iceberg-native state backend exists behind a capability check:
     without the runtime jar it reports unavailable and refuses construction
@@ -704,11 +875,7 @@ def test_iceberg_backend_flagging(spark):
             == "org.apache.iceberg.spark.extensions"
                ".IcebergSparkSessionExtensions")
     # surface schemas cover every parquet-backend surface
-    from language_diversity_common_crawler_spark.frontier.iceberg import (
-        _SURFACE_SCHEMAS,
-    )
-
-    assert set(_SURFACE_SCHEMAS) == {
+    assert set(crawl.SURFACE_SCHEMAS) == {
         "frontier", "scheduled", "seen_delta", "bloom", "bloom_words",
         "metrics",
     }

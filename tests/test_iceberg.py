@@ -137,7 +137,7 @@ def test_ddl_namespace_first_then_tables():
     # one table per state surface + the manifest
     made = {re.search(r"crawl\.frontier_state\.(\w+)", s).group(1)
             for s in tables}
-    assert made == set(iceberg._SURFACE_SCHEMAS) | {"manifest"}
+    assert made == set(crawl.SURFACE_SCHEMAS) | {"manifest"}
 
 
 def test_ddl_surfaces_partitioned_by_round_manifest_not():
@@ -152,9 +152,9 @@ def test_ddl_surfaces_partitioned_by_round_manifest_not():
             assert "committed_at TIMESTAMP" in s, s
         else:
             assert s.rstrip().endswith("PARTITIONED BY (round)"), s
-            assert "round INT" in s, s
+            assert s.count("round INT") == 1, s
             # declared columns match the module schema contract
-            assert iceberg._SURFACE_SCHEMAS[name] in s, s
+            assert crawl.SURFACE_SCHEMAS[name] in s, s
 
 
 def test_ddl_is_idempotent_if_not_exists():
@@ -202,6 +202,28 @@ def test_write_manifest_replaces_then_appends_schema_row(spark):
     assert create[1] == [(3, 10, 4, 6)]
     assert create[2] == iceberg._MANIFEST_SCHEMA
     assert fake.log[-1] == ("append", "crawl.frontier_state.manifest")
+
+
+def test_state_format_is_a_manifest_table_property(spark):
+    fake = _FakeSpark()
+    st = iceberg.IcebergStateBackend(fake)
+    del fake.log[:]
+    st.write_format({"part_id_hash": "pmod(xxhash64(url, 2), n_parts)"})
+    assert fake.log == [(
+        "sql",
+        "ALTER TABLE crawl.frontier_state.manifest SET TBLPROPERTIES "
+        "('frontier.part_id_hash' = 'pmod(xxhash64(url, 2), n_parts)')",
+    )]
+
+    class _Props:
+        def collect(self):
+            return [
+                {"key": "format-version", "value": "2"},
+                {"key": "frontier.part_id_hash", "value": "x"},
+            ]
+
+    fake.sql = lambda stmt: _Props()
+    assert st.read_format() == {"part_id_hash": "x"}
 
 
 # ---------------------------------------------------------------------------

@@ -89,6 +89,21 @@ def test_warc_pages_dataframe_roundtrip(spark, tmp_path):
         )
 
 
+def test_warc_pages_empty_glob_raises(spark, tmp_path):
+    """A shard glob that matches no file fails loudly at the reader; it
+    must never read as an empty pages table."""
+    rows, recs = _fixture_records(n=4)
+    warc.write_warc_gz(
+        str(tmp_path / "CC-MAIN-20230921073711-20230921103711-00000.warc.gz"),
+        recs,
+    )
+    assert warc.warc_pages(spark, str(tmp_path / "*.warc.gz")).count() == len(
+        rows
+    )
+    with pytest.raises(FileNotFoundError, match=r"matches the shard glob"):
+        warc.warc_pages(spark, str(tmp_path / "*.warc.wet.gz"))
+
+
 def test_warc_to_extract_pipeline(spark, tmp_path):
     """Parsed WARC rows drive the full extract pipeline: the model
     predictions match running the same pipeline on the equivalent
