@@ -72,8 +72,15 @@ def shingles_from_tokens(toks: str, dialect: str, k: int = 3) -> str:
 
 
 def shingles_expr(text: str, dialect: str, k: int = 3) -> str:
-    """Inline variant (tokenizes inside the expression — fine for oracle
-    SQL; for Spark hot paths prefer tokens_expr + shingles_from_tokens)."""
+    """Inline variant for the DuckDB oracle SQL (tokenizes inside the
+    expression). Spark refuses it: its lambda bodies would re-tokenize the
+    whole text once per shingle, so Spark callers project
+    ``tokens_expr`` first and shingle that with ``shingles_from_tokens``."""
+    if dialect != "duckdb":
+        raise ValueError(
+            "shingles_expr is DuckDB-only; in Spark use tokens_expr + "
+            "shingles_from_tokens"
+        )
     return shingles_from_tokens(tokens_expr(text, dialect), dialect, k)
 
 
@@ -742,12 +749,15 @@ def containment_decontaminate(
 
     Same deterministic stand-in eval set (doc_id % bench_mod prefixes);
     same broadcast shape: the eval shingle set broadcasts with a hit
-    marker and the corpus side LEFT-joins it shuffle-free, so the ONLY
-    exchange is the final doc_id aggregate. Both distinct counts
-    (total shingles / eval hits) ride that one aggregate (Spark plans
-    multi-distinct via Expand — still a single exchange). The ratio is
-    exact integer millis: (1000 * n_hits) DIV n_total. Output: one row
-    per doc with at least one eval hit."""
+    marker and the corpus side LEFT-joins it shuffle-free. The corpus
+    side then makes its (doc_id, shingle) pairs distinct (map-side
+    partial aggregate, one exchange), and both counts (total shingles /
+    eval hits) ride one plain doc_id aggregate. Two ``countDistinct``
+    columns would plan an Expand instead: every row twice through the
+    first exchange, with the branches ordered by expression hash, so
+    each run of the query generated different code. The ratio is exact
+    integer millis: (1000 * n_hits) DIV n_total. Output: one row per doc
+    with at least one eval hit."""
     bench = docs.filter((F.col("doc_id") % bench_mod) == 0).select(
         F.expr(f"substring(text, 1, {prefix_chars})").alias("btext")
     )
@@ -764,11 +774,11 @@ def containment_decontaminate(
         F.explode(F.expr(shingles_from_tokens("toks", "spark", k))).alias("s"),
     ).select("doc_id", F.expr(sql_md5_60("s", "spark")).alias("sh"))
     marked = csh.join(F.broadcast(bsh), "sh", "left")
-    agg = marked.groupBy("doc_id").agg(
-        F.countDistinct("sh").cast("bigint").alias("n_shingles"),
-        F.countDistinct(
-            F.when(F.col("__hit").isNotNull(), F.col("sh"))
-        ).cast("bigint").alias("n_eval_hits"),
+    # __hit is a function of sh (bsh is distinct on sh), so max keeps it
+    per_sh = marked.groupBy("doc_id", "sh").agg(F.max("__hit").alias("__hit"))
+    agg = per_sh.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
+        F.count("__hit").cast("bigint").alias("n_eval_hits"),
     )
     return agg.filter(F.col("n_eval_hits") > 0).select(
         "doc_id", "n_shingles", "n_eval_hits",

@@ -205,8 +205,9 @@ def temperature_rebalanced_sample(
     """Deterministic temperature-``alpha`` language rebalance of ``df``.
 
     The per-language keep-rates are computed FROM the corpus (one tiny
-    hash aggregation to |languages| rows + an unpartitioned min over that
-    aggregated relation), broadcast-joined back, and applied with the same
+    hash aggregation to |languages| rows, gathered with their minimum by
+    one global aggregate), broadcast-joined back NULL-safely (a NULL
+    ``lang`` is one more language group), and applied with the same
     salted-md5 Bernoulli draw as :func:`lang_stratified_sample` — so the
     corpus itself never shuffles: scan → broadcast-hash-join → codegen
     filter. Reproducible row-for-row across runs, partitionings and
@@ -221,23 +222,27 @@ def temperature_rebalanced_sample(
     counts = df.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    w_all = Window.partitionBy()
-    rates = (
-        counts.withColumn("min_cnt", F.min("cnt").over(w_all))
-        .select(
-            "lang",
-            F.round(
-                F.lit(float(_STRAT_MOD))
-                * F.pow(
-                    F.col("min_cnt").cast("double") / F.col("cnt").cast("double"),
-                    F.lit(1.0 - alpha),
-                )
-            ).cast("int").alias("rate_bp"),
-        )
+    # the minimum comes from the same single-row aggregate that gathers
+    # the count rows: no unpartitioned window, and no second job for a
+    # cross-joined min
+    per_lang = counts.agg(F.collect_list(F.struct("lang", "cnt")).alias("c"))
+    rates = per_lang.select(
+        F.explode("c").alias("c"), F.array_min("c.cnt").alias("min_cnt")
+    ).select(
+        F.col("c.lang").alias("__lang"),
+        F.round(
+            F.lit(float(_STRAT_MOD))
+            * F.pow(
+                F.col("min_cnt").cast("double")
+                / F.col("c.cnt").cast("double"),
+                F.lit(1.0 - alpha),
+            )
+        ).cast("int").alias("rate_bp"),
     )
     bucket, _ = strat_keep_sql("spark", {}, 0)
+    # NULL-safe: a NULL lang is one more language group, never dropped
     return (
-        df.join(F.broadcast(rates), "lang")
+        df.join(F.broadcast(rates), F.col("lang").eqNullSafe(F.col("__lang")))
         .withColumn("strat_bucket", F.expr(bucket))
         .filter(F.col("strat_bucket") < F.col("rate_bp"))
         .select(
@@ -267,7 +272,7 @@ WITH counts AS (
 )
 SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.lang, r.rate_bp,
        {bucket} AS strat_bucket
-FROM {table} d JOIN rates r ON d.lang = r.lang
+FROM {table} d JOIN rates r ON d.lang IS NOT DISTINCT FROM r.lang
 WHERE ({bucket}) < r.rate_bp
 """
 

@@ -5,12 +5,15 @@ first lets ``FileStreamSink.hasMetadata`` probe the *literal* path for a
 streaming ``_spark_metadata`` directory — and on a glob path that probe
 throws ``FileNotFoundException`` internally, which Spark logs as a full
 WARN stack trace on every fresh session (round-4 judge item #5: a 50-line
-stack in every gate log is exactly where a real failure would hide). The
-probe is quiet when given a real directory, so these helpers split a
-trailing-basename glob into ``load(dir)`` + ``pathGlobFilter=<glob>`` —
-identical file selection (pathGlobFilter matches leaf names, exactly what
-the shard globs express), zero stack noise, unchanged semantics for
-non-glob paths.
+stack in every gate log is exactly where a real failure would hide). So
+these helpers expand a trailing-basename glob themselves (Hadoop
+``globStatus``, the same glob syntax Spark uses) and load the matching
+files by name: the leaf files directly under ``dir`` whose names match,
+skipping hidden ``_``/``.`` files as Spark's own listing does. The probe is
+quiet on a literal file path. Loading ``dir`` with a ``pathGlobFilter``
+instead would not always select the same files: when ``dir`` holds a
+``k=v`` subdirectory, partition discovery reads that subdirectory's
+matching files in place of the top-level ones.
 
 Only the basename may carry glob characters; a glob mid-directory (not a
 shape any caller uses) falls through to the literal load. A basename glob
@@ -36,26 +39,39 @@ def split_basename_glob(path: str) -> tuple[str, str | None]:
     return path, None
 
 
+def _shard_files(spark, base: str, glob: str) -> list[str]:
+    """The files directly under ``base`` whose names match ``glob``."""
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(posixpath.join(base, glob))
+    fs = pattern.getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    files = []
+    for st in fs.globStatus(pattern) or []:
+        p = st.getPath()
+        if st.isFile() and not p.getName().startswith(("_", ".")):
+            files.append(p.toString())
+    return sorted(files)
+
+
 def _load(spark, fmt: str, path: str):
     base, glob = split_basename_glob(path)
     reader = spark.read.format(fmt)
     if glob is None:
         return reader.load(base)
-    df = reader.option("pathGlobFilter", glob).load(base)
-    # the file listing is done when the DataFrame is built, so
-    # inputFiles() costs no job
-    if not df.inputFiles():
+    files = _shard_files(spark, base, glob)
+    if not files:
         raise FileNotFoundError(
             f"no file under {base!r} matches the shard glob {glob!r}"
         )
-    return df
+    return reader.load(files)
 
 
 def load_binary(spark, path: str):
-    """binaryFile batch load with the glob routed via pathGlobFilter."""
+    """binaryFile batch load of a path or a basename shard glob."""
     return _load(spark, "binaryFile", path)
 
 
 def load_text(spark, path: str):
-    """text batch load with the glob routed via pathGlobFilter."""
+    """text batch load of a path or a basename shard glob."""
     return _load(spark, "text", path)

@@ -380,3 +380,98 @@ def test_canonicalize_barrier_passes_range_pushdown(spark):
     scans = _scan_blocks(_formatted_plan(q))
     assert len(scans) == 1, scans
     assert "LessThan(o_orderkey,1000)" in scans[0], scans[0]
+
+
+# ---------------------------------------------------------------------------
+# tokenize once per row (lambda bodies get no common-subexpression
+# elimination)
+# ---------------------------------------------------------------------------
+
+_TOKENIZERS = ("StringSplit", "RegExpReplace")
+
+
+def _has_column(expr) -> bool:
+    if expr.getClass().getSimpleName() == "AttributeReference":
+        return True
+    kids = expr.children()
+    return any(_has_column(kids.apply(i)) for i in range(kids.size()))
+
+
+def _lambda_tokenizers(plan) -> list[str]:
+    """Every split/regexp_replace inside a lambda body whose input is a
+    column rather than a lambda variable: such a body re-tokenizes the
+    whole text once per array element. Walks the plan's expressions, its
+    children and the plans of cached relations."""
+    found = []
+
+    def walk_expr(e, in_lambda):
+        name = e.getClass().getSimpleName()
+        if in_lambda and name in _TOKENIZERS and _has_column(e):
+            found.append(e.toString()[:300])
+            return
+        if name == "LambdaFunction":
+            walk_expr(e.function(), True)
+            return
+        kids = e.children()
+        for i in range(kids.size()):
+            walk_expr(kids.apply(i), in_lambda)
+
+    def walk_plan(p):
+        name = p.getClass().getSimpleName()
+        if name == "InMemoryRelation":
+            walk_plan(p.cachedPlan())
+        elif name == "InMemoryTableScanExec":
+            walk_plan(p.relation().cachedPlan())
+        exprs = p.expressions()
+        for i in range(exprs.size()):
+            walk_expr(exprs.apply(i), False)
+        kids = p.children()
+        for i in range(kids.size()):
+            walk_plan(kids.apply(i))
+
+    walk_plan(plan)
+    return found
+
+
+def _text_operator_plans(spark):
+    from language_diversity_common_crawler_spark.functions import (
+        dedup, lines, quality_rules, sketches, spans)
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pairs = dedup.lsh_candidate_pairs(dedup.minhash_signatures(docs))
+    yield "kmv_shingle_cardinality", sketches.kmv_shingle_cardinality(docs)
+    yield "kmv_prefiltered", sketches.kmv_shingle_cardinality(
+        docs, prefilter_shift=4)
+    yield "minhash_signatures", dedup.minhash_signatures(docs)
+    yield "jaccard_verified_pairs", dedup.jaccard_verified_pairs(docs, pairs)
+    yield "containment_decontaminate", dedup.containment_decontaminate(docs)
+    yield "with_gopher_quality", quality_rules.with_gopher_quality(docs)
+    yield "line_dedup", lines.line_dedup(docs)
+    yield "duplicated_span_removal", spans.duplicated_span_removal(docs)
+    yield ("duplicated_span_removal_strided",
+           spans.duplicated_span_removal_strided(docs))
+    yield ("incremental_span_contamination",
+           spans.incremental_span_contamination(docs))
+
+
+def test_text_operators_tokenize_once_per_row(spark):
+    """No Spark text operator may tokenize a column inside a lambda body:
+    the body runs once per shingle/span, so ``split(regexp_replace(text))``
+    there re-tokenizes the whole document per element and the operator's
+    work grows with the square of the document length (KMV shingling did
+    this: ~2.7 task CPU-s a call on 150 docs, ~0.3 s tokenized once). The
+    token array must come from its own projection, as
+    ``dedup.tokens_expr`` + ``shingles_from_tokens`` build it."""
+    from language_diversity_common_crawler_spark.functions import dedup
+
+    with pytest.raises(ValueError, match="DuckDB-only"):
+        dedup.shingles_expr("text", "spark")
+    offenders = {}
+    for name, df in _text_operator_plans(spark):
+        bad = _lambda_tokenizers(df._jdf.queryExecution().optimizedPlan())
+        if bad:
+            offenders[name] = bad
+    try:
+        assert not offenders, offenders
+    finally:
+        spark.catalog.clearCache()

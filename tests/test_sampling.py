@@ -147,6 +147,57 @@ def test_temperature_alpha_one_is_identity_mix(spark):
     assert out.select("rate_bp").distinct().collect()[0][0] == 10_000
 
 
+def _docs_with_null_langs(spark):
+    """The sf0.001 documents with every 7th doc's lang set to NULL."""
+    return _docs(spark).withColumn(
+        "lang",
+        F.when(F.col("doc_id") % 7 == 0, F.lit(None)).otherwise(F.col("lang")),
+    )
+
+
+def test_temperature_alpha_one_keeps_null_lang_docs(spark):
+    """A NULL lang is one more language group: at alpha = 1 the sampler
+    keeps every doc, NULL-lang docs included (the rate join is
+    NULL-safe)."""
+    docs = _docs_with_null_langs(spark)
+    n_null = docs.filter(F.col("lang").isNull()).count()
+    assert n_null > 0
+    out = sampling.temperature_rebalanced_sample(docs, alpha=1.0)
+    assert out.count() == docs.count()
+    assert out.filter(F.col("lang").isNull()).count() == n_null
+
+
+def test_temperature_rebalance_null_langs_match_oracle(spark, tmp_path):
+    """With NULL langs in the corpus, Spark and the DuckDB twin keep the
+    same rows with the same rates, NULL-lang rows included."""
+    import duckdb
+
+    path = str(tmp_path / "docs.parquet")
+    _docs_with_null_langs(spark).write.parquet(path)
+    docs = spark.read.parquet(path)
+    out = sampling.temperature_rebalanced_sample(docs)
+    got = sorted(tuple(r) for r in out.collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{path}/*.parquet')"
+    )
+    want = sorted(
+        con.execute(sampling.sql_temperature_rebalanced_sample()).fetchall()
+    )
+    assert got == want
+    assert any(r[1] is None for r in got)
+
+
+def test_temperature_rebalance_has_no_unpartitioned_window(spark):
+    """The minimum count is an aggregate, not ``min(cnt) OVER ()``: an
+    unpartitioned window moves all rows to one partition and logs a
+    ``WindowExec: No Partition Defined`` WARN on every call."""
+    out = sampling.temperature_rebalanced_sample(_docs(spark))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Window" not in plan, plan
+
+
 def test_temperature_rebalance_corpus_side_is_shuffle_free(spark):
     """The corpus must reach the filter through a broadcast join — the
     only exchange in the plan may be the tiny per-language count agg and
