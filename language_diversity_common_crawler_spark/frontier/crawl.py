@@ -65,15 +65,14 @@ DISCOVERY_MOD = 3  # child kept iff md5_60('disc:'+child) % 3 != 0
 # ---------------------------------------------------------------------------
 
 def discover_children(
-    scheduled: DataFrame, url_col: str = "url_canon", dedupe: bool = False
+    scheduled: DataFrame, url_col: str = "url_canon"
 ) -> DataFrame:
     """Child URLs of fetched pages: ``<url-sans-query>/c<i>`` for i in
     1..FANOUT, kept iff a 60-bit hash of the child is nonzero mod
     DISCOVERY_MOD. Stand-in for real outlink extraction — deterministic so
     the sequential oracle reproduces it; swap with an href-extracting
-    pandas UDF on real pages. Dedup is normally left to the seen-set
-    probe's cogroup shuffle (filter_unseen(dedupe=True)) — one exchange
-    instead of two."""
+    pandas UDF on real pages. Not deduplicated: the unseen chain dedups
+    (seen.filter_unseen(dedupe=True)) in the one exchange it pays anyway."""
     base = F.regexp_replace(F.col(url_col), r"[?#].*$", "")
     children = F.array(
         *[F.concat(base, F.lit(f"/c{i}")) for i in range(1, DISCOVERY_FANOUT + 1)]
@@ -82,8 +81,7 @@ def discover_children(
         F.col("host"), F.explode(children).alias(url_col)
     )
     keep = md5_60(F.concat(F.lit("disc:"), F.col(url_col))) % DISCOVERY_MOD != 0
-    out = out.filter(keep)
-    return out.dropDuplicates([url_col]) if dedupe else out
+    return out.filter(keep)
 
 
 # ---------------------------------------------------------------------------
@@ -382,10 +380,20 @@ def _check_state_format(st, ckpt) -> None:
 
 def init_crawl(spark: SparkSession, seeds: DataFrame, ckpt) -> None:
     """Round 0 commit: frontier = seeds, seen = seeds, nothing scheduled.
-    ``seeds`` must have (url_canon, host)."""
+    ``seeds`` must have (url_canon, host). A NULL ``url_canon`` fails the
+    frontier write, before any manifest: it would enter the seen set and
+    the filter (``xxhash64`` of NULL is the seed, not NULL) and be
+    scheduled as a fetch slot."""
     st = _backend(spark, ckpt)
     st.write_format(_state_format())
-    seeds = seeds.select("url_canon", "host").dropDuplicates(["url_canon"])
+    url = F.col("url_canon")
+    seeds = seeds.select(
+        F.when(url.isNull(), F.raise_error(F.lit(
+            "init_crawl: a seed row has a NULL url_canon — drop or fix it "
+            "before seeding the crawl"
+        ))).otherwise(url).alias("url_canon"),
+        "host",
+    ).dropDuplicates(["url_canon"])
     n = st.write(seeds, 0, "frontier", count=True)
     frontier = st.read(0, "frontier")
     st.write(
@@ -407,13 +415,19 @@ def run_round(
     ckpt: str,
     budget: int = 3,
     rules: DataFrame | None = None,
-    use_bloom: bool = True,
     compact_every: int | None = 8,
 ) -> dict:
     """Execute the next crawl round from the latest committed snapshot;
-    commit scheduled/frontier/seen-delta/metrics, manifest last. Returns the
-    manifest dict. Idempotent on crash: an uncommitted round is simply
-    re-run.
+    commit scheduled/seen-delta/bloom/bloom_words/metrics/frontier,
+    manifest last. Returns the manifest dict. Idempotent on crash: an
+    uncommitted round is simply re-run.
+
+    The seen-set probe reads the previous round's committed
+    ``bloom_words`` — one filter covering every earlier round, never
+    rebuilt from the (10^10-row) seen set — and the round's commit merges
+    its new URLs into the previous ``bloom``. Every committed round has
+    both surfaces: ``init_crawl`` and each round write them (through
+    ``_commit_bloom``) before their manifest.
 
     ``compact_every``: rewrite the seen-delta log into a url_canon-bucketed
     table every N rounds (None disables). Against the bucketed table the
@@ -435,13 +449,6 @@ def run_round(
     if compacted is None and deltas is None:
         deltas = st.read_seen_upto(prev)
 
-    def _full_seen() -> DataFrame:
-        if compacted is None:
-            return deltas
-        if deltas is None:
-            return compacted
-        return compacted.unionByName(deltas)
-
     eligible = frontier
     if rules is not None:
         eligible = robots_mod.filter_allowed(eligible, rules)
@@ -459,31 +466,14 @@ def run_round(
     # (filter_unseen's slim path), and re-attach it after with one regex
     discovered = discover_children(sched).select("url_canon")
     cand = seen.with_url_hashes(discovered, n_parts=N_PARTS)
-    # incremental bloom: the committed filter already covers all prior
-    # rounds — never rebuilt from the (10^10-row) seen set
-    bloom = None          # bits form: merged into this round's commit
-    probe_filter = None   # words form when committed, else the bits form
-    if use_bloom:
-        if st.exists(prev, "bloom"):
-            bloom = st.read(prev, "bloom")
-            probe_filter = (
-                st.read(prev, "bloom_words")
-                if st.exists(prev, "bloom_words")
-                else bloom
-            )
-        else:
-            # fallback rebuild — persist so filter_unseen's auto-mode
-            # metadata read + the probe don't each re-scan the seen set
-            bloom = seen.build_bloom(
-                seen.with_url_hashes(_full_seen(), n_parts=N_PARTS)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            probe_filter = bloom
     # exact check: bucketed compacted table first (exchange-free big side),
     # then the small post-compaction deltas (AQE broadcasts them). The
-    # committed bloom covers BOTH, so a URL seen only in a delta still
+    # committed filter covers BOTH, so a URL seen only in a delta still
     # flags maybe_seen and is caught by the second anti-join.
     exact_base = compacted if compacted is not None else deltas
-    new = seen.filter_unseen(cand, exact_base, bloom=probe_filter, dedupe=True)
+    new = seen.filter_unseen(
+        cand, exact_base, bloom=st.read(prev, "bloom_words"), dedupe=True
+    )
     if compacted is not None and deltas is not None:
         new = new.join(deltas.select("url_canon"), "url_canon", "left_anti")
 
@@ -501,20 +491,7 @@ def run_round(
     # (scale observability: one row per hash partition, not per URL) with
     # the committed bloom's fill ratio / estimated fpp so operators see the
     # filter saturating
-    if bloom is not None:
-        _commit_bloom(st, k, new_urls, bloom, metrics=True)
-    else:
-        # keep the metrics schema stable across use_bloom settings (the
-        # Iceberg backend writes into a fixed-schema table)
-        st.write(
-            new_urls.groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n_new"))
-            .withColumn("bloom_keys", F.lit(None).cast("bigint"))
-            .withColumn("fill_ratio", F.lit(None).cast("double"))
-            .withColumn("est_fpp", F.lit(None).cast("double"))
-            .withColumn("round", F.lit(k)),
-            k, "metrics",
-        )
+    _commit_bloom(st, k, new_urls, st.read(prev, "bloom"), metrics=True)
 
     next_frontier = frontier.join(
         sched.select("url_canon"), "url_canon", "left_anti"
@@ -587,7 +564,7 @@ def bench_seeds(spark: SparkSession, sf_dir: str, mult: int = 1):
 def bench_state(spark: SparkSession, sf_dir: str, mult: int = 1,
                 seeds_raw=None):
     """(pre_seen, bloom) persisted — the committed URL-seen state a real
-    round READS (run_round: st.read(prev, 'bloom') / read_seen_split);
+    round READS (run_round: st.read(prev, 'bloom_words') / read_seen_split);
     building it belongs to the prior round's commit, not to the round
     being timed. bench.py materializes this once, untimed, and re-pins it
     after each cache clear."""

@@ -1,5 +1,5 @@
 """Partitioned URL-seen set: bloom-filter pre-filter + exact anti-join,
-with a cuckoo-filter fallback where deletions are needed (north rule).
+with a cuckoo-filter variant where deletions are needed (north rule).
 
 Design for 10^10 URLs (SURVEY.md §4.3):
 
@@ -11,16 +11,15 @@ Design for 10^10 URLs (SURVEY.md §4.3):
   power-of-two probe mask keeps, and crowd every key of a partition into a
   fraction of its bit positions. At 1% fpp, 10^10 keys need ~12 GB of
   bitset total — partitioned over e.g. 4096 parts that is ~3 MB per task,
-  loaded only by the task probing that hash range. The preferred probe
-  (:func:`probe_bloom_jvm`) re-encodes each slice as ``array<bigint>``
-  words and tests membership in pure whole-stage-codegen arithmetic —
-  broadcast-joined (shuffle-free) for filter sets within the broadcast
-  budget, hash-range shuffle-hash join beyond it, with ZERO rows crossing
-  the Python boundary. Arrow fallbacks (cogrouped ``applyInArrow`` /
-  broadcast ``mapInArrow``) remain for non-power-of-two geometries.
+  loaded only by the task probing that hash range.
+- There is **one probe**, :func:`probe_bloom_jvm`: slices stored as
+  ``array<bigint>`` words (:func:`bloom_words`) are joined to candidates
+  on ``part_id`` and tested in whole-stage-codegen arithmetic, with ZERO
+  rows crossing the Python boundary. It is exact for power-of-two
+  geometries only, the only ones :func:`build_bloom` builds.
 - Membership math is double hashing (Kirsch-Mitzenmacher): bit index
-  ``(h1 + i*h2) mod m`` for i in 0..k-1, fully vectorized in numpy over the
-  Arrow batch — no per-row Python (input_hint).
+  ``(h1 + i*h2) mod m`` for i in 0..k-1, numpy-vectorized over Arrow
+  batches on the build side (no per-row Python).
 - The bloom answer is only "definitely new" vs "maybe seen". Rows flagged
   maybe-seen go through an **exact** ``left_anti`` join against the seen-URL
   table; definitely-new rows skip that shuffle entirely. On a real crawl
@@ -32,9 +31,11 @@ Design for 10^10 URLs (SURVEY.md §4.3):
   Arrow UDF. :func:`build_bloom`, :func:`merge_bloom`, :func:`bloom_words`
   and :func:`bloom_stats` stay as the reference it is tested against; all
   of them share the same numpy bitset kernels.
-- Deletions (e.g. recrawl-after-TTL) can't come out of a bloom filter; the
-  :class:`CuckooFilter` variant supports ``delete`` and serializes to the
-  same per-partition ``binary`` row layout.
+- Deletions (e.g. recrawl-after-TTL) can't come out of a bloom filter,
+  and compaction never removes a seen key. The :class:`CuckooFilter`
+  variant supports ``delete`` in the same per-partition ``binary`` row
+  layout; it stays for that case (the north rule names it), though no
+  crawl round uses it yet.
 
 The reference has no URL-seen set at all (it re-reads whatever segment the
 config names, /root/reference/main.py:85-87); this module is the frontier
@@ -46,7 +47,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,10 +69,14 @@ from ..plans.barrier import with_barrier_columns
 N_PARTS = 64
 
 # default per-partition filter geometry: 1 Mi bits (128 KiB) and 7 probes.
-# build_bloom's defaults and every crawl round's commit_bloom use these, so
-# the filters a crawl commits always merge by OR
+# build_bloom's defaults, every crawl round's commit_bloom and the streaming
+# dedup state use these, so the filters a crawl commits always merge by OR
 N_BITS_PER_PART = 1 << 20
 N_HASHES = 7
+
+# largest filter set (bitset bytes) probe_bloom_jvm broadcast-joins, ~2x10^8
+# keys at 1% fpp; a bigger one takes the hash-range shuffle-hash join
+BROADCAST_MAX_BYTES = 256 << 20
 
 # how part_id is derived (see with_url_hashes). Crawl checkpoints and the
 # streaming dedup state record it, and refuse state written under another
@@ -97,14 +101,17 @@ def with_url_hashes(
     whole-stage codegen — pure map, no shuffle). ``part_id`` comes from a
     third, independent hash (:data:`PART_ID_HASH`), so the keys of one
     partition still spread over every bit position of its filter."""
-    return (
-        df.withColumn("h1", F.xxhash64(F.col(url_col)))
-        .withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
-        .withColumn(
-            "part_id",
-            F.pmod(F.xxhash64(F.col(url_col), F.lit(2)), F.lit(n_parts))
-            .cast("int"),
-        )
+    return _with_probe_hashes(df, url_col).withColumn(
+        "part_id",
+        F.pmod(F.xxhash64(F.col(url_col), F.lit(2)), F.lit(n_parts)).cast("int"),
+    )
+
+
+def _with_probe_hashes(df: DataFrame, url_col: str) -> DataFrame:
+    """The ``h1``/``h2`` of :func:`with_url_hashes`, recomputed after a
+    dedup exchange that dropped them."""
+    return df.withColumn("h1", F.xxhash64(F.col(url_col))).withColumn(
+        "h2", F.xxhash64(F.col(url_col), F.lit(1))
     )
 
 
@@ -185,14 +192,22 @@ def build_bloom(
     """Per-partition bloom filters from a hashed URL DataFrame.
 
     ``n_bits_per_part`` default (1 Mi bits = 128 KiB) holds ~100k keys/part
-    at ~1% fpp; size up with key count (m ≈ 9.6 n for 1% fpp).
+    at ~1% fpp; size up with key count (m ≈ 9.6 n for 1% fpp). It must be
+    a power of two and at least 64 — the only geometry the codegen probe
+    (:func:`probe_bloom_jvm`) can test exactly.
 
     Arrow-native (``applyInArrow``): the grouped exchange carries only
     ``(part_id, h1, h2)`` — 20 bytes/row instead of full URL rows — and the
     hash columns reach numpy as zero-copy views of the Arrow buffers; no
     pandas conversion, no Python string objects.
     """
-    n_bytes = (n_bits_per_part + 7) // 8
+    if n_bits_per_part < 64 or n_bits_per_part & (n_bits_per_part - 1):
+        raise ValueError(
+            f"build_bloom: n_bits_per_part={n_bits_per_part} must be a power "
+            "of two and at least 64 — probe_bloom_jvm cannot probe any "
+            "other geometry"
+        )
+    n_bytes = n_bits_per_part // 8
 
     def _build(tbl: pa.Table) -> pa.Table:
         bits = np.zeros(n_bytes, dtype=np.uint8)
@@ -273,7 +288,8 @@ def _probe_hashes(
     h1: np.ndarray, h2: np.ndarray,
 ) -> np.ndarray:
     """Vectorized membership test of (h1, h2) key batches against one
-    bitset slice; shared by the cogroup and broadcast probe paths."""
+    bitset slice (the streaming dedup state's probe, and the reference
+    the codegen probe is tested against)."""
     hit = np.ones(h1.size, dtype=bool)
     for i in range(n_hashes):
         idx = _bit_indices(h1, h2, i, n_bits)
@@ -281,33 +297,15 @@ def _probe_hashes(
     return hit
 
 
-def collect_bloom(bloom: DataFrame) -> dict[int, tuple[bytes, int, int]]:
-    """Driver-side collect of a per-partition filter set:
-    ``{part_id: (bits, n_bits, n_hashes)}`` for broadcast probing.
-    Refuses unmerged snapshot+delta inputs (two rows per part) the same
-    way probe_bloom does — probing one row would lose the other's keys."""
-    out: dict[int, tuple[bytes, int, int]] = {}
-    for r in bloom.select("part_id", "bits", "n_bits", "n_hashes").collect():
-        p = int(r["part_id"])
-        if p in out:
-            raise ValueError(
-                f"collect_bloom: multiple filter rows for part_id {p} — "
-                "merge_bloom snapshot and delta first"
-            )
-        out[p] = (bytes(r["bits"]), int(r["n_bits"]), int(r["n_hashes"]))
-    return out
-
-
 def _dedupe_min_struct(
     flagged: DataFrame, dedupe_on: str, cols: list[str]
 ) -> DataFrame:
-    """Post-probe dedup for the map/join probe paths (broadcast + jvm):
-    a JVM hash aggregate keeping the deterministic ``min(struct(...))``
-    row per key — the same survivor the cogroup path's full-row sort
-    keeps. ``h1``/``h2`` are pure functions of ``dedupe_on``
-    (with_url_hashes contract), so they are dropped before the exchange
-    and recomputed after it; being group-constant they can never decide
-    the struct-min comparison, so the elected survivor is unchanged."""
+    """Post-probe dedup: a JVM hash aggregate keeping the deterministic
+    ``min(struct(...))`` row per key, whatever order duplicates arrive in
+    (a task retry elects the same survivor). ``h1``/``h2`` are pure
+    functions of ``dedupe_on`` (with_url_hashes contract), so they are
+    dropped before the exchange and recomputed after it; being
+    group-constant they can never decide the struct-min comparison."""
     hash_cols = [c for c in ("h1", "h2") if c in cols]
     others = [
         c for c in flagged.columns if c != dedupe_on and c not in hash_cols
@@ -320,166 +318,8 @@ def _dedupe_min_struct(
     )
     if hash_cols:
         # identical recipe to with_url_hashes — group-constant, so exact
-        agged = agged.withColumn("h1", F.xxhash64(F.col(dedupe_on)))
-        agged = agged.withColumn(
-            "h2", F.xxhash64(F.col(dedupe_on), F.lit(1))
-        )
+        agged = _with_probe_hashes(agged, dedupe_on)
     return agged.select(*cols, "maybe_seen")
-
-
-def probe_bloom_broadcast(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    dedupe_on: str | None = None,
-) -> DataFrame:
-    """Broadcast-map variant of :func:`probe_bloom`: the whole per-partition
-    filter set is collected once, broadcast to executors, and probed in a
-    fused ``mapInArrow`` — a pure map stage, NO exchange. Catalyst fuses it
-    with the upstream canonicalize/hash projections, so the probe adds zero
-    shuffle to the round.
-
-    Scale boundary: broadcast is for filters that fit an executor-memory
-    budget — at 1% fpp that is ~2x10^8 keys per 256 MB. A 10^10-key set
-    (~12 GB of bitset) must keep the cogrouped :func:`probe_bloom`, where
-    each task loads only its ~3 MB hash-range slice.
-    :func:`filter_unseen` picks the path automatically from the filter's
-    metadata (``probe_mode="auto"``).
-
-    ``dedupe_on``: in the cogroup variant dedup rides the probe's own
-    shuffle; a map-only probe has no shuffle to ride, so dedup here is a
-    JVM hash aggregate AFTER the probe — the probe stays fused with the
-    upstream canonicalize/hash map stage, map-side partial aggregation
-    collapses duplicates early, and ``min(struct(...))`` keeps the
-    deterministic smallest row per key (the cogroup path keeps the same
-    row: it sorts by dedupe_on plus every other column in schema order
-    and takes the first occurrence). Shuffle-byte discipline: ``h1``/``h2``
-    are pure functions of ``dedupe_on`` (with_url_hashes contract — dedup
-    key IS the hashed column), so they are dropped before the exchange and
-    recomputed after it — 16 fewer bytes per row through the round's one
-    big shuffle; being group-constant they can never decide the struct-min
-    comparison, so the elected survivor row is unchanged."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(collect_bloom(bloom))
-
-    cols = candidates.columns
-
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def _probe_batches(batches):
-        parts = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            pid = tbl.column("part_id").combine_chunks().to_numpy(
-                zero_copy_only=False
-            )
-            h1 = _u64_col(tbl, "h1")
-            h2 = _u64_col(tbl, "h2")
-            hit = np.zeros(tbl.num_rows, dtype=bool)
-            for p in np.unique(pid):
-                ent = parts.get(int(p))
-                if ent is None:
-                    continue  # no keys ever inserted in this hash range
-                mask = pid == p
-                hit[mask] = _probe_hashes(
-                    np.frombuffer(ent[0], dtype=np.uint8),
-                    ent[1], ent[2], h1[mask], h2[mask],
-                )
-            out = tbl.append_column("maybe_seen", pa.array(hit, type=pa.bool_()))
-            yield from out.to_batches()
-
-    flagged = candidates.mapInArrow(_probe_batches, out_schema)
-    if dedupe_on is None:
-        return flagged
-    return _dedupe_min_struct(flagged, dedupe_on, cols)
-
-
-def probe_bloom(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    dedupe_on: str | None = None,
-) -> DataFrame:
-    """Flag each candidate row ``maybe_seen`` by probing its partition's
-    filter. Cogrouped on ``part_id`` so each task touches exactly one bitset
-    slice — the pattern that scales to a partitioned 10^10-key set.
-
-    ``candidates`` must carry (h1, h2, part_id) from :func:`with_url_hashes`.
-    Output = candidate columns + ``maybe_seen`` boolean.
-
-    ``dedupe_on``: optionally drop duplicate candidates by this column
-    inside the cogroup (keeps the lexicographically minimal row per key —
-    sorted by ``dedupe_on`` then every other column, so the survivor is
-    deterministic under retries and identical to broadcast-mode's
-    ``min(struct(...))``). A URL's partition is a function of the URL, so
-    per-partition dedup IS global dedup — and it rides the shuffle the
-    cogroup needs anyway, saving the separate dropDuplicates exchange.
-
-    Arrow-native (``applyInArrow``): candidate rows cross the Python
-    boundary as Arrow buffers and come back the same way — URL strings are
-    never materialized as Python/pandas objects, the hash columns feed
-    numpy as zero-copy views, and the output appends one boolean column to
-    the input table. This matters because the probe's cost at scale is
-    pure memory bandwidth across the Arrow boundary; cutting the
-    pandas<->Arrow conversion roughly halves the bytes touched per row
-    (BASELINE.md stage diagnosis: the probe is the weakest-scaling stage).
-    """
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def _probe(cand: pa.Table, filt: pa.Table) -> pa.Table:
-        if dedupe_on is not None and cand.num_rows > 1:
-            # sort by ALL columns (dedupe_on first, rest in schema order):
-            # the surviving first row per key is then the lexicographically
-            # minimal row — the same row broadcast-mode's min(struct(...))
-            # keeps, and deterministic under task retries (a dedupe_on-only
-            # sort would keep an arbitrary arrival-order companion when
-            # duplicate keys carry differing other columns)
-            keys = [dedupe_on] + [
-                c for c in cand.column_names if c != dedupe_on
-            ]
-            cand = cand.sort_by(
-                [(c, "ascending") for c in keys]
-            ).combine_chunks()
-            col = cand.column(dedupe_on)
-            keep = np.ones(cand.num_rows, dtype=bool)
-            # first occurrence of each run in the sorted column survives
-            neq = pc.fill_null(
-                pc.not_equal(col.slice(1), col.slice(0, cand.num_rows - 1)),
-                True,
-            ).combine_chunks()
-            keep[1:] = neq.to_numpy(zero_copy_only=False)
-            cand = cand.filter(pa.array(keep))
-        cand = cand.combine_chunks()
-        if filt.num_rows == 0 or cand.num_rows == 0:
-            hit = np.zeros(cand.num_rows, dtype=bool)
-        elif filt.num_rows > 1:
-            raise ValueError(
-                f"probe_bloom: {filt.num_rows} filter rows for part_id "
-                f"{filt.column('part_id')[0].as_py()} — merge_bloom snapshot "
-                "and delta first (probing one row would silently lose the "
-                "other rows' keys)"
-            )
-        else:
-            hit = _probe_hashes(
-                np.frombuffer(filt.column("bits")[0].as_buffer(), dtype=np.uint8),
-                filt.column("n_bits")[0].as_py(),
-                filt.column("n_hashes")[0].as_py(),
-                _u64_col(cand, "h1"),
-                _u64_col(cand, "h2"),
-            )
-        return cand.append_column(
-            "maybe_seen", pa.array(hit, type=pa.bool_())
-        )
-
-    return (
-        candidates.groupBy("part_id")
-        .cogroup(bloom.groupBy("part_id"))
-        .applyInArrow(_probe, out_schema)
-    )
 
 
 WORDS_SCHEMA = StructType(
@@ -597,24 +437,41 @@ def commit_bloom(new_hashed: DataFrame, prev: DataFrame) -> DataFrame:
     )
 
 
-def _filter_geometry(bloom: DataFrame) -> dict:
-    """Geometry of a filter set from one column-pruned ``collect()`` of
-    ``(part_id, n_bits, n_hashes)`` — a single job, one small row per
-    part. Keys: n_bits and n_hashes extrema (``nb_min`` ...), ``total``
-    bits, ``n_rows`` and distinct ``n_parts``; extrema and total are None
-    for an empty set."""
-    rows = bloom.select("part_id", "n_bits", "n_hashes").collect()
-    nb = [int(r["n_bits"]) for r in rows]
-    nh = [int(r["n_hashes"]) for r in rows]
-    return {
-        "nb_min": min(nb, default=None),
-        "nb_max": max(nb, default=None),
-        "nh_min": min(nh, default=None),
-        "nh_max": max(nh, default=None),
-        "total": sum(nb) if rows else None,
-        "n_rows": len(rows),
-        "n_parts": len({r["part_id"] for r in rows}),
-    }
+def _require_words(fn: str, bloom: DataFrame) -> None:
+    """A bits-form set would otherwise fail with an opaque analysis error."""
+    if "words" not in bloom.columns:
+        raise ValueError(
+            f"{fn}: the filter set must be the words form (a committed "
+            "bloom_words snapshot, or seen.bloom_words over the bits form); "
+            f"got columns {bloom.columns}"
+        )
+
+
+def _words_geometry(fn: str, words: DataFrame) -> tuple[int, int, int]:
+    """``(n_bits, n_hashes, total_bits)`` of a words-form filter set from
+    one small ``collect()`` of ``(part_id, n_bits, n_hashes)``: the probe
+    needs the geometry as literals and the size to choose broadcast or
+    shuffle-hash. Refuses an empty set, mixed geometries and duplicate
+    ``part_id`` rows."""
+    rows = words.select("part_id", "n_bits", "n_hashes").collect()
+    if not rows:
+        raise ValueError(f"{fn}: empty filter set — no geometry to probe")
+    nb = {int(r["n_bits"]) for r in rows}
+    nh = {int(r["n_hashes"]) for r in rows}
+    if len(nb) > 1 or len(nh) > 1:
+        raise ValueError(
+            f"{fn}: mixed filter geometries (n_bits {sorted(nb)}, n_hashes "
+            f"{sorted(nh)}) — merge_bloom first"
+        )
+    n_parts = len({r["part_id"] for r in rows})
+    if n_parts != len(rows):
+        raise ValueError(
+            f"{fn}: words-form filter has {len(rows)} rows over {n_parts} "
+            "partitions — a duplicate part_id would duplicate candidate rows "
+            "through the probe join; pre-merge the state (bloom_words "
+            "merges the bits form)"
+        )
+    return nb.pop(), nh.pop(), sum(int(r["n_bits"]) for r in rows)
 
 
 def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
@@ -633,7 +490,8 @@ def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
         raise ValueError(
             f"_bloom_hit_expr: n_bits={n_bits} must be a power of two — "
             "uint64 modulo by a non-power-of-two cannot be reproduced "
-            "exactly in signed JVM arithmetic; use the cogroup probe"
+            "exactly in signed JVM arithmetic; rebuild the filter with "
+            "build_bloom, which only builds power-of-two geometries"
         )
     mask = n_bits - 1
     terms = []
@@ -654,80 +512,38 @@ def probe_bloom_jvm(
     bloom: DataFrame,
     dedupe_on: str | None = None,
     broadcast: bool | None = None,
-    broadcast_max_bytes: int = 256 << 20,
     geometry: tuple[int, int, int] | None = None,
 ) -> DataFrame:
-    """Fully JVM-side bloom probe: bitset slices re-encoded as
-    ``array<bigint>`` words (:func:`bloom_words`), joined to candidates on
-    ``part_id``, membership tested by :func:`_bloom_hit_expr` inside
-    whole-stage codegen. No Python/Arrow boundary in the probe itself —
-    BASELINE.md's stage diagnosis measured the Arrow cogroup probe as the
-    round's weakest-scaling stage (0.74: per-batch serialization is
-    bandwidth on the shared bus), and this path removes that boundary
-    entirely.
+    """Flag each candidate row ``maybe_seen``: the words-form filter set
+    (:func:`bloom_words`, or a committed ``bloom_words`` snapshot) is
+    joined on ``part_id`` and :func:`_bloom_hit_expr` tests membership
+    inside whole-stage codegen. No Python/Arrow boundary — BASELINE.md's
+    stage diagnosis measured the earlier Arrow probe as the round's
+    weakest-scaling stage. ``candidates`` carry (h1, h2, part_id) from
+    :func:`with_url_hashes`; output = their columns + ``maybe_seen``.
 
-    Join strategy is the scale dial: for filter sets within
-    ``broadcast_max_bytes`` the words side is broadcast — the probe fuses
-    into the upstream map stage, zero exchange, like
-    :func:`probe_bloom_broadcast` but without the Python stage. A
-    10^10-key set (~12 GB of bitset over e.g. 4096 parts) exceeds the
-    budget and takes a shuffle-hash join on ``part_id`` instead: the same
-    hash-range-aligned exchange the cogroup probe pays, but the probe
-    math stays in codegen and each task's hash map holds only its ~3 MB
-    slices. The 8 KB+ words arrays never reach a downstream operator —
-    the projection consumes them inside the join stage.
-
-    Requires single-geometry, power-of-two ``n_bits`` (a multiple of 64);
-    :func:`filter_unseen` auto-mode falls back to the Arrow paths
-    otherwise. ``geometry`` = precomputed ``(n_bits, n_hashes,
-    total_bits)`` to skip the geometry collect when the caller already
-    ran it.
-
-    ``bloom`` may be either the canonical binary form (converted here via
-    :func:`bloom_words`, which also OR-merges snapshot+delta rows) or an
-    already-converted WORDS form (a ``words`` column present) — the state
-    a crawl commit can write once so every later probe skips the
-    conversion pass. A words-form input must be pre-merged: one row per
-    ``part_id`` (a duplicate part would duplicate candidate rows through
-    the join; the geometry check enforces this).
+    Filter sets within :data:`BROADCAST_MAX_BYTES` are broadcast: the
+    probe fuses into the upstream map stage, zero exchange. A 10^10-key
+    set (~12 GB over e.g. 4096 parts) takes a shuffle-hash join on
+    ``part_id``: each task's hash map holds only its ~3 MB slices.
+    ``broadcast`` forces one of the two. ``geometry`` = ``(n_bits,
+    n_hashes, total_bits)`` from :func:`_words_geometry` skips that
+    collect when the caller already ran it. ``dedupe_on`` drops duplicate
+    candidates after the probe (:func:`_dedupe_min_struct`).
 
     Candidates carrying a pre-existing ``maybe_seen`` column raise (the
-    output barrier appends, it does not replace) — drop the stale flag
-    before a re-probe; the previous withColumn form silently produced a
-    duplicate-column select for that input, never a meaningful result."""
-    words_form = "words" in bloom.columns
+    output barrier appends, it does not replace)."""
+    _require_words("probe_bloom_jvm", bloom)
     if geometry is None:
-        g = _filter_geometry(bloom)
-        if g["total"] is None:
-            raise ValueError(
-                "probe_bloom_jvm: empty filter set — no geometry to probe "
-                "(callers with possibly-empty state use filter_unseen, "
-                "which falls back)"
-            )
-        if g["nb_min"] != g["nb_max"] or g["nh_min"] != g["nh_max"]:
-            raise ValueError(
-                "probe_bloom_jvm: mixed filter geometries "
-                f"(n_bits {g['nb_min']}..{g['nb_max']}, n_hashes "
-                f"{g['nh_min']}..{g['nh_max']}) — merge_bloom first"
-            )
-        if words_form and g["n_rows"] != g["n_parts"]:
-            raise ValueError(
-                f"probe_bloom_jvm: words-form filter has {g['n_rows']} rows "
-                f"over {g['n_parts']} partitions — a duplicate part_id would "
-                "duplicate candidate rows through the probe join; pass the "
-                "binary form (bloom_words merges) or pre-merge the state"
-            )
-        geometry = (int(g["nb_min"]), int(g["nh_min"]), int(g["total"]))
+        geometry = _words_geometry("probe_bloom_jvm", bloom)
     n_bits, n_hashes, total_bits = geometry
     if broadcast is None:
-        broadcast = total_bits // 8 <= broadcast_max_bytes
+        broadcast = total_bits // 8 <= BROADCAST_MAX_BYTES
 
     cols = candidates.columns
     if "__bf_words" in cols:
         raise ValueError("probe_bloom_jvm: candidate column __bf_words collides")
-    w = (bloom if words_form else bloom_words(bloom)).select(
-        "part_id", F.col("words").alias("__bf_words")
-    )
+    w = bloom.select("part_id", F.col("words").alias("__bf_words"))
     side = F.broadcast(w) if broadcast else w.hint("shuffle_hash")
     # maybe_seen goes through the no-op Generate barrier (plans/barrier.py):
     # a downstream filter(~maybe_seen) / filter(maybe_seen) would otherwise
@@ -749,194 +565,67 @@ def probe_bloom_jvm(
 def filter_unseen(
     candidates: DataFrame,
     seen_urls: DataFrame,
-    bloom: DataFrame | None = None,
+    bloom: DataFrame,
     url_col: str = "url_canon",
     dedupe: bool = False,
-    probe_mode: str = "auto",
-    broadcast_max_bytes: int = 256 << 20,
 ) -> DataFrame:
-    """Exact unseen set: bloom pre-filter (if given) then precise anti-join.
+    """Exact unseen set: bloom pre-filter, then a precise anti-join.
 
-    ``seen_urls`` is the exact table (one ``url_canon`` column at minimum).
-    Definitely-new rows (bloom miss) bypass the anti-join shuffle; only the
-    maybe-seen remainder is joined. Without a bloom, plain ``left_anti``.
-    ``dedupe=True`` also drops duplicate candidate URLs (riding the probe's
-    cogroup shuffle, or a map-side-combinable hash aggregate in broadcast
-    mode — one exchange either way). When the candidate columns are EXACTLY
-    ``(url_col, h1, h2, part_id)`` — i.e. everything else was already
-    dropped and every remaining column is a pure function of the URL —
-    broadcast mode dedups BEFORE the probe on a slim (url, part_id)
-    projection, so the exchange carries no hash/struct payload at all and
-    the probe touches only distinct URLs. Callers with derivable companion
-    columns (host = host of url_canon) should drop them before this call
-    and recompute downstream (``urlgen.host_of_canon``).
+    ``seen_urls`` is the exact table (a ``url_canon`` column at minimum),
+    ``bloom`` its words-form filter set. Definitely-new rows (bloom miss)
+    bypass the anti-join; only the maybe-seen remainder is joined.
+    ``dedupe=True`` also drops duplicate candidate URLs in one exchange:
 
-    ``probe_mode``: ``"jvm"`` (the preferred path) probes entirely in
-    whole-stage codegen via :func:`probe_bloom_jvm` — broadcast-joined and
-    shuffle-free within ``broadcast_max_bytes``, hash-range shuffle-hash
-    join beyond it; ``"broadcast"`` collects + broadcasts the whole filter
-    set and probes in a shuffle-free ``mapInArrow``; ``"cogroup"`` keeps
-    the hash-range-aligned Arrow cogroup where each task loads only its
-    slice; ``"auto"`` (default) reads the filter geometry and picks
-    ``jvm`` whenever the geometry supports it (single geometry,
-    power-of-two n_bits — true for every ``build_bloom`` default), else
-    sizes between broadcast and cogroup. The geometry check is one
-    ``collect()`` of ``(part_id, n_bits, n_hashes)``, a single job; for a
-    COMPUTED bloom (``build_bloom(...)`` passed straight in) it executes
-    the build — auto/jvm therefore persist the bloom first so the probe
-    reuses the result instead of building twice. The default 256 MB
-    budget covers ~2x10^8 keys at 1% fpp; a 10^10-key frontier (~12 GB
-    of bitset) takes the shuffle-hash-join jvm probe.
-    """
-    if bloom is None:
-        if dedupe:
-            candidates = candidates.dropDuplicates([url_col])
-        return candidates.join(
-            seen_urls.select(url_col), on=url_col, how="left_anti"
-        )
-    if probe_mode not in ("auto", "broadcast", "cogroup", "jvm"):
-        raise ValueError(
-            f"probe_mode must be 'auto', 'jvm', 'broadcast' or 'cogroup', "
-            f"got {probe_mode!r} (a silent fallback would quietly discard "
-            "the plan shape the caller asked for)"
-        )
-    mode = probe_mode
-    words_form = "words" in bloom.columns
-    if words_form and probe_mode in ("broadcast", "cogroup"):
-        raise ValueError(
-            f"filter_unseen: probe_mode={probe_mode!r} needs the binary "
-            "filter form; a words-form (pre-converted) state only probes "
-            "via 'jvm'/'auto'"
-        )
-    geometry: tuple[int, int, int] | None = None
-    if mode in ("auto", "jvm"):
-        # the geometry check executes the bloom plan: cheap column-pruned
-        # metadata scan for a storage-backed bloom, but a FULL build for a
-        # computed one (build_bloom(...) passed straight in) — persist so
-        # the probe below reuses that work instead of building twice
-        bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-        g = _filter_geometry(bloom)
-        total_bits = g["total"]
-        jvm_ok = (
-            total_bits is not None
-            and g["nb_min"] == g["nb_max"]
-            and g["nh_min"] == g["nh_max"]
-            and int(g["nb_min"]) % 64 == 0
-            and int(g["nb_min"]) & (int(g["nb_min"]) - 1) == 0
-        )
-        if words_form and total_bits is not None and g["n_rows"] != g["n_parts"]:
-            raise ValueError(
-                f"filter_unseen: words-form filter has {g['n_rows']} rows "
-                f"over {g['n_parts']} partitions — pre-merge the state "
-                "(bloom_words merges the binary form)"
-            )
-        if words_form and not jvm_ok:
-            raise ValueError(
-                "filter_unseen: words-form state requires jvm-compatible "
-                f"geometry; got n_bits {g['nb_min']}..{g['nb_max']}, "
-                f"n_hashes {g['nh_min']}..{g['nh_max']}"
-            )
-        if jvm_ok:
-            geometry = (int(g["nb_min"]), int(g["nh_min"]), int(total_bits))
-        if mode == "jvm" and not jvm_ok:
-            raise ValueError(
-                "filter_unseen: probe_mode='jvm' needs a non-empty, "
-                "single-geometry filter set with power-of-two n_bits "
-                f"(multiple of 64); got n_bits {g['nb_min']}..{g['nb_max']}"
-                f", n_hashes {g['nh_min']}..{g['nh_max']} — use 'auto' to "
-                "fall back to the Arrow probe paths"
-            )
-        if mode == "auto":
-            if jvm_ok:
-                # the JVM probe wins at every filter size: broadcast-join
-                # (shuffle-free, codegen-fused) within the budget, hash-
-                # range shuffle-hash join beyond it — no Python boundary
-                mode = "jvm"
-            else:
-                mode = (
-                    "broadcast"
-                    if total_bits is not None
-                    and total_bits // 8 <= broadcast_max_bytes
-                    else "cogroup"
-                )
-    slim_cols = dedupe and set(candidates.columns) == {
+    - **slim candidates** — EXACTLY ``(url_col, h1, h2, part_id)``, all
+      pure functions of the URL, so any survivor is value-identical —
+      within the broadcast budget: probe first (fused into the upstream
+      map stage), then ``dropDuplicates``. Measured at 2 pinned cores on
+      3M URLs: probe-first 9.9 s vs dedup-first 12.2 s.
+    - **slim candidates over the budget** (a 10^10-URL frontier): dedup
+      first on ``(url, part_id)``, then the shuffle-hash probe.
+    - **other candidates**: probe, then :func:`_dedupe_min_struct`.
+
+    Slim paths recompute ``h1``/``h2`` after the exchange. Callers with
+    derivable companion columns (host of url_canon) drop them before this
+    call and recompute them after (``urlgen.host_of_canon``).
+
+    The geometry check runs the filter's plan — a full build for a
+    computed filter set — so the filter is persisted first and the probe
+    reuses it."""
+    _require_words("filter_unseen", bloom)
+    bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
+    geometry = _words_geometry("filter_unseen", bloom)
+    slim = dedupe and set(candidates.columns) == {
         url_col, "h1", "h2", "part_id"
     }
-    jvm_bcast = (
-        mode == "jvm"
-        and geometry is not None
-        and geometry[2] // 8 <= broadcast_max_bytes
-    )
-    if mode == "jvm" and slim_cols and jvm_bcast:
-        # PROBE-FIRST slim path: the broadcast-join jvm probe fuses into
-        # the upstream canonicalize/hash map stage (zero exchange), so
-        # probing BEFORE dedup costs nothing extra and the round keeps
-        # exactly ONE exchange — the dedup aggregate over
-        # (url, part_id, maybe_seen), every column a pure function of the
-        # URL, so any dropDuplicates survivor is value-identical
-        # (deterministic without a min(struct) ordering). Measured at 2
-        # pinned cores on 3M URLs: probe-first 9.9s vs dedup-first 12.2s
-        # vs Arrow cogroup 10.4s for the same prefix — dedup-first pays a
-        # post-exchange probe stage the fused ordering avoids. h1/h2 are
-        # recomputed after the exchange (with_url_hashes recipe, pruned
-        # away when the caller never reads them).
-        flagged_all = probe_bloom_jvm(
-            candidates, bloom, broadcast=True, geometry=geometry
-        )
-        deduped = flagged_all.select(
-            url_col, "part_id", "maybe_seen"
-        ).dropDuplicates([url_col])
-        flagged = (
-            deduped.withColumn("h1", F.xxhash64(F.col(url_col)))
-            .withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
-            .select(*candidates.columns, "maybe_seen")
-        )
-    elif mode in ("broadcast", "jvm") and slim_cols:
-        # SLIM DEDUP-FIRST path: every non-key column is a pure function of
-        # the key (the with_url_hashes contract), so dedup can run BEFORE
-        # the probe on a (url, part_id) projection — the round's one big
-        # exchange then carries the URL string plus 4 bytes instead of the
-        # URL + host + a min(struct(...)) aggregation buffer, and the
-        # Python-boundary probe runs on the deduplicated (smaller) set.
-        # h1/h2 are recomputed after the exchange with the identical
-        # with_url_hashes recipe; part_id rides through (group-constant, a
-        # FIRST aggregate — recomputing it would need n_parts, which the
-        # probe does not know). Semantically identical to probe-then-dedup:
-        # maybe_seen is itself a pure function of the URL.
-        deduped = candidates.select(url_col, "part_id").dropDuplicates(
-            [url_col]
-        )
-        rehashed = deduped.withColumn(
-            "h1", F.xxhash64(F.col(url_col))
-        ).withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
-        if mode == "jvm":
-            flagged = probe_bloom_jvm(
-                rehashed, bloom,
-                broadcast_max_bytes=broadcast_max_bytes, geometry=geometry,
-            ).select(*candidates.columns, "maybe_seen")
-        else:
-            flagged = probe_bloom_broadcast(rehashed, bloom).select(
-                *candidates.columns, "maybe_seen"
-            )
-    elif mode == "jvm":
+    if not slim:
         flagged = probe_bloom_jvm(
             candidates, bloom, dedupe_on=url_col if dedupe else None,
-            broadcast_max_bytes=broadcast_max_bytes, geometry=geometry,
+            geometry=geometry,
         )
+    elif geometry[2] // 8 <= BROADCAST_MAX_BYTES:
+        flagged = _with_probe_hashes(
+            probe_bloom_jvm(candidates, bloom, geometry=geometry)
+            .select(url_col, "part_id", "maybe_seen")
+            .dropDuplicates([url_col]),
+            url_col,
+        ).select(*candidates.columns, "maybe_seen")
     else:
-        probe = probe_bloom_broadcast if mode == "broadcast" else probe_bloom
-        flagged = probe(
-            candidates, bloom, dedupe_on=url_col if dedupe else None
-        )
-    # the two branches below would otherwise re-execute the cogrouped
-    # Python probe (and everything upstream) once each — persist the probe
-    # output; the ContextCleaner unpersists it when the DataFrame is GC'd.
-    # LAZY persist deliberately (measured, interleaved A/B at pinned 2 and
-    # 8 cores): an eager count() here costs 9-15% per round — the barrier
-    # splits the round into two sequential jobs and kills stage overlap —
-    # while the feared cache-population race between the branches does not
-    # materialize (stage scheduling populates the cache once; lazy also
-    # beat no-persist-at-all, so the dedup is real).
+        flagged = probe_bloom_jvm(
+            _with_probe_hashes(
+                candidates.select(url_col, "part_id").dropDuplicates([url_col]),
+                url_col,
+            ),
+            bloom, geometry=geometry,
+        ).select(*candidates.columns, "maybe_seen")
+    # the two branches below would otherwise re-execute the probe (and
+    # everything upstream) once each — persist the probe output; the
+    # ContextCleaner unpersists it when the DataFrame is GC'd. LAZY persist deliberately (measured, interleaved
+    # A/B at pinned 2 and 8 cores): an eager count() here costs 9-15% per
+    # round — the barrier splits the round into two sequential jobs and
+    # kills stage overlap — while the feared cache-population race between
+    # the branches does not materialize (stage scheduling populates the
+    # cache once; lazy also beat no-persist-at-all, so the dedup is real).
     flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -1107,8 +796,9 @@ def build_cuckoo(hashed: DataFrame, n_buckets: int = 1 << 14) -> DataFrame:
 
 
 def probe_cuckoo(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
-    """``maybe_seen`` flag from the cuckoo variant (same contract as
-    :func:`probe_bloom`)."""
+    """``maybe_seen`` flag from the cuckoo variant (same output contract as
+    :func:`probe_bloom_jvm`), cogrouped on ``part_id`` so each task loads
+    one partition's table."""
     out_schema = StructType(
         candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
     )

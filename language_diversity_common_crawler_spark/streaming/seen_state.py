@@ -66,16 +66,15 @@ def streaming_unseen_urls(
     url_stream: DataFrame,
     url_col: str = "url_canon",
     n_parts: int = N_PARTS,
-    n_bits_per_part: int = N_BITS_PER_PART,
-    n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """First occurrence of each URL across the whole stream, approximate
     (bloom): emits a row the first time a URL's bits were not all set.
+    Each partition's filter has the batch seen set's default geometry
+    (``N_BITS_PER_PART`` bits, ``N_HASHES`` probes).
 
-    Deterministic for a given hash geometry — the same stream replayed
-    yields the same output (exactly-once via the query checkpoint)."""
+    Deterministic — the same stream replayed yields the same output
+    (exactly-once via the query checkpoint)."""
     hashed = with_url_hashes(url_stream, url_col=url_col, n_parts=n_parts)
-    n_bytes = (n_bits_per_part + 7) // 8
 
     def _dedup(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -89,17 +88,17 @@ def streaming_unseen_urls(
                     "query on a fresh checkpoint (probing a URL in another "
                     "partition's filter would miss its bits)"
                 )
-            if st_bits != n_bits_per_part or st_hashes != n_hashes:
+            if st_bits != N_BITS_PER_PART or st_hashes != N_HASHES:
                 raise ValueError(
                     "streaming_unseen_urls: checkpointed state was built "
-                    f"with n_bits={st_bits}, n_hashes={st_hashes} but the "
-                    f"query was restarted with n_bits={n_bits_per_part}, "
-                    f"n_hashes={n_hashes} — geometry must not change "
+                    f"with n_bits={st_bits}, n_hashes={st_hashes} but this "
+                    f"code uses n_bits={N_BITS_PER_PART}, "
+                    f"n_hashes={N_HASHES} — geometry must not change "
                     "across restarts (membership would silently corrupt)"
                 )
             bits = np.frombuffer(bits_b, dtype=np.uint8).copy()
         else:
-            bits = np.zeros(n_bytes, dtype=np.uint8)
+            bits = np.zeros(N_BITS_PER_PART // 8, dtype=np.uint8)
             n_keys = 0
         part_id = int(key[0])
         for pdf in pdfs:
@@ -110,9 +109,9 @@ def streaming_unseen_urls(
             # sequential bit-set (stable original order preserved by a
             # first-occurrence mask on the url itself)
             first_in_batch = ~pdf[url_col].duplicated().to_numpy()
-            maybe_seen = _probe_hashes(bits, n_bits_per_part, n_hashes, h1, h2)
+            maybe_seen = _probe_hashes(bits, N_BITS_PER_PART, N_HASHES, h1, h2)
             new_mask = (~maybe_seen) & first_in_batch
-            _set_bits(bits, n_bits_per_part, n_hashes, h1, h2)
+            _set_bits(bits, N_BITS_PER_PART, N_HASHES, h1, h2)
             n_keys += int(new_mask.sum())
             out = pdf.loc[new_mask, [url_col]]
             if len(out):
@@ -120,7 +119,7 @@ def streaming_unseen_urls(
                     {"part_id": part_id, "url_canon": out[url_col].values}
                 )
         state.update(
-            (bits.tobytes(), n_keys, n_bits_per_part, n_hashes, PART_ID_HASH)
+            (bits.tobytes(), n_keys, N_BITS_PER_PART, N_HASHES, PART_ID_HASH)
         )
 
     return hashed.groupBy("part_id").applyInPandasWithState(

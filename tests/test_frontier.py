@@ -63,15 +63,44 @@ def test_canonicalize_parity(spark):
 # bloom filter
 # ---------------------------------------------------------------------------
 
+def _numpy_probe(hashed, bloom) -> set:
+    """Driver-side reference probe: {(url_canon, maybe_seen)} from
+    seen._probe_hashes over the collected bits-form filter set (one row
+    per part), the hash math the codegen probe must reproduce."""
+    parts = {
+        r["part_id"]: (np.frombuffer(r["bits"], dtype=np.uint8),
+                       r["n_bits"], r["n_hashes"])
+        for r in bloom.collect()
+    }
+    out = set()
+    for r in hashed.select("url_canon", "h1", "h2", "part_id").collect():
+        ent = parts.get(r["part_id"])
+        hit = ent is not None and bool(seen._probe_hashes(
+            ent[0], ent[1], ent[2],
+            np.array([r["h1"]], dtype=np.int64).view(np.uint64),
+            np.array([r["h2"]], dtype=np.int64).view(np.uint64),
+        )[0])
+        out.add((r["url_canon"], hit))
+    return out
+
+
+def _local_words(spark, bloom):
+    """The words form of ``bloom`` as a local relation, so a probe plan
+    holds no exchange or Python stage of the filter build itself."""
+    return spark.createDataFrame(
+        seen.bloom_words(bloom).collect(), seen.WORDS_SCHEMA
+    )
+
+
 def test_bloom_membership(spark):
     urls = spark.createDataFrame(
         [(f"https://h{i % 10}.ex/p/{i}",) for i in range(500)], ["url_canon"]
     )
     hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(hashed, n_bits_per_part=1 << 16)
+    words = seen.bloom_words(seen.build_bloom(hashed, n_bits_per_part=1 << 16))
 
     # no false negatives: every inserted key must be flagged maybe_seen
-    flagged = seen.probe_bloom(hashed, bloom)
+    flagged = seen.probe_bloom_jvm(hashed, words)
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
     # false positive rate on disjoint keys stays low
@@ -81,80 +110,16 @@ def test_bloom_membership(spark):
         ),
         n_parts=8,
     )
-    fp = seen.probe_bloom(other, bloom).filter(F.col("maybe_seen")).count()
+    fp = seen.probe_bloom_jvm(other, words).filter(F.col("maybe_seen")).count()
     assert fp < 25  # 5% at default k=7, 64Ki bits/part for ~60 keys/part
-
-
-def test_probe_broadcast_matches_cogroup(spark):
-    """The shuffle-free broadcast probe and the hash-range cogroup probe
-    must flag the identical maybe_seen set (same bitsets, same hash math)."""
-    urls = spark.createDataFrame(
-        [(f"https://h{i % 10}.ex/p/{i % 400}",) for i in range(700)],
-        ["url_canon"],
-    )
-    hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
-        seen.with_url_hashes(
-            urls.filter(F.xxhash64("url_canon") % 3 == 0), n_parts=8
-        ),
-        n_bits_per_part=1 << 16,
-    )
-    via_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, bloom, dedupe_on="url_canon").collect()
-    }
-    via_bc = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom_broadcast(
-            hashed, bloom, dedupe_on="url_canon"
-        ).collect()
-    }
-    assert via_bc == via_cg
-    # dedupe contract holds in both paths: one row per distinct URL
-    assert len({u for u, _ in via_bc}) == len(via_bc)
-
-    # an empty-part probe (bloom covers no keys in some hash ranges) must
-    # flag nothing in those ranges rather than fail — or conservatively
-    # flag everything (which would silently defeat the bloom prefilter)
-    tiny = seen.build_bloom(
-        seen.with_url_hashes(urls.limit(1), n_parts=8), n_bits_per_part=1 << 16
-    )
-    covered = {r["part_id"] for r in tiny.select("part_id").collect()}
-    out = seen.probe_bloom_broadcast(hashed, tiny).collect()
-    uncovered = [r for r in out if r["part_id"] not in covered]
-    assert uncovered, "fixture must leave some hash ranges without a filter"
-    assert all(not r["maybe_seen"] for r in uncovered)
-
-
-def test_broadcast_probe_plan_is_shuffle_free(spark):
-    """The broadcast probe's whole point: without dedup it must compile to
-    a pure map pipeline — scan/project fused into mapInArrow, zero
-    Exchange nodes (the cogroup variant necessarily shuffles by part_id)."""
-    urls = spark.range(2000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
-                 F.lit(".ex/p/"), F.col("id").cast("string")).alias("url_canon")
-    )
-    hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
-        seen.with_url_hashes(urls.limit(500), n_parts=8),
-        n_bits_per_part=1 << 16,
-    )
-    probe = seen.probe_bloom_broadcast(hashed, bloom)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert probe.count() == 2000
-
-    cg = seen.probe_bloom(hashed, bloom)
-    cg_plan = cg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in cg_plan  # the slice-aligned path shuffles by design
 
 
 def test_probe_jvm_matches_cogroup(spark):
     """The whole-stage-codegen probe must flag the IDENTICAL maybe_seen
-    set as the numpy cogroup probe (same bitsets, same double-hashing
-    math reproduced in ANSI-safe masked int64 arithmetic), in both its
-    broadcast-join and shuffle-hash-join variants, including hash ranges
-    with no filter row (NULL words → definitely new)."""
+    set as the numpy reference (_probe_hashes over the same bitsets; the
+    double-hashing math reproduced in ANSI-safe masked int64 arithmetic),
+    in both its broadcast-join and shuffle-hash-join variants, including
+    hash ranges with no filter row (NULL words → definitely new)."""
     urls = spark.createDataFrame(
         [(f"https://h{i % 10}.ex/p/{i % 400}",) for i in range(700)],
         ["url_canon"],
@@ -165,36 +130,38 @@ def test_probe_jvm_matches_cogroup(spark):
             urls.filter(F.xxhash64("url_canon") % 3 == 0), n_parts=8
         ),
         n_bits_per_part=1 << 16,
-    )
-    via_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, bloom, dedupe_on="url_canon").collect()
-    }
+    ).cache()
+    want = _numpy_probe(hashed, bloom)
+    words = seen.bloom_words(bloom)
     for bc in (True, False):
-        via_jvm = {
+        via_jvm = [
             (r["url_canon"], r["maybe_seen"])
             for r in seen.probe_bloom_jvm(
-                hashed, bloom, dedupe_on="url_canon", broadcast=bc
+                hashed, words, dedupe_on="url_canon", broadcast=bc
             ).collect()
-        }
-        assert via_jvm == via_cg, f"broadcast={bc}"
+        ]
+        assert len(via_jvm) == 400, f"broadcast={bc}: one row per URL"
+        assert set(via_jvm) == want, f"broadcast={bc}"
+    assert any(m for _, m in want) and not all(m for _, m in want)
 
     # uncovered hash ranges must flag nothing (and not error): tiny filter
     tiny = seen.build_bloom(
         seen.with_url_hashes(urls.limit(1), n_parts=8), n_bits_per_part=1 << 16
     )
     covered = {r["part_id"] for r in tiny.select("part_id").collect()}
-    out = seen.probe_bloom_jvm(hashed, tiny).collect()
+    out = seen.probe_bloom_jvm(hashed, seen.bloom_words(tiny)).collect()
     uncovered = [r for r in out if r["part_id"] not in covered]
     assert uncovered, "fixture must leave some hash ranges without a filter"
     assert all(not r["maybe_seen"] for r in uncovered)
+    bloom.unpersist()
 
 
 def test_probe_jvm_merges_snapshot_plus_delta(spark):
     """bloom_words OR-merges multiple filter rows per part in its own
-    grouped exchange, so the jvm probe over an UNMERGED snapshot+delta
-    equals the cogroup probe over merge_bloom(snapshot, delta) — and a
-    left join on part_id never duplicates candidate rows."""
+    grouped exchange, so the probe over the words of an UNMERGED
+    snapshot+delta equals the reference probe of merge_bloom(snapshot,
+    delta) — and a left join on part_id never duplicates candidate rows.
+    A words-form set with two rows for one part is refused."""
     urls = spark.createDataFrame(
         [(f"https://h{i % 6}.ex/p/{i}",) for i in range(400)], ["url_canon"]
     )
@@ -211,113 +178,125 @@ def test_probe_jvm_merges_snapshot_plus_delta(spark):
         ),
         n_bits_per_part=1 << 16,
     )
-    merged_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, seen.merge_bloom(snap, delta)).collect()
-    }
-    out = seen.probe_bloom_jvm(hashed, snap.unionByName(delta)).collect()
+    want = _numpy_probe(hashed, seen.merge_bloom(snap, delta))
+    out = seen.probe_bloom_jvm(
+        hashed, seen.bloom_words(snap.unionByName(delta))
+    ).collect()
     assert len(out) == 400, "left join must not duplicate candidates"
-    assert {(r["url_canon"], r["maybe_seen"]) for r in out} == merged_cg
+    assert {(r["url_canon"], r["maybe_seen"]) for r in out} == want
+    with pytest.raises(ValueError, match="duplicate part_id"):
+        seen.probe_bloom_jvm(
+            hashed,
+            seen.bloom_words(snap).unionByName(seen.bloom_words(delta)),
+        )
 
 
 def test_probe_jvm_plan_is_codegen_only(spark):
-    """The jvm probe's contract: ZERO Python/Arrow nodes on the candidate
+    """The probe's contract: ZERO Python/Arrow nodes on the candidate
     path. Broadcast variant = BroadcastHashJoin fused with the upstream
-    map (no shuffle of candidates); beyond the broadcast budget =
-    ShuffledHashJoin on part_id, never a SortMergeJoin (a sort of the
-    10^10-row candidate side would dwarf the probe)."""
+    map, with no hash-partitioning exchange of the candidates; beyond the
+    broadcast budget = ShuffledHashJoin on part_id, never a SortMergeJoin
+    (a sort of the 10^10-row candidate side would dwarf the probe). The
+    words side is a local relation, so the filter build's own exchange
+    and Python stage are not in the plan."""
     urls = spark.range(2000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
                  F.lit(".ex/p/"), F.col("id").cast("string")).alias("url_canon")
     )
     hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
+    words = _local_words(spark, seen.build_bloom(
         seen.with_url_hashes(urls.limit(500), n_parts=8),
         n_bits_per_part=1 << 16,
-    )
+    ))
     for bc, join_node in ((True, "BroadcastHashJoin"), (False, "ShuffledHashJoin")):
-        probe = seen.probe_bloom_jvm(hashed, bloom, broadcast=bc)
+        probe = seen.probe_bloom_jvm(hashed, words, broadcast=bc)
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert join_node in plan, plan
         assert "SortMergeJoin" not in plan, plan
-        # the only Python stage allowed is bloom_words' 8-row conversion
-        # (FlatMapGroupsInPandas on the FILTER side); the candidate side
-        # must never cross the boundary
+        assert ("hashpartitioning" in plan) is not bc, plan
         for bad in ("FlatMapCoGroupsInArrow", "MapInArrow", "ArrowEval",
-                    "BatchEval"):
+                    "BatchEval", "InPandas"):
             assert bad not in plan, (bad, plan)
         assert probe.count() == 2000
 
 
 def test_probe_jvm_geometry_guards(spark):
     """Non-power-of-two n_bits cannot reproduce uint64 modulo in signed
-    JVM arithmetic: explicit jvm mode must refuse loudly, and auto must
-    fall back to an Arrow path and still return the exact unseen set."""
-    all_urls = spark.createDataFrame(
+    JVM arithmetic: build_bloom refuses to build such a filter, and the
+    probe refuses such stored state loudly — as it does an empty set and
+    mixed geometries."""
+    urls = spark.createDataFrame(
         [(f"https://h{i % 5}.ex/p/{i}",) for i in range(300)], ["url_canon"]
     )
+    cand = seen.with_url_hashes(urls, n_parts=8)
+    for n_bits in (96_000, 32, 0):
+        with pytest.raises(ValueError, match="power of two"):
+            seen.build_bloom(cand, n_bits_per_part=n_bits)
+
+    def words(*geoms):
+        return spark.createDataFrame(
+            [(p, [0] * (nb // 64), nb, 7) for p, nb in geoms],
+            seen.WORDS_SCHEMA,
+        )
+
+    odd = words((0, 96_000))
+    with pytest.raises(ValueError, match="power of two"):
+        seen.probe_bloom_jvm(cand, odd)
+    with pytest.raises(ValueError, match="power of two"):
+        seen.filter_unseen(cand, urls, bloom=odd)
+    with pytest.raises(ValueError, match="mixed filter geometries"):
+        seen.probe_bloom_jvm(cand, words((0, 1 << 12), (1, 1 << 13)))
+    with pytest.raises(ValueError, match="empty filter set"):
+        seen.filter_unseen(cand, urls, bloom=words())
+
+
+def test_filter_unseen_probe_modes_agree(spark, monkeypatch):
+    """Every filter_unseen path equals the plain left_anti join over
+    duplicated candidates, with and without dedupe, under both probe
+    joins: broadcast within the budget (the filter is tiny) and
+    shuffle-hash once seen.BROADCAST_MAX_BYTES is below the filter size.
+    Slim (url, h1, h2, part_id) candidates take the probe-first path within
+    the budget and the dedup-first path beyond it; candidates with a host
+    column dedupe after the probe. None puts a Python/Arrow stage on the
+    candidate path. A bits-form filter set is refused."""
+    rows = [
+        (f"https://h{i % 5}.ex/p/{i % 120}", f"h{i % 5}.ex") for i in range(300)
+    ]
+    all_urls = spark.createDataFrame(rows, ["url_canon", "host"])
     seen_urls = all_urls.filter(
         F.xxhash64("url_canon") % 2 == 0
-    ).select("url_canon")
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
-    odd_bloom = seen.build_bloom(
-        seen.with_url_hashes(seen_urls, n_parts=8), n_bits_per_part=96_000
-    )
-    with pytest.raises(ValueError, match="power-of-two"):
-        seen.filter_unseen(
-            cand, seen_urls, bloom=odd_bloom, probe_mode="jvm"
-        )
-    expect = {
-        r["url_canon"]
-        for r in all_urls.join(seen_urls, "url_canon", "left_anti").collect()
-    }
-    got = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=odd_bloom, probe_mode="auto"
-        ).collect()
-    }
-    assert got == expect
-
-
-def test_filter_unseen_probe_modes_agree(spark):
-    """filter_unseen must return the exact unseen set under every probe
-    strategy (auto picks broadcast here — the filter is tiny)."""
-    all_urls = spark.createDataFrame(
-        [(f"https://h{i % 5}.ex/p/{i}", f"h{i % 5}.ex") for i in range(300)],
-        ["url_canon", "host"],
-    )
-    seen_urls = all_urls.filter(F.xxhash64("url_canon") % 2 == 0).select("url_canon")
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
+    ).select("url_canon").distinct()
     bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-    expect = {
-        r["url_canon"]
-        for r in all_urls.join(seen_urls, "url_canon", "left_anti").collect()
-    }
-    for mode in ("auto", "jvm", "broadcast", "cogroup"):
-        got = {
-            r["url_canon"]
-            for r in seen.filter_unseen(
-                cand, seen_urls, bloom=bloom, dedupe=True, probe_mode=mode
-            ).collect()
-        }
-        assert got == expect, mode
-    # a sub-filter broadcast budget must force the cogroup path and still
-    # return the same set
-    got = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=bloom, probe_mode="auto",
-            broadcast_max_bytes=1,
-        ).collect()
-    }
-    assert got == expect
+    words = _local_words(spark, bloom)
+    for cols in (["url_canon"], ["url_canon", "host"]):
+        cand = seen.with_url_hashes(all_urls.select(*cols), n_parts=8)
+        plain = all_urls.select(*cols).join(seen_urls, "url_canon", "left_anti")
+        for budget in (seen.BROADCAST_MAX_BYTES, 0):
+            monkeypatch.setattr(seen, "BROADCAST_MAX_BYTES", budget)
+            for dedupe in (True, False):
+                out = seen.filter_unseen(
+                    cand, seen_urls, bloom=words, dedupe=dedupe
+                )
+                want = plain.distinct() if dedupe else plain
+                assert sorted(
+                    tuple(r) for r in out.select(*cols).collect()
+                ) == sorted(tuple(r) for r in want.collect()), (
+                    cols, budget, dedupe)
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                for bad in ("FlatMapCoGroupsInArrow", "MapInArrow",
+                            "ArrowEvalPython", "BatchEvalPython"):
+                    assert bad not in plan, (bad, cols, budget, plan)
+    with pytest.raises(ValueError, match="bloom_words"):
+        seen.filter_unseen(cand, seen_urls, bloom=bloom)
+    with pytest.raises(ValueError, match="bloom_words"):
+        seen.probe_bloom_jvm(cand, bloom)
 
 
-def test_filter_unseen_words_form_state(spark):
-    """A pre-converted words-form filter (what a crawl commit writes as
-    bloom_words) must probe to the same exact unseen set as the binary
-    form, and must refuse the Arrow-only probe modes loudly."""
+def test_filter_unseen_words_form_state(spark, tmp_path):
+    """A words-form filter persisted the way a crawl commit writes
+    bloom_words (parquet, read back pinned to seen.WORDS_SCHEMA) must
+    probe to the exact unseen set, with and without dedupe, and the bits
+    form it was converted from must be refused loudly."""
     all_urls = spark.createDataFrame(
         [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
         ["url_canon"],
@@ -327,46 +306,29 @@ def test_filter_unseen_words_form_state(spark):
     ).select("url_canon").distinct()
     cand = seen.with_url_hashes(all_urls, n_parts=8)
     bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-    words = seen.bloom_words(bloom)
-    expect = {
-        r["url_canon"]
-        for r in all_urls.distinct()
-        .join(seen_urls, "url_canon", "left_anti")
-        .collect()
-    }
-    for mode in ("auto", "jvm"):
-        got = {
+    path = str(tmp_path / "bloom_words")
+    seen.bloom_words(bloom).write.parquet(path)
+    words = spark.read.schema(seen.WORDS_SCHEMA).parquet(path)
+    plain = all_urls.join(seen_urls, "url_canon", "left_anti")
+    for dedupe in (True, False):
+        got = sorted(
             r["url_canon"]
             for r in seen.filter_unseen(
-                cand, seen_urls, bloom=words, dedupe=True, probe_mode=mode
+                cand, seen_urls, bloom=words, dedupe=dedupe
             ).collect()
-        }
-        assert got == expect, mode
-    with pytest.raises(ValueError, match="binary filter form"):
-        seen.filter_unseen(
-            cand, seen_urls, bloom=words, probe_mode="cogroup"
         )
-
-
-def test_filter_unseen_rejects_unknown_probe_mode(spark):
-    urls = spark.createDataFrame(
-        [("https://h0.ex/p/1", "h0.ex")], ["url_canon", "host"]
-    )
-    cand = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(cand)
-    with pytest.raises(ValueError, match="probe_mode"):
-        seen.filter_unseen(
-            urls.select("url_canon"), urls.select("url_canon"),
-            bloom=bloom, probe_mode="Broadcast",
-        )
+        want = plain.distinct() if dedupe else plain
+        assert got == sorted(r["url_canon"] for r in want.collect()), dedupe
+    with pytest.raises(ValueError, match="bloom_words"):
+        seen.filter_unseen(cand, seen_urls, bloom=bloom)
 
 
 def test_dedupe_survivor_row_matches_across_probe_paths(spark):
     """When duplicate keys carry DIFFERING companion columns (an outlink
-    extractor attaching parent/priority), both probe paths must keep the
-    same row — the lexicographically minimal companion — so probe_mode
-    ('auto' flipping on filter size included) never changes row contents,
-    and a task retry re-electing the survivor is deterministic."""
+    extractor attaching parent/priority), every dedup path keeps the same
+    row — the lexicographically minimal companion — so the join strategy
+    (which flips on filter size) never changes row contents, and a task
+    retry re-electing the survivor is deterministic."""
     rows = [
         (f"https://h{i % 4}.ex/p/{i % 20}", f"parent{j}", 100 - j)
         for i in range(20)
@@ -376,30 +338,35 @@ def test_dedupe_survivor_row_matches_across_probe_paths(spark):
         spark.createDataFrame(rows, ["url_canon", "parent", "priority"]),
         n_parts=8,
     )
-    bloom = seen.build_bloom(
+    words = seen.bloom_words(seen.build_bloom(
         seen.with_url_hashes(
             spark.createDataFrame(rows[:1], ["url_canon", "parent", "priority"]),
             n_parts=8,
         )
-    )
+    ))
     pick = lambda df: {  # noqa: E731
         r["url_canon"]: (r["parent"], r["priority"]) for r in df.collect()
     }
-    via_bc = pick(seen.probe_bloom_broadcast(cand, bloom, dedupe_on="url_canon"))
-    via_cg = pick(seen.probe_bloom(cand, bloom, dedupe_on="url_canon"))
-    via_jvm = pick(seen.probe_bloom_jvm(cand, bloom, dedupe_on="url_canon"))
-    assert via_bc == via_cg
-    assert via_jvm == via_cg
+    via_bc = pick(seen.probe_bloom_jvm(cand, words, dedupe_on="url_canon",
+                                       broadcast=True))
+    via_sh = pick(seen.probe_bloom_jvm(cand, words, dedupe_on="url_canon",
+                                       broadcast=False))
+    via_fu = pick(seen.filter_unseen(cand, cand.limit(0), bloom=words,
+                                     dedupe=True))
+    assert via_sh == via_bc
+    assert via_fu == via_bc
     # the survivor is the minimal (parent, priority) tuple, not arrival order
+    assert len(via_bc) == 20
     assert all(v == ("parent0", 100) for v in via_bc.values()), via_bc
 
 
-def test_filter_unseen_slim_dedup_first_path(spark):
-    """When candidates carry EXACTLY (url, h1, h2, part_id), broadcast mode
-    dedups BEFORE the probe on a url-only projection. The result set,
-    dedup semantics and part_id values must be identical to the generic
-    probe-then-dedup path, and the pre-join plan must contain no
-    min(struct(...)) aggregate (the slim exchange carries no payload)."""
+def test_filter_unseen_slim_dedup_first_path(spark, monkeypatch):
+    """When candidates carry EXACTLY (url, h1, h2, part_id), dedup runs on
+    a url-only projection: after the probe within the broadcast budget,
+    before it beyond the budget. Both return the distinct unseen set with
+    part_id values of the hash recipe, and neither plan contains the
+    generic min(struct(...)) aggregate (the slim exchange carries no
+    payload)."""
     all_urls = spark.createDataFrame(
         # duplicates on purpose: i % 120 repeats
         [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
@@ -410,43 +377,36 @@ def test_filter_unseen_slim_dedup_first_path(spark):
     ).select("url_canon").distinct()
     cand = seen.with_url_hashes(all_urls, n_parts=8)
     assert set(cand.columns) == {"url_canon", "h1", "h2", "part_id"}
-    bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-
-    out = seen.filter_unseen(
-        cand, seen_urls, bloom=bloom, dedupe=True, probe_mode="broadcast"
+    words = seen.bloom_words(
+        seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
     )
-    rows = out.collect()
-    urls = [r["url_canon"] for r in rows]
     expect = {
         r["url_canon"]
         for r in all_urls.distinct()
         .join(seen_urls, "url_canon", "left_anti")
         .collect()
     }
-    assert set(urls) == expect
-    assert len(urls) == len(expect), "slim path must dedupe"
-    # part_id rides through the distinct and still matches the hash recipe
-    for r in rows:
-        assert r["part_id"] is not None
-    recomputed = {
-        r["url_canon"]: r["part_id"]
-        for r in seen.with_url_hashes(
-            spark.createDataFrame([(u,) for u in urls], ["url_canon"]),
-            n_parts=8,
-        ).collect()
-    }
-    assert {r["url_canon"]: r["part_id"] for r in rows} == recomputed
-    # the generic min(struct(__rest)) dedup aggregate must be absent
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "__rest" not in plan, plan
-    # cogroup mode on the same slim candidates still agrees
-    got_cg = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=bloom, dedupe=True, probe_mode="cogroup"
-        ).collect()
-    }
-    assert got_cg == expect
+    for budget in (seen.BROADCAST_MAX_BYTES, 0):
+        monkeypatch.setattr(seen, "BROADCAST_MAX_BYTES", budget)
+        out = seen.filter_unseen(cand, seen_urls, bloom=words, dedupe=True)
+        rows = out.collect()
+        urls = [r["url_canon"] for r in rows]
+        assert set(urls) == expect, budget
+        assert len(urls) == len(expect), "slim path must dedupe"
+        # part_id and h1 ride through the distinct / are recomputed, and
+        # still match the hash recipe
+        recomputed = {
+            r["url_canon"]: (r["part_id"], r["h1"])
+            for r in seen.with_url_hashes(
+                spark.createDataFrame([(u,) for u in urls], ["url_canon"]),
+                n_parts=8,
+            ).collect()
+        }
+        assert {
+            r["url_canon"]: (r["part_id"], r["h1"]) for r in rows
+        } == recomputed
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "__rest" not in plan, plan
 
 
 def test_host_of_canon_matches_with_canonical(spark):
@@ -471,11 +431,13 @@ def test_filter_unseen_matches_plain_antijoin(spark):
     )
     seen_urls = all_urls.filter(F.xxhash64("url_canon") % 2 == 0).select("url_canon")
     cand = seen.with_url_hashes(all_urls, n_parts=8)
-    bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
+    words = seen.bloom_words(
+        seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
+    )
 
     via_bloom = {
         r["url_canon"]
-        for r in seen.filter_unseen(cand, seen_urls, bloom=bloom).collect()
+        for r in seen.filter_unseen(cand, seen_urls, bloom=words).collect()
     }
     plain = {
         r["url_canon"]
@@ -495,7 +457,8 @@ def test_bloom_merge(spark):
     )
     merged = seen.merge_bloom(seen.build_bloom(a), seen.build_bloom(b))
     both = a.unionByName(b)
-    assert seen.probe_bloom(both, merged).filter(~F.col("maybe_seen")).count() == 0
+    flagged = seen.probe_bloom_jvm(both, seen.bloom_words(merged))
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -808,17 +771,35 @@ def test_bloom_realized_fpp_matches_estimate(spark):
         n_parts=crawl.N_PARTS,
     )
     bloom = seen.build_bloom(keys, n_bits_per_part=n_bits).cache()
+    words = seen.bloom_words(bloom)
     unseen = seen.with_url_hashes(
         spark.range(50_000).select(
             F.concat(F.lit("https://out.example/"), F.col("id").cast("string"))
             .alias("url_canon")),
         n_parts=crawl.N_PARTS,
     )
-    fp = seen.probe_bloom_jvm(unseen, bloom).filter("maybe_seen").count()
+    fp = seen.probe_bloom_jvm(unseen, words).filter("maybe_seen").count()
     est = seen.bloom_stats(bloom).agg(F.avg("est_fpp")).collect()[0][0]
     bloom.unpersist()
     realized = fp / 50_000
     assert est / 2 <= realized <= 2 * est, (realized, est)
+
+
+def test_init_crawl_refuses_null_seed_url(spark, tmp_path):
+    """A NULL url_canon seed fails init_crawl before the round-0 manifest:
+    committed, it would sit in the frontier, the seen set and the filter,
+    and be scheduled as a fetch slot. The failed commit leaves nothing a
+    resume would read, and a clean init_crawl on the same path succeeds."""
+    ckpt = str(tmp_path / "ckpt")
+    seeds = _spark_seeds(spark, 10)
+    bad = seeds.unionByName(
+        spark.createDataFrame([(None, None)], "url_canon string, host string")
+    )
+    with pytest.raises(Exception, match="NULL url_canon"):
+        crawl.init_crawl(spark, bad, ckpt)
+    assert crawl.latest_round(spark, ckpt) is None
+    crawl.init_crawl(spark, seeds, ckpt)
+    assert crawl.read_manifest(spark, ckpt, 0)["n_frontier"] == 10
 
 
 def test_resume_refuses_checkpoint_of_other_part_id_derivation(

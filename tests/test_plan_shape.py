@@ -326,14 +326,14 @@ def test_jvm_bloom_probe_filter_stays_codegen(spark, no_codegen_fallback):
     )
     canon = urlgen.with_canonical(raw)
     hashed = seen.with_url_hashes(canon.select("url_canon"), n_parts=8)
-    bloom = seen.build_bloom(
+    words = seen.bloom_words(seen.build_bloom(
         seen.with_url_hashes(
             canon.filter(F.col("seed_id") % 3 == 0).select("url_canon"),
             n_parts=8,
         ),
         n_bits_per_part=1 << 16,
-    )
-    flagged = seen.probe_bloom_jvm(hashed, bloom)
+    ))
+    flagged = seen.probe_bloom_jvm(hashed, words)
     fresh = flagged.filter(~F.col("maybe_seen"))
     n_fresh = fresh.count()
     assert 0 < n_fresh < 400  # bloom flagged the inserted third

@@ -2,7 +2,8 @@
 """Stage-level scaling decomposition of the CURRENT frontier round.
 
 Times cumulative prefixes of the exact chain `tools/scaling_bench.py`
-measures (broadcast-probe path), at two pinned core counts; the marginal
+measures (broadcast-join codegen probe over the words-form filter
+state), at two pinned core counts; the marginal
 cost of each prefix is that stage's cost, and the 2-vs-8 ratio per stage
 shows where scaling efficiency is lost. Untimed prep identical to
 scaling_bench (cached seed input, pre-built seen state).
@@ -64,22 +65,21 @@ def _prefixes(spark):
             ["url_canon"]
         )
 
-    def probed():
-        # map-only broadcast probe over the deduplicated URL set
-        from pyspark.sql import functions as FF
+    def words():
+        return spark.read.parquet(f"{STATE_DIR}/bloom_words")
 
-        bloom = spark.read.parquet(f"{STATE_DIR}/bloom")
+    def probed():
+        # broadcast-join codegen probe over the deduplicated URL set
         rehashed = dedup().withColumn(
-            "h1", FF.xxhash64(FF.col("url_canon"))
-        ).withColumn("h2", FF.xxhash64(FF.col("url_canon"), FF.lit(1)))
-        return seen.probe_bloom_broadcast(rehashed, bloom)
+            "h1", F.xxhash64(F.col("url_canon"))
+        ).withColumn("h2", F.xxhash64(F.col("url_canon"), F.lit(1)))
+        return seen.probe_bloom_jvm(rehashed, words(), broadcast=True)
 
     def unseen():
         pre_seen = sb._pre_seen(spark)
-        bloom = spark.read.parquet(f"{STATE_DIR}/bloom")
         cand = hashed()
         return seen.filter_unseen(
-            cand, pre_seen, bloom=bloom, dedupe=True
+            cand, pre_seen, bloom=words(), dedupe=True
         ).select(
             "url_canon", urlgen.host_of_canon("url_canon").alias("host")
         )
