@@ -13,7 +13,6 @@ The headline set covers every layer of the engine:
     three pandas-UDF lang-ID models),
   - the full extract pipeline on synthetic pages (decode -> boilerplate ->
     lang-ID, SURVEY.md §3.1),
-  - relational aggregation/join/window headliners,
   - training-data ops (MinHash-LSH dedup, embedding top-k),
   - the frontier (north rule): canonicalize -> seen anti-join -> robots
     broadcast join -> per-host politeness schedule, plus a full crawl round
@@ -88,9 +87,6 @@ def _sf_of(path: str) -> float:
 
 HEADLINE = [
     "lang_histogram",
-    "pricing_summary",
-    "top_customers",
-    "window_events",
     "token_quality_stats",
     "source_balanced_sample",
     "lang_stratified_sample",
@@ -102,7 +98,6 @@ HEADLINE = [
     "embedding_cosine_dedup",
     "frontier_politeness_schedule",
     "frontier_robots_filter",
-    "media_decode_stats",
     "warc_ingest",
     "pii_redaction",
     "cdx_fetch_plan",

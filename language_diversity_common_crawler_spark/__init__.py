@@ -7,7 +7,7 @@ Layers
 - ``functions``  : scalar/vectorized column functions (decode, boilerplate,
                    language-ID models, text analysis, dedup hashing, similarity)
 - ``operators``  : DataFrame-level operators (histogram pivot, stats aggs,
-                   crosstab, pagination, relational headliners)
+                   crosstab, pagination, diversity indices)
 - ``sources``    : pages table synthesis + snapshot-table catalog
 - ``sinks``      : parity text-log sink, stats files, JSON dump
 - ``frontier``   : 10^10-scale crawl frontier (canonicalize, bloom URL-seen,

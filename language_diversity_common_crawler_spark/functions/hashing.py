@@ -30,11 +30,6 @@ def md5_60(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def md5_60_salted(col: Column | str, salt: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return md5_60(F.concat(F.lit(salt + ":"), c))
-
-
 def sql_md5_60(expr: str, dialect: str = "duckdb") -> str:
     """SQL-string expression equivalent to :func:`md5_60`, in either
     dialect — THE one place the 60-bit md5 recipe is spelled (every

@@ -200,62 +200,6 @@ def sql_score_exprs(model: str, pad: str) -> dict[str, str]:
     }
 
 
-def sql_prediction_select(
-    model: str,
-    table_expr: str,
-    id_cols: list[str],
-    text_col: str,
-    lang_alias: str,
-    prec_alias: str,
-    extra_cols: list[str] | None = None,
-) -> str:
-    """Full DuckDB SELECT producing (id_cols..., lang_alias, prec_alias).
-
-    Mirrors :func:`predict_pandas` exactly (same scoring, tie-break,
-    fallback, precision formula, L4 normalization).
-    """
-    extra = extra_cols or []
-    idc = ", ".join(id_cols + extra)
-    pad = sql_pad_expr(text_col, model)
-    score_defs = ",\n    ".join(
-        f"({e}) AS s_{lang}" for lang, e in sql_score_exprs(model, pad).items()
-    )
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in LANGS) + ")"
-    total = " + ".join(f"s_{lang}" for lang in LANGS)
-    branches = " ".join(f"WHEN s_{lang} = best THEN '{lang}'" for lang in LANGS)
-
-    if model == "detect_fast":
-        lang_expr = f"CASE WHEN best = 0 THEN 'un' {branches} END"
-        prec_expr = (
-            "CASE WHEN best = 0 THEN 0.0 "
-            "ELSE round(best * 10000.0 / (best + 1)) END"
-        )
-    elif model == "langid":
-        lang_expr = f"CASE WHEN best = 0 THEN 'en' {branches} END"
-        prec_expr = f"CAST(best - coalesce(length({text_col}), 0) AS DOUBLE)"
-    else:  # cld2
-        lang_expr = f"CASE WHEN total = 0 THEN 'un' {branches} END"
-        prec_expr = (
-            "CASE WHEN total = 0 THEN 0.0 "
-            "ELSE floor(best * 100.0 / total) END"
-        )
-
-    return f"""
-SELECT {idc},
-       {lang_expr} AS {lang_alias},
-       CAST({prec_expr} AS DOUBLE) AS {prec_alias}
-FROM (
-  SELECT {idc}, {text_col},
-         {best} AS best, {total} AS total, s_de, s_en, s_es, s_fr, s_it,
-         s_ja, s_nl, s_pt, s_ru, s_zh
-  FROM (
-    SELECT {idc}, {text_col},
-    {score_defs}
-    FROM {table_expr}
-  )
-)"""
-
-
 MODEL_ALIAS = {
     "detect_fast": ("df_lang", "df_prec"),
     "langid": ("li_lang", "li_prec"),
@@ -266,13 +210,12 @@ MODEL_PREFIX = {"detect_fast": "df", "langid": "li", "cld2": "cld"}
 
 def sql_all_models_select(
     table_expr: str, id_cols: list[str], text_col: str,
-    extra_cols: list[str] | None = None,
 ) -> str:
     """Single-scan DuckDB SELECT producing one row per input row with all
     three models' predictions: ``id_cols..., df_lang, df_prec, li_lang,
     li_prec, cld_lang, cld_prec`` — mirrors three chained Spark UDF columns
     (L5 model fan-out, language_identification_handler.py:32-37)."""
-    idc = ", ".join(id_cols + (extra_cols or []))
+    idc = ", ".join(id_cols)
     score_defs, mid_defs, outer_defs = [], [], []
     for model in MODELS:
         p = MODEL_PREFIX[model]

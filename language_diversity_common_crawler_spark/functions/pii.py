@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dialect import cast_str, g_flag, rx
+from .dialect import cast_str, rx
 
 EMAIL_RX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RX = r"\b(\d{1,3}\.){3}\d{1,3}\b"
@@ -44,14 +44,6 @@ CLASSES = [
     ("<IP>", IPV4_RX, "n_ips"),
     ("<PHONE>", PHONE_RX, "n_phones"),
 ]
-
-
-def redact_expr(text: str, dialect: str) -> str:
-    """Placeholder-redacted text from a text COLUMN REFERENCE."""
-    e = text
-    for token, pattern, _ in CLASSES:
-        e = f"regexp_replace({e}, {rx(pattern, dialect)}, '{token}'{g_flag(dialect)})"
-    return e
 
 
 def match_count_expr(text: str, pattern: str, dialect: str) -> str:

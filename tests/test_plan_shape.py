@@ -114,22 +114,6 @@ def test_lang_histogram_scan_prunes_unused_columns(spark):
         assert "n_chars" not in read, scan
 
 
-@pytest.mark.parametrize("query", ["pricing_summary", "top_customers"])
-def test_relational_headliners_push_filters(spark, query):
-    """TPC-H-shaped headliners: their date/flag predicates must appear as
-    PushedFilters on at least one scan (predicate pushdown is what keeps
-    the lineitem scan from reading 100 TB to filter 1%)."""
-    import __spark_entry__ as entrymod
-
-    q = entrymod.queries()[query](spark, SF_DIR)
-    scans = _scan_blocks(_formatted_plan(q))
-    assert scans
-    assert any(
-        "PushedFilters: [" in s and "PushedFilters: []" not in s
-        for s in scans
-    ), "\n\n".join(scans)
-
-
 def test_extract_decodes_exactly_once(spark):
     """The F1 drop filter must not duplicate the decode UDF below itself:
     the compiled extract plan carries exactly ONE _decode_batch call (its

@@ -323,340 +323,12 @@ def test_record_fixture_mechanics_with_fakes(fake_libs, tmp_path):
             assert isinstance(r[model]["lang"], str) and r[model]["lang"]
 
 
-# ---------------------------------------------------------------------------
-# codec goldens (round-3 judge item #2, second half): the SAME recorder
-# session on a deps box also captures pillow/soundfile/av decode goldens.
-# Payloads are ENCODED with the real libraries at record time and stored
-# base64 in the fixture, so replay is a pure payload -> decode
-# byte-identity check (no re-encode nondeterminism).
-# ---------------------------------------------------------------------------
-
-CODEC_FIXTURE = os.path.join(
-    os.path.dirname(__file__), "fixtures", "real_codec_golden.jsonl"
-)
-
-
-def _codec_availability() -> dict[str, bool]:
-    avail = {}
-    for kind, mod in (("image", "PIL"), ("audio", "soundfile"),
-                      ("video", "av")):
-        try:
-            __import__(mod)
-            avail[kind] = True
-        except ImportError:
-            avail[kind] = False
-    return avail
-
-
-def _record_codec_fixture(out_path: str) -> int:
-    """Encode deterministic payloads with the real codec libraries and
-    record the byte-exact outputs of the repo's delegation paths
-    (multimodal._real_image_decode / _real_audio_decode /
-    _real_split_frames). Kinds whose codec is absent are skipped with a
-    warning (a partial fixture beats none); raises if NO codec is
-    importable."""
-    import base64
-    import hashlib
-    import io
-
-    import numpy as np
-
-    from language_diversity_common_crawler_spark.functions import (
-        multimodal as mm,
-    )
-
-    avail = _codec_availability()
-    if not any(avail.values()):
-        raise SystemExit(
-            "no codec library importable here — run this on a machine with "
-            "pillow / soundfile / av installed"
-        )
-    n = 0
-    with open(out_path, "w", encoding="utf-8") as f:
-        def emit(rec):
-            nonlocal n
-            f.write(json.dumps(rec) + "\n")
-            n += 1
-
-        if avail["image"]:
-            from PIL import Image
-
-            arr = ((np.arange(64, dtype=np.uint16) * 37) % 251).astype(
-                np.uint8
-            ).reshape(8, 8)
-            buf = io.BytesIO()
-            Image.fromarray(arr, mode="L").save(buf, format="PNG")
-            payload = buf.getvalue()
-            dec = mm._real_image_decode(payload)
-            emit({
-                "id": "img-png-8x8-gray", "kind": "image",
-                "payload_b64": base64.b64encode(payload).decode(),
-                "shape": [int(x) for x in dec.shape],
-                "sha256": hashlib.sha256(dec.tobytes()).hexdigest(),
-            })
-        else:
-            print("WARNING: pillow absent — image golden not recorded")
-        if avail["audio"]:
-            import soundfile as sf
-
-            sig = np.sin(np.arange(400, dtype=np.float32) * 0.05).astype(
-                np.float32
-            )
-            buf = io.BytesIO()
-            sf.write(buf, sig, 8000, format="WAV", subtype="PCM_16")
-            payload = buf.getvalue()
-            dec = mm._real_audio_decode(payload)
-            emit({
-                "id": "wav-pcm16-mono-400", "kind": "audio",
-                "payload_b64": base64.b64encode(payload).decode(),
-                "n_samples": int(dec.shape[0]),
-                "sha256": hashlib.sha256(
-                    np.asarray(dec, dtype=np.float32).tobytes()
-                ).hexdigest(),
-            })
-        else:
-            print("WARNING: soundfile absent — audio golden not recorded")
-        if avail["video"]:
-            import av
-
-            buf = io.BytesIO()
-            with av.open(buf, mode="w", format="mpegts") as container:
-                stream = container.add_stream("mpeg2video", rate=5)
-                stream.width = 32
-                stream.height = 32
-                stream.pix_fmt = "yuv420p"
-                for i in range(3):
-                    img = np.full((32, 32), 40 * i + 20, dtype=np.uint8)
-                    frame = av.VideoFrame.from_ndarray(img, format="gray")
-                    for packet in stream.encode(frame):
-                        container.mux(packet)
-                for packet in stream.encode():
-                    container.mux(packet)
-            payload = buf.getvalue()
-            frames = mm._real_split_frames(payload)
-            emit({
-                "id": "mpegts-mpeg2-3f-32x32", "kind": "video",
-                "payload_b64": base64.b64encode(payload).decode(),
-                "n_frames": len(frames),
-                "sha256": [hashlib.sha256(b).hexdigest() for b in frames],
-            })
-        else:
-            print("WARNING: av absent — video golden not recorded")
-    return n
-
-
-def _verify_codec_records(records: list[dict], avail: dict[str, bool]):
-    """Replay core shared by the real-lib test and the fake-lib mechanics
-    test: for every record whose codec is importable, decode the stored
-    payload through the repo's delegation path and assert byte-identity."""
-    import base64
-    import hashlib
-
-    import numpy as np
-
-    from language_diversity_common_crawler_spark.functions import (
-        multimodal as mm,
-    )
-
-    checked = 0
-    for rec in records:
-        if not avail.get(rec["kind"]):
-            continue
-        payload = base64.b64decode(rec["payload_b64"])
-        if rec["kind"] == "image":
-            dec = mm._real_image_decode(payload)
-            assert [int(x) for x in dec.shape] == rec["shape"], rec["id"]
-            assert hashlib.sha256(dec.tobytes()).hexdigest() == \
-                rec["sha256"], rec["id"]
-        elif rec["kind"] == "audio":
-            dec = mm._real_audio_decode(payload)
-            assert int(dec.shape[0]) == rec["n_samples"], rec["id"]
-            assert hashlib.sha256(
-                np.asarray(dec, dtype=np.float32).tobytes()
-            ).hexdigest() == rec["sha256"], rec["id"]
-        elif rec["kind"] == "video":
-            frames = mm._real_split_frames(payload)
-            assert len(frames) == rec["n_frames"], rec["id"]
-            assert [hashlib.sha256(b).hexdigest() for b in frames] == \
-                rec["sha256"], rec["id"]
-        checked += 1
-    return checked
-
-
-def _load_codec_fixture():
-    if not os.path.exists(CODEC_FIXTURE):
-        return []
-    with open(CODEC_FIXTURE, encoding="utf-8") as f:
-        return [json.loads(line) for line in f if line.strip()]
-
-
-def test_codec_golden_replay():
-    avail = _codec_availability()
-    records = _load_codec_fixture()
-    if not any(avail.values()):
-        pytest.skip("codec libraries not installed; fixture replay covers "
-                    f"{len(records)} recorded cases on deploy boxes")
-    # loud-fail guard, same shape as the model replay: a box with codecs
-    # MUST exercise recorded goldens for the kinds it can decode
-    replayable = [r for r in records if avail.get(r["kind"])]
-    assert replayable, (  # pragma: no cover - needs real codecs
-        "codec libraries are importable but no replayable golden exists — "
-        "record first: python -m tests.test_real_model_delegation record"
-    )
-    assert _verify_codec_records(records, avail) == len(replayable)
-
-
-@pytest.fixture
-def fake_codecs(monkeypatch):
-    """Round-trip-capable stand-ins for PIL/soundfile/av (pickle-backed
-    'containers'), so the codec recorder + replay machinery is covered in
-    this sandbox; a deploy box records real bytes."""
-    import pickle
-
-    import numpy as np
-
-    pil_mod = types.ModuleType("PIL")
-    img_mod = types.ModuleType("PIL.Image")
-
-    class _Img:
-        def __init__(self, arr):
-            self.arr = np.asarray(arr, dtype=np.uint8)
-
-        def save(self, buf, format=None):
-            buf.write(b"IMG" + pickle.dumps(self.arr))
-
-        def convert(self, mode):
-            return self.arr
-
-    img_mod.fromarray = lambda arr, mode=None: _Img(arr)
-    img_mod.open = lambda buf: _Img(pickle.loads(buf.read()[3:]))
-    pil_mod.Image = img_mod
-
-    sf_mod = types.ModuleType("soundfile")
-
-    def _sf_write(buf, sig, sr, format=None, subtype=None):
-        buf.write(b"SND" + pickle.dumps(
-            (np.asarray(sig, dtype=np.float32), sr)
-        ))
-
-    def _sf_read(buf, dtype="float32", always_2d=False):
-        arr, sr = pickle.loads(buf.read()[3:])
-        return arr.astype(dtype), sr
-
-    sf_mod.write = _sf_write
-    sf_mod.read = _sf_read
-
-    av_mod = types.ModuleType("av")
-
-    class _Frame:
-        def __init__(self, arr):
-            self.arr = np.asarray(arr, dtype=np.uint8)
-
-        def to_ndarray(self, format=None):
-            return self.arr
-
-    class _Packet:
-        pass
-
-    class _Stream:
-        def __init__(self, ctn):
-            self._ctn = ctn
-            self.width = 0
-            self.height = 0
-            self.pix_fmt = None
-
-        def encode(self, frame=None):
-            if frame is not None:
-                self._ctn._frames.append(frame.arr)
-                return [_Packet()]
-            return []
-
-    class _WContainer:
-        def __init__(self, buf):
-            self._buf = buf
-            self._frames = []
-
-        def add_stream(self, codec, rate=None):
-            return _Stream(self)
-
-        def mux(self, packet):
-            pass
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            self._buf.write(b"VID" + pickle.dumps(self._frames))
-            return False
-
-    class _RContainer:
-        def __init__(self, buf):
-            self._frames = pickle.loads(buf.read()[3:])
-
-        def decode(self, video=0):
-            return iter([_Frame(a) for a in self._frames])
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    av_mod.open = lambda buf, mode="r", format=None: (
-        _WContainer(buf) if mode == "w" else _RContainer(buf)
-    )
-    av_mod.VideoFrame = types.SimpleNamespace(
-        from_ndarray=lambda arr, format=None: _Frame(arr)
-    )
-
-    for name, mod in [("PIL", pil_mod), ("PIL.Image", img_mod),
-                      ("soundfile", sf_mod), ("av", av_mod)]:
-        monkeypatch.setitem(sys.modules, name, mod)
-
-
-def test_record_codec_fixture_mechanics_with_fakes(fake_codecs, tmp_path):
-    """The codec recorder writes replay-consumable records and the replay
-    core verifies them byte-for-byte — both driven against the pickle
-    fakes so the machinery is covered here."""
-    out = tmp_path / "codec_golden.jsonl"
-    n = _record_codec_fixture(str(out))
-    assert n == 3
-    recs = [json.loads(line) for line in open(out, encoding="utf-8")]
-    assert [r["kind"] for r in recs] == ["image", "audio", "video"]
-    for r in recs:
-        assert r["payload_b64"]
-    avail = _codec_availability()
-    assert avail == {"image": True, "audio": True, "video": True}
-    assert _verify_codec_records(recs, avail) == 3
-
-
 if __name__ == "__main__":
-    import sys as _sys
-
-    if len(_sys.argv) >= 2 and _sys.argv[1] == "record":
-        # each half is independently guarded: a box with codecs but not
-        # the model libs (or vice versa) still records what it can —
-        # a partial fixture beats none
-        dest = _sys.argv[2] if len(_sys.argv) > 2 else FIXTURE
-        ok = True
-        try:
-            print(f"recorded {_record_fixture(dest)} records -> {dest}")
-        except SystemExit as e:
-            ok = False
-            print(f"model goldens skipped: {e}")
-        cdest = (_sys.argv[3] if len(_sys.argv) > 3 else CODEC_FIXTURE)
-        try:
-            print(f"recorded {_record_codec_fixture(cdest)} codec goldens "
-                  f"-> {cdest}")
-        except SystemExit as e:
-            print(f"codec goldens skipped: {e}")
-            if not ok:
-                raise SystemExit(
-                    "neither the model libraries nor any codec library is "
-                    "importable — nothing recorded"
-                )
+    if len(sys.argv) >= 2 and sys.argv[1] == "record":
+        dest = sys.argv[2] if len(sys.argv) > 2 else FIXTURE
+        print(f"recorded {_record_fixture(dest)} records -> {dest}")
     else:
         raise SystemExit(
             "usage: python -m tests.test_real_model_delegation record "
-            "[out.jsonl] [codec_out.jsonl]"
+            "[out.jsonl]"
         )

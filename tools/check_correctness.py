@@ -5,6 +5,9 @@ Runs every ``queries()`` entry on Spark at the given sf dir and the matching
 sorted column names, and an order-insensitive value hash (values stringified
 with repr after float normalization).
 
+``check_query`` is the per-query compare; ``tests/test_oracle_gate.py``
+runs it for every key in tier-1.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -52,6 +55,48 @@ def _canon(rows, cols):
     return out
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with every fixture table of ``sf_dir`` as a view."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def check_query(spark, con, sf_dir: str, name: str, fn, sql: str) -> tuple[bool, str]:
+    """Run one query on Spark and its oracle on DuckDB; compare sorted
+    column names, row count and the canonical value hash. Returns
+    ``(passed, report)``, the report being the PASS/FAIL line(s)."""
+    try:
+        sdf = fn(spark, sf_dir)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as ex:
+        return False, f"FAIL {name}: SPARK ERROR {type(ex).__name__}: {str(ex)[:500]}"
+    try:
+        res = con.execute(sql)
+        duck_cols = [d[0] for d in res.description]
+        duck_rows = res.fetchall()
+    except Exception as ex:
+        return False, f"FAIL {name}: DUCKDB ERROR {type(ex).__name__}: {str(ex)[:500]}"
+
+    if sorted(spark_cols) != sorted(duck_cols):
+        return False, f"FAIL {name}: schema spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
+    if len(spark_rows) != len(duck_rows):
+        return False, f"FAIL {name}: rows spark={len(spark_rows)} duck={len(duck_rows)}"
+    a = _canon(spark_rows, spark_cols)
+    b = _canon(duck_rows, duck_cols)
+    if a != b:
+        lines = [f"FAIL {name}: value mismatch; first diffs:"]
+        for x, y in [(x, y) for x, y in zip(a, b) if x != y][:3]:
+            lines.append(f"  spark: {x[:300]}")
+            lines.append(f"  duck : {y[:300]}")
+        return False, "\n".join(lines)
+    return True, f"PASS {name} ({len(spark_rows)} rows)"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -60,12 +105,7 @@ def main() -> int:
     from language_diversity_common_crawler_spark.session import get_spark
 
     spark = get_spark("check-correctness", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = oracle_connection(sf_dir)
 
     qs, os_ = e.queries(), e.oracle_sql()
     n_pass = n_fail = 0
@@ -73,47 +113,9 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            spark_cols = sdf.columns
-            spark_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as ex:
-            print(f"FAIL {name}: SPARK ERROR {type(ex).__name__}: {str(ex)[:500]}")
-            n_fail += 1
-            failures.append(name)
-            continue
-        if name not in os_:
-            print(f"WEAK {name}: no oracle (rows={len(spark_rows)})")
-            continue
-        try:
-            res = con.execute(os_[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-        except Exception as ex:
-            print(f"FAIL {name}: DUCKDB ERROR {type(ex).__name__}: {str(ex)[:500]}")
-            n_fail += 1
-            failures.append(name)
-            continue
-
-        ok = True
-        if sorted(spark_cols) != sorted(duck_cols):
-            print(f"FAIL {name}: schema spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-            ok = False
-        elif len(spark_rows) != len(duck_rows):
-            print(f"FAIL {name}: rows spark={len(spark_rows)} duck={len(duck_rows)}")
-            ok = False
-        else:
-            a = _canon(spark_rows, spark_cols)
-            b = _canon(duck_rows, duck_cols)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                print(f"FAIL {name}: value mismatch; first diffs:")
-                for x, y in diffs:
-                    print(f"  spark: {x[:300]}")
-                    print(f"  duck : {y[:300]}")
-                ok = False
+        ok, report = check_query(spark, con, sf_dir, name, fn, os_[name])
+        print(report)
         if ok:
-            print(f"PASS {name} ({len(spark_rows)} rows)")
             n_pass += 1
         else:
             n_fail += 1
