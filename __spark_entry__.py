@@ -11,9 +11,9 @@ name, the oracle is required, and a key can be registered only once.
 the same keys in definition order. Oracle SQL is GENERATED from the same
 specs as the Spark code (see
 language_diversity_common_crawler_spark.functions.langspec) so values match
-exactly; it runs on DuckDB with the fixture tables pre-registered as views
-(region nation customer supplier part orders lineitem events documents
-embeddings).
+exactly; it runs on DuckDB with the fixture tables pre-registered as views.
+The queries read five of them: orders, customer, nation, documents and
+embeddings.
 """
 
 from __future__ import annotations

@@ -16,21 +16,29 @@ deltas for the seen set, full small snapshot for the pending frontier, and a
 manifest written LAST as the atomic commit marker; a crash mid-round leaves
 no manifest, so resume re-runs the round from the previous committed state,
 exactly like an uncommitted Iceberg snapshot). Per-round, per-hash-partition
-lineage rows (row counts in/out by stage) land in ``metrics/``.
+lineage rows (row counts in/out by stage) read back as ``metrics``.
 ``init_crawl`` also records the checkpoint's state format (the ``part_id``
-derivation, ``seen.PART_ID_HASH``), and ``run_round`` refuses to resume a
-checkpoint whose format is missing or differs: its seen set and filters
-are keyed by other partitions, so the probe would miss seen URLs.
+derivation, ``seen.PART_ID_HASH``, and the ``filter`` surface's layout),
+and ``run_round`` refuses to resume a checkpoint whose format is missing
+or differs: its seen set and filters are keyed by other partitions, or its
+pinned filter reads would return NULL words, so the probe would miss seen
+URLs.
 
 A round pays a fixed cost per Spark job, not per URL, so the commit keeps
-the job count down. The filter state commits in one pass
-(``seen.commit_bloom``: one cogrouped Arrow UDF over the new URLs' hashes
-and the previous filter, persisted once) that writes ``bloom``,
-``bloom_words`` and ``metrics``. Every snapshot read is pinned to its
-surface's schema in ``SURFACE_SCHEMAS``, so no read starts a
-schema-inference job. The probe's geometry check is one small ``collect``.
-A round with compaction runs 20 Spark jobs on 4 cores (34 before these
-three changes).
+the job count down, and sizes what it writes to its data:
+
+- The filter state commits as ONE uncached write of the ``filter``
+  surface (``seen.commit_bloom``: one cogrouped Arrow UDF over the new
+  URLs' hashes and the previous filter). ``bloom``, ``bloom_words`` and
+  ``metrics`` are column projections of it (``SURFACE_VIEWS``), so a
+  probe scans only the ``words`` column chunks.
+- Seen-set compaction writes ``ceil(n_seen / SEEN_ROWS_PER_BUCKET)``
+  buckets, one file each.
+- Every snapshot read is pinned to its surface's schema in
+  ``SURFACE_SCHEMAS``, so no read starts a schema-inference job. The
+  probe's geometry check is one small ``collect``.
+
+A round with compaction runs 18 Spark jobs on 4 cores.
 
 Everything that determines crawl order is a pure function of the data
 (priority hash, url tiebreak, discovery condition) — never of partitioning
@@ -88,25 +96,53 @@ def discover_children(
 # snapshot state backends
 # ---------------------------------------------------------------------------
 
-# The one schema registry of the state surfaces (Spark DDL column lists).
-# The parquet backend reads every snapshot with it — no schema-inference
-# job per read — and the Iceberg backend declares its tables from it; a
-# test checks the written parquet footers against it. ``metrics`` rows
-# carry their round; the Iceberg backend adds ``round`` to the others.
+# The one schema registry of the physical state surfaces (Spark DDL column
+# lists). The parquet backend reads every snapshot with it — no
+# schema-inference job per read — and the Iceberg backend declares its
+# tables from it; a test checks the written parquet footers against it.
+# ``filter`` rows carry their round; the Iceberg backend adds ``round`` to
+# the others.
 SURFACE_SCHEMAS = {
     "frontier": "url_canon STRING, host STRING",
     "scheduled": "host STRING, url_canon STRING, priority BIGINT, slot INT",
     "seen_delta": "url_canon STRING, host STRING, part_id INT",
-    # seen.BLOOM_SCHEMA
-    "bloom": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
-              "n_keys BIGINT"),
-    # probe-form filter state (seen.WORDS_SCHEMA): converted once at
-    # commit so every later probe skips the bits->words pass
-    "bloom_words": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
-                    "n_hashes INT"),
-    "metrics": ("part_id INT, n_new BIGINT, bloom_keys BIGINT, "
-                "fill_ratio DOUBLE, est_fpp DOUBLE, round INT"),
+    # seen.COMMIT_SCHEMA + round: the merged bits, their probe-form words
+    # (converted once at commit so no probe pays the bits->words pass) and
+    # the per-partition lineage metrics, written in one pass
+    "filter": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
+               "n_keys BIGINT, words ARRAY<BIGINT>, n_new BIGINT, "
+               "fill_ratio DOUBLE, est_fpp DOUBLE, round INT"),
 }
+
+# Readable names that are column projections of a physical surface:
+# name -> (surface, SQL select list). Both backends' ``read`` resolve them
+# through read_surface, so a probe of ``bloom_words`` scans only the
+# ``words`` column chunks of ``filter``.
+SURFACE_VIEWS = {
+    "bloom": ("filter", tuple(seen.BLOOM_SCHEMA.names)),
+    "bloom_words": ("filter", tuple(seen.WORDS_SCHEMA.names)),
+    "metrics": ("filter", ("part_id", "n_new", "n_keys AS bloom_keys",
+                           "fill_ratio", "est_fpp", "round")),
+}
+
+
+def physical_surface(sub: str) -> str:
+    """The physical surface that holds ``sub``."""
+    return SURFACE_VIEWS[sub][0] if sub in SURFACE_VIEWS else sub
+
+
+def read_surface(read_physical, k: int, sub: str) -> DataFrame:
+    """Round k's ``sub``: ``read_physical(k, surface)``, projected to the
+    view's columns when ``sub`` names a view."""
+    if sub not in SURFACE_VIEWS:
+        return read_physical(k, sub)
+    surface, cols = SURFACE_VIEWS[sub]
+    return read_physical(k, surface).selectExpr(*cols)
+
+
+# seen-set rows per bucket of a compaction (compact_seen): one bucket, and
+# one file, per ~4 Mi URLs, so the bucket count follows the seen set
+SEEN_ROWS_PER_BUCKET = 1 << 22
 
 
 def _rdir(ckpt: str, k: int, sub: str) -> str:
@@ -157,10 +193,12 @@ class ParquetStateBackend:
         ]
 
     def read(self, k: int, sub: str) -> DataFrame:
-        return self._scan(sub, _rdir(self.ckpt, k, sub))
+        return read_surface(
+            lambda k, s: self._scan(s, _rdir(self.ckpt, k, s)), k, sub)
 
     def exists(self, k: int, sub: str) -> bool:
-        return fsio.exists(self.spark, _rdir(self.ckpt, k, sub))
+        return fsio.exists(
+            self.spark, _rdir(self.ckpt, k, physical_surface(sub)))
 
     def read_seen_upto(self, upto: int) -> DataFrame:
         return self._scan(
@@ -179,8 +217,6 @@ class ParquetStateBackend:
     # AQE broadcasts them). This is the parquet emulation of Iceberg's
     # `bucket(N, url_canon)` partition transform + storage-partitioned
     # join; compaction itself is Iceberg's rewrite_data_files.
-
-    SEEN_BUCKETS = 64
 
     def _compact_marker(self, upto: int) -> str:
         return os.path.join(self.ckpt, f"COMPACT-{upto:04d}.json")
@@ -203,21 +239,29 @@ class ParquetStateBackend:
         """Rewrite seen deltas 0..upto into one url_canon-bucketed table
         (marker written LAST — an interrupted compaction is invisible and
         simply re-runs). Deltas are disjoint by construction (each holds
-        only genuinely-new URLs), so this is a straight rewrite."""
+        only genuinely-new URLs), so this is a straight rewrite.
+
+        The bucket count follows the seen set: ``ceil(n_seen /
+        SEEN_ROWS_PER_BUCKET)``, with ``n_seen`` the manifests' ``n_new``
+        summed over rounds 0..upto. The rows are hash-partitioned by
+        bucket first, so each bucket is written by one task as one file."""
+        n_seen = sum(self.read_manifest(j)["n_new"] for j in range(upto + 1))
+        n_buckets = max(1, -(-n_seen // SEEN_ROWS_PER_BUCKET))
         full = self._scan("seen_delta", *self._delta_paths(0, upto))
         path = _rdir(self.ckpt, upto, "seen_compact")
         (
             full.select("url_canon", "host", "part_id")
+            .repartition(n_buckets, "url_canon")
             .write.mode("overwrite")
             .format("parquet")
-            .bucketBy(self.SEEN_BUCKETS, "url_canon")
+            .bucketBy(n_buckets, "url_canon")
             .sortBy("url_canon")
             .option("path", path)
             .saveAsTable(self._compact_table(upto))
         )
         fsio.write_text(
             self.spark, self._compact_marker(upto),
-            json.dumps({"upto": upto, "n_buckets": self.SEEN_BUCKETS}),
+            json.dumps({"upto": upto, "n_buckets": n_buckets}),
         )
         # superseded compactions are dead weight — each holds a FULL copy
         # of the seen set; reclaim them once the new marker is durable
@@ -239,20 +283,23 @@ class ParquetStateBackend:
         """(compacted, deltas) covering rounds 0..upto — compacted is the
         bucketed table of the latest compaction ≤ upto (None before any),
         deltas the union of rounds after it (None if none). A fresh
-        session re-registers the bucketed table from its path (idempotent
-        DDL) so resume keeps the no-exchange join."""
+        session re-registers the bucketed table from its path, with the
+        bucket count its marker records (idempotent DDL), so resume keeps
+        the no-exchange join."""
         c = self.latest_compact()
         compacted = None
         start = 0
         if c is not None and c <= upto:
             name = self._compact_table(c)
             if not self.spark.catalog.tableExists(name):
+                marker = json.loads(
+                    fsio.read_text(self.spark, self._compact_marker(c)))
                 self.spark.sql(
                     f"CREATE TABLE {name} "
                     f"({SURFACE_SCHEMAS['seen_delta']}) "
                     "USING PARQUET CLUSTERED BY (url_canon) "
                     "SORTED BY (url_canon) "
-                    f"INTO {self.SEEN_BUCKETS} BUCKETS "
+                    f"INTO {int(marker['n_buckets'])} BUCKETS "
                     f"LOCATION '{_rdir(self.ckpt, c, 'seen_compact')}'"
                 )
             compacted = self.spark.table(name).select("url_canon")
@@ -334,36 +381,30 @@ def read_seen(spark: SparkSession, ckpt, upto: int) -> DataFrame:
     return _backend(spark, ckpt).read_seen_upto(upto)
 
 
-def _commit_bloom(st, k: int, new_urls: DataFrame, prev: DataFrame,
-                  metrics: bool) -> None:
-    """Commit round k's filter state in one pass (seen.commit_bloom): the
-    merged ``bloom``, its probe-form ``bloom_words`` — paid once here so
-    every later probe of the snapshot skips the conversion — and, with
-    ``metrics``, the per-partition lineage rows. The pass is persisted
-    once and every surface is written from it."""
-    state = seen.commit_bloom(
-        seen.with_url_hashes(new_urls.select("url_canon"), n_parts=N_PARTS),
-        prev,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        st.write(state.select(*seen.BLOOM_SCHEMA.names), k, "bloom")
-        st.write(state.select(*seen.WORDS_SCHEMA.names), k, "bloom_words")
-        if metrics:
-            st.write(
-                state.select(
-                    "part_id", "n_new", F.col("n_keys").alias("bloom_keys"),
-                    "fill_ratio", "est_fpp", F.lit(k).alias("round"),
-                ),
-                k, "metrics",
-            )
-    finally:
-        state.unpersist()
+def _commit_bloom(st, k: int, new_urls: DataFrame, prev: DataFrame) -> None:
+    """Commit round k's filter state (seen.commit_bloom) as ONE write of
+    the ``filter`` surface: the merged bits, their probe-form words — paid
+    once here so every later probe of the snapshot skips the conversion —
+    and the per-partition lineage metrics, which ``bloom``,
+    ``bloom_words`` and ``metrics`` read back as column projections."""
+    st.write(
+        seen.commit_bloom(
+            seen.with_url_hashes(new_urls.select("url_canon"),
+                                 n_parts=N_PARTS),
+            prev,
+        ).withColumn("round", F.lit(k).cast("int")),
+        k, "filter",
+    )
 
 
 def _state_format() -> dict:
     """What a checkpoint's stored state depends on beyond its schemas: the
-    part_id derivation that keys seen_delta rows and the bloom filters."""
-    return {"part_id_hash": seen.PART_ID_HASH}
+    part_id derivation that keys seen_delta rows and the bloom filters, and
+    the filter surface's layout. A schema-pinned read of a column a file
+    lacks returns NULLs, so a checkpoint of another layout would probe NULL
+    words, call every candidate new and crawl seen URLs again."""
+    return {"part_id_hash": seen.PART_ID_HASH,
+            "filter_layout": SURFACE_SCHEMAS["filter"]}
 
 
 def _check_state_format(st, ckpt) -> None:
@@ -371,10 +412,10 @@ def _check_state_format(st, ckpt) -> None:
     if got != _state_format():
         raise ValueError(
             f"checkpoint {ckpt} was written with state format {got or None}"
-            f", this code reads {_state_format()}: its part_ids and bloom "
-            "filters use another derivation, so the probe would miss seen "
-            "URLs and crawl them again — re-initialize it with init_crawl "
-            "on a fresh checkpoint"
+            f", this code reads {_state_format()}: its part_ids or its "
+            "filter layout differ, so the probe would miss seen URLs and "
+            "crawl them again — re-initialize it with init_crawl on a "
+            "fresh checkpoint"
         )
 
 
@@ -402,9 +443,7 @@ def init_crawl(spark: SparkSession, seeds: DataFrame, ckpt) -> None:
         0, "seen_delta",
     )
     _commit_bloom(
-        st, 0, frontier, spark.createDataFrame([], seen.BLOOM_SCHEMA),
-        metrics=False,
-    )
+        st, 0, frontier, spark.createDataFrame([], seen.BLOOM_SCHEMA))
     st.write_manifest(
         0, {"round": 0, "n_frontier": n, "n_scheduled": 0, "n_new": n}
     )
@@ -418,15 +457,15 @@ def run_round(
     compact_every: int | None = 8,
 ) -> dict:
     """Execute the next crawl round from the latest committed snapshot;
-    commit scheduled/seen-delta/bloom/bloom_words/metrics/frontier,
-    manifest last. Returns the manifest dict. Idempotent on crash: an
-    uncommitted round is simply re-run.
+    commit scheduled/seen-delta/filter/frontier, manifest last. Returns
+    the manifest dict. Idempotent on crash: an uncommitted round is simply
+    re-run.
 
     The seen-set probe reads the previous round's committed
     ``bloom_words`` — one filter covering every earlier round, never
     rebuilt from the (10^10-row) seen set — and the round's commit merges
-    its new URLs into the previous ``bloom``. Every committed round has
-    both surfaces: ``init_crawl`` and each round write them (through
+    its new URLs into the previous ``bloom``. Both are projections of the
+    ``filter`` surface, which ``init_crawl`` and each round write (through
     ``_commit_bloom``) before their manifest.
 
     ``compact_every``: rewrite the seen-delta log into a url_canon-bucketed
@@ -491,7 +530,7 @@ def run_round(
     # (scale observability: one row per hash partition, not per URL) with
     # the committed bloom's fill ratio / estimated fpp so operators see the
     # filter saturating
-    _commit_bloom(st, k, new_urls, st.read(prev, "bloom"), metrics=True)
+    _commit_bloom(st, k, new_urls, st.read(prev, "bloom"))
 
     next_frontier = frontier.join(
         sched.select("url_canon"), "url_canon", "left_anti"

@@ -10,11 +10,14 @@ Iceberg path for cluster deployments, selected by passing an
 
 State mapping (one namespace per crawl):
 
-    {db}.frontier / .scheduled / .seen_delta / .bloom / .metrics
-        — partitioned by ``round``; each round's commit is ONE atomic
-          dynamic-partition overwrite (`overwritePartitions`), so a
-          re-run after a crash replaces any orphan rows of the
-          uncommitted round instead of duplicating them
+    {db}.frontier / .scheduled / .seen_delta / .filter
+        — one table per physical surface of ``crawl.SURFACE_SCHEMAS``,
+          partitioned by ``round``; each write DELETEs the round's
+          partition and appends, so a re-run after a crash replaces any
+          orphan rows of the uncommitted round instead of duplicating
+          them. ``filter`` holds the round's whole filter commit in one
+          write; ``bloom``, ``bloom_words`` and ``metrics`` are read as
+          column projections of it (``crawl.SURFACE_VIEWS``), not tables
     {db}.manifest
         — one row per committed round, appended LAST: the ACID append is
           the commit marker, exactly the role MANIFEST-xxxx.json plays in
@@ -35,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .crawl import SURFACE_SCHEMAS
+from .crawl import SURFACE_SCHEMAS, physical_surface, read_surface
 
 # Spark 4.x / Scala 2.13 runtime artifact for --packages
 ICEBERG_RUNTIME_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
@@ -130,16 +133,18 @@ class IcebergStateBackend:
         ).append()
         return int(obs.get["n"]) if obs is not None else None
 
+    def _read_table(self, k: int, sub: str) -> DataFrame:
+        df = self.spark.table(f"{self.db}.{sub}").filter(F.col("round") == k)
+        # keep round only where the surface's own schema declares it
+        return df if SURFACE_SCHEMAS[sub].endswith("round INT") else (
+            df.drop("round"))
+
     def read(self, k: int, sub: str) -> DataFrame:
-        return (
-            self.spark.table(f"{self.db}.{sub}")
-            .filter(F.col("round") == k)
-            .drop("round")
-        )
+        return read_surface(self._read_table, k, sub)
 
     def exists(self, k: int, sub: str) -> bool:
         return bool(
-            self.spark.table(f"{self.db}.{sub}")
+            self.spark.table(f"{self.db}.{physical_surface(sub)}")
             .filter(F.col("round") == k)
             .limit(1)
             .count()

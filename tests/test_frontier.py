@@ -633,10 +633,7 @@ def test_resume_mid_crawl(spark, tmp_path):
 def test_crawl_metrics_lineage(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _spark_run(spark, ckpt, 1)
-    m = spark.read.parquet(
-        os.path.join(ckpt, "rounds", "r=0001", "metrics")
-    )
-    rows = m.collect()
+    rows = crawl.ParquetStateBackend(spark, ckpt).read(1, "metrics").collect()
     assert all(r["round"] == 1 for r in rows)
     # lineage totals reconcile with the manifest
     import json
@@ -669,7 +666,7 @@ def _same_rows(a, b) -> bool:
             and b.exceptAll(a).count() == 0)
 
 
-ROUND_JOB_BUDGET = 22
+ROUND_JOB_BUDGET = 19
 
 
 def test_round_commit_matches_reference_and_job_budget(spark, tmp_path):
@@ -729,9 +726,9 @@ def test_round_commit_matches_reference_and_job_budget(spark, tmp_path):
 
 
 def test_state_footers_match_schema_registry(spark, tmp_path):
-    """Every surface a round commits has the parquet footer (names and
-    types) of its SURFACE_SCHEMAS entry — the schema the pinned state
-    reads apply without inferring it."""
+    """Every physical surface a round commits has the parquet footer
+    (names and types) of its SURFACE_SCHEMAS entry — the schema the pinned
+    state reads apply without inferring it."""
     import glob
 
     import pyarrow.parquet as pq
@@ -836,7 +833,8 @@ def test_resume_refuses_checkpoint_of_other_part_id_derivation(
     fresh = str(tmp_path / "fresh")
     crawl.init_crawl(spark, _spark_seeds(spark, 20), fresh)
     assert crawl.ParquetStateBackend(spark, fresh).read_format() == {
-        "part_id_hash": seen.PART_ID_HASH}
+        "part_id_hash": seen.PART_ID_HASH,
+        "filter_layout": crawl.SURFACE_SCHEMAS["filter"]}
 
 
 def test_iceberg_backend_flagging(spark):
@@ -855,11 +853,13 @@ def test_iceberg_backend_flagging(spark):
     assert (conf["spark.sql.extensions"]
             == "org.apache.iceberg.spark.extensions"
                ".IcebergSparkSessionExtensions")
-    # surface schemas cover every parquet-backend surface
+    # surface schemas cover every physical parquet-backend surface; the
+    # filter's readable names are views of it, not surfaces
     assert set(crawl.SURFACE_SCHEMAS) == {
-        "frontier", "scheduled", "seen_delta", "bloom", "bloom_words",
-        "metrics",
+        "frontier", "scheduled", "seen_delta", "filter",
     }
+    assert {crawl.physical_surface(v) for v in crawl.SURFACE_VIEWS} == {
+        "filter"}
 
 
 def test_parquet_backend_roundtrip(spark, tmp_path):
@@ -1153,10 +1153,13 @@ def test_seen_compaction_parity_and_bucketed_join(spark, tmp_path):
     spark.sql(f"DROP TABLE {st._compact_table(c)}")
     compacted, _ = st.read_seen_split(last)
     assert compacted.count() > 0
+    _assert_bucketed_antijoin(spark, compacted, oc.seen)
 
-    # plan shape: disable broadcast so the join planner must pick SMJ,
-    # then assert the compacted side scans its buckets with no exchange
-    # (exactly one Exchange in the plan — the small probe side's)
+
+def _assert_bucketed_antijoin(spark, compacted, seen_urls) -> None:
+    """Plan shape: disable broadcast so the join planner must pick SMJ,
+    then assert the compacted side scans its buckets with no exchange
+    (exactly one Exchange in the plan — the small probe side's)."""
     thresholds = {
         "spark.sql.autoBroadcastJoinThreshold": None,
         "spark.sql.adaptive.autoBroadcastJoinThreshold": None,
@@ -1169,7 +1172,7 @@ def test_seen_compaction_parity_and_bucketed_join(spark, tmp_path):
         spark.conf.set(k, "-1")
     try:
         probe = spark.createDataFrame(
-            [(u,) for u in sorted(oc.seen)[:5]]
+            [(u,) for u in sorted(seen_urls)[:5]]
             + [("https://nowhere.example.com/x",)],
             ["url_canon"],
         )
@@ -1182,6 +1185,110 @@ def test_seen_compaction_parity_and_bucketed_join(spark, tmp_path):
         for k, v in thresholds.items():
             if v is not None:
                 spark.conf.set(k, v)
+
+
+def test_seen_compaction_sized_to_seen_set(spark, tmp_path, monkeypatch):
+    """Compaction writes ceil(n_seen / SEEN_ROWS_PER_BUCKET) buckets, one
+    parquet file each, records that count in its marker, and re-registers
+    the table from the marker (not from a constant) after a DROP, keeping
+    the exchange-free bucketed anti-join; the crawl still matches the
+    sequential oracle."""
+    import glob
+    import json
+    import math
+
+    rows = 64
+    monkeypatch.setattr(crawl, "SEEN_ROWS_PER_BUCKET", rows)
+    ckpt = str(tmp_path / "ckpt")
+    crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
+    rules = _spark_rules(spark)
+    for _ in range(4):
+        crawl.run_round(spark, ckpt, budget=2, rules=rules, compact_every=2)
+
+    oc = _oracle_run(4)
+    assert _order_tuples(spark, ckpt) == sorted(
+        oc.order, key=lambda t: (t[0], t[1], t[2])
+    )
+    st = crawl.ParquetStateBackend(spark, ckpt)
+    c = st.latest_compact()
+    assert c == 3
+    n_seen = sum(st.read_manifest(k)["n_new"] for k in range(c + 1))
+    with open(os.path.join(ckpt, f"COMPACT-{c:04d}.json")) as f:
+        n_buckets = json.load(f)["n_buckets"]
+    assert n_buckets == math.ceil(n_seen / rows) >= 4
+    files = glob.glob(
+        os.path.join(ckpt, "rounds", f"r={c:04d}", "seen_compact", "*.parquet"))
+    assert len(files) == n_buckets
+
+    compacted, deltas = st.read_seen_split(4)
+    in_compacted = {r["url_canon"] for r in compacted.collect()}
+    assert len(in_compacted) == n_seen
+    assert in_compacted | {
+        r["url_canon"] for r in deltas.collect()} == oc.seen
+
+    spark.sql(f"DROP TABLE {st._compact_table(c)}")
+    compacted, _ = st.read_seen_split(4)
+    info = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(
+            f"DESCRIBE TABLE EXTENDED {st._compact_table(c)}").collect()
+    }
+    assert int(info["Num Buckets"]) == n_buckets
+    _assert_bucketed_antijoin(spark, compacted, in_compacted)
+
+
+def test_filter_write_crash_leaves_round_uncommitted(
+        spark, tmp_path, monkeypatch):
+    """A fault in the one filter write, of init_crawl or of a round,
+    propagates and leaves that round without a manifest. Re-run after the
+    fault, the crawl order and seen set equal the sequential oracle's."""
+    ckpt = str(tmp_path / "ckpt")
+    write = crawl.ParquetStateBackend.write
+
+    def failing_write(self, df, k, sub, count=False):
+        if sub == "filter":
+            raise OSError(f"injected fault writing round {k}'s filter")
+        return write(self, df, k, sub, count)
+
+    with monkeypatch.context() as m:
+        m.setattr(crawl.ParquetStateBackend, "write", failing_write)
+        with pytest.raises(OSError, match="round 0's filter"):
+            crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
+    assert crawl.latest_round(spark, ckpt) is None
+    assert not os.path.exists(os.path.join(ckpt, "MANIFEST-0000.json"))
+
+    crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
+    rules = _spark_rules(spark)
+    with monkeypatch.context() as m:
+        m.setattr(crawl.ParquetStateBackend, "write", failing_write)
+        with pytest.raises(OSError, match="round 1's filter"):
+            crawl.run_round(spark, ckpt, budget=2, rules=rules)
+    assert crawl.latest_round(spark, ckpt) == 0
+    assert not os.path.exists(os.path.join(ckpt, "MANIFEST-0001.json"))
+
+    for _ in range(2):
+        crawl.run_round(spark, ckpt, budget=2, rules=rules)
+    oc = _oracle_run(2)
+    assert _order_tuples(spark, ckpt) == sorted(
+        oc.order, key=lambda t: (t[0], t[1], t[2])
+    )
+    assert {r["url_canon"]
+            for r in crawl.read_seen(spark, ckpt, 2).collect()} == oc.seen
+
+
+def test_resume_refuses_checkpoint_of_other_filter_layout(spark, tmp_path):
+    """A checkpoint whose state format names the current part_id
+    derivation but not the filter layout (one written before the filter
+    became one surface) must not resume: its pinned reads of the missing
+    `filter` columns would return NULL words, every candidate would probe
+    new, and seen URLs would be crawled again."""
+    ckpt = str(tmp_path / "ckpt")
+    crawl.init_crawl(spark, _spark_seeds(spark, 20), ckpt)
+    st = crawl.ParquetStateBackend(spark, ckpt)
+    st.write_format({"part_id_hash": seen.PART_ID_HASH})
+    with pytest.raises(ValueError, match="re-initialize"):
+        crawl.run_round(spark, ckpt, budget=2)
+    assert crawl.latest_round(spark, ckpt) == 0
 
 
 def test_sitemaps_expr_three_way(spark):

@@ -138,6 +138,8 @@ def test_ddl_namespace_first_then_tables():
     made = {re.search(r"crawl\.frontier_state\.(\w+)", s).group(1)
             for s in tables}
     assert made == set(crawl.SURFACE_SCHEMAS) | {"manifest"}
+    # bloom / bloom_words / metrics are projections of `filter`, no tables
+    assert not made & set(crawl.SURFACE_VIEWS)
 
 
 def test_ddl_surfaces_partitioned_by_round_manifest_not():
@@ -226,6 +228,40 @@ def test_state_format_is_a_manifest_table_property(spark):
     assert st.read_format() == {"part_id_hash": "x"}
 
 
+def test_read_resolves_filter_views(spark):
+    """bloom / bloom_words / metrics read the `filter` table's round-k
+    partition, projected to exactly the columns their consumers expect;
+    a plain surface drops the round partition column."""
+    from language_diversity_common_crawler_spark.frontier import seen
+
+    fake = _FakeSpark()
+    st = iceberg.IcebergStateBackend(fake)
+    tables = {
+        "filter": spark.createDataFrame(
+            [(p, b"\x01" * 8, 64, 7, 3, [1], 2, 0.5, 0.01, k)
+             for k in (0, 1) for p in (0, 1)],
+            crawl.SURFACE_SCHEMAS["filter"]),
+        "frontier": spark.createDataFrame(
+            [("u", "h", 1)], crawl.SURFACE_SCHEMAS["frontier"] + ", round INT"),
+    }
+    read_from = []
+
+    def table(name):
+        read_from.append(name)
+        return tables[name.rsplit(".", 1)[1]]
+
+    fake.table = table
+    assert st.read(1, "bloom").columns == seen.BLOOM_SCHEMA.names
+    assert st.read(1, "bloom_words").columns == seen.WORDS_SCHEMA.names
+    metrics = st.read(1, "metrics")
+    assert metrics.columns == ["part_id", "n_new", "bloom_keys",
+                               "fill_ratio", "est_fpp", "round"]
+    assert {tuple(r) for r in metrics.collect()} == {
+        (0, 2, 3, 0.5, 0.01, 1), (1, 2, 3, 0.5, 0.01, 1)}
+    assert read_from == ["crawl.frontier_state.filter"] * 3
+    assert st.read(1, "frontier").columns == ["url_canon", "host"]
+
+
 # ---------------------------------------------------------------------------
 # commit-protocol ordering: crawl drives ANY backend manifest-last — pinned
 # through a spy on the real (tested) parquet backend so the shared contract
@@ -271,5 +307,7 @@ def test_crawl_commit_is_manifest_last(spark, tmp_path):
     kinds = [n for n, _, _ in spy.calls]
     assert kinds[-1] == "write_manifest", spy.calls
     assert kinds.count("write_manifest") == 1
-    surfaces = {s for n, _, s in spy.calls if n == "write"}
-    assert {"scheduled", "frontier", "seen_delta", "metrics"} <= surfaces
+    surfaces = [s for n, _, s in spy.calls if n == "write"]
+    # the filter commit is one write of one surface
+    assert sorted(surfaces) == ["filter", "frontier", "scheduled",
+                                "seen_delta"]
