@@ -12,8 +12,7 @@ the same keys in definition order. Oracle SQL is GENERATED from the same
 specs as the Spark code (see
 language_diversity_common_crawler_spark.functions.langspec) so values match
 exactly; it runs on DuckDB with the fixture tables pre-registered as views.
-The queries read five of them: orders, customer, nation, documents and
-embeddings.
+The queries read four of them: orders, customer, nation and documents.
 """
 
 from __future__ import annotations
@@ -39,14 +38,12 @@ from language_diversity_common_crawler_spark.frontier import (  # noqa: E402
 from language_diversity_common_crawler_spark.functions import (  # noqa: E402
     components,
     dedup,
-    indexing,
     langspec,
     lines,
     packing,
     pii,
     quality_rules,
     sampling,
-    similarity,
     sketches,
     spans,
     text_analysis,
@@ -135,8 +132,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents spread over the cores: the small-sf parquet is a SINGLE
-    input split, which would serialize JVM-expression-heavy maps (simhash
-    bit votes, shingle md5) into one task. Measured: 2.6x on simhash at
+    input split, which would serialize JVM-expression-heavy maps (shingle
+    md5, MinHash mins) into one task. Measured: 2.6x on such a map at
     sf0.1/local[32]. The pandas-UDF queries deliberately do NOT use this —
     their numpy batches are faster as one large Arrow batch than as 64
     shuffled small ones."""
@@ -609,13 +606,6 @@ def token_quality_stats(spark, sf_dir):
     )
 
 
-@_query(oracle=text_analysis.sql_winnow_fingerprints("documents"))
-def winnow_fingerprints(spark, sf_dir):
-    """Rolling-hash winnowing fingerprints (MOSS scheme): char k-gram
-    hashes -> w-window minima, shuffle-free linear-scan map."""
-    return text_analysis.winnow_fingerprints(_docs_par(spark, sf_dir))
-
-
 @_query(oracle=quality_rules.sql_gopher_quality("documents"))
 def gopher_quality(spark, sf_dir):
     """Gopher-style rule filter (Rae et al. 2021 App. A): per-doc
@@ -632,35 +622,11 @@ def gopher_quality(spark, sf_dir):
     )
 
 
-@_query(oracle=indexing.sql_term_postings("documents"))
-def inverted_index(spark, sf_dir):
-    """Inverted index build: term → document frequency + capped
-    posting list. Postings are window-capped BEFORE aggregation (a
-    stop-word never buffers the whole corpus), and the groupBy reuses
-    the window's term partitioning — one shuffle total."""
-    return indexing.term_postings(_docs_par(spark, sf_dir))
-
-
-@_query(oracle=indexing.sql_tfidf_top_terms("documents"))
-def tfidf_top_terms(spark, sf_dir):
-    """Top-3 distinctive terms per document by the exact-integer
-    tf*1e6 div df score (no float → oracle-hash-safe); tf → df → join
-    → per-doc top-k, all built-in JVM ops."""
-    return indexing.tfidf_top_terms(_docs_par(spark, sf_dir))
-
-
 @_query(oracle=quality_rules.sql_top_2gram_stats("documents"))
 def repetition_2gram(spark, sf_dir):
     """Most-common-2-gram share per document (Gopher repetition
     signal); map-side-combinable double aggregation."""
     return quality_rules.top_2gram_stats(_docs_par(spark, sf_dir))
-
-
-@_query(oracle=dedup.sql_winnow_near_dup_pairs("documents"))
-def winnow_near_dup_pairs(spark, sf_dir):
-    """MOSS detection join: pairs sharing >= 2 winnowing fingerprints
-    (df-capped inverted index over the winnowed sample)."""
-    return dedup.winnow_near_dup_pairs(_docs_par(spark, sf_dir))
 
 
 # end-to-end training-set selection: quality gate -> exact dedup by
@@ -815,19 +781,6 @@ def lang_length_percentiles(spark, sf_dir):
     return stats.length_percentiles(_docs(spark, sf_dir))
 
 
-_SIMHASH_SQL = (
-    f"SELECT doc_id, {text_analysis.simhash60_exprs('text', 'duckdb')} "
-    f"AS simhash60 FROM documents"
-)
-
-
-@_query(oracle=_SIMHASH_SQL)
-def simhash_fingerprints(spark, sf_dir):
-    return text_analysis.simhash60(_docs_par(spark, sf_dir)).select(
-        "doc_id", "simhash60"
-    )
-
-
 # ---- training-data ops: dedup ----
 @_query(oracle=(
     "SELECT md5(text) AS content_hash, CAST(min(doc_id) AS BIGINT) AS keep_id, "
@@ -892,41 +845,6 @@ def dedup_clusters(spark, sf_dir):
     return components.dedup_clusters(docs, verified)
 
 
-_PROD_HASHES, _PROD_BANDS = dedup.PRESET_PRODUCTION
-
-
-@_query(oracle=dedup.sql_lsh_candidate_pairs(
-    dedup.sql_minhash_signatures(
-        "documents", n_hashes=_PROD_HASHES, n_bands=_PROD_BANDS
-    ),
-    n_bands=_PROD_BANDS,
-))
-def minhash_lsh_pairs_16x8(spark, sf_dir):
-    """Production LSH preset (16 hashes / 8 bands): steeper S-curve,
-    candidate threshold ~0.35 Jaccard. Same plan shape as the 8/4
-    default — banded self-join, never all-pairs."""
-    sigs = dedup.minhash_signatures(
-        _docs_par(spark, sf_dir), n_hashes=_PROD_HASHES, n_bands=_PROD_BANDS
-    )
-    return dedup.lsh_candidate_pairs(sigs, n_bands=_PROD_BANDS)
-
-
-@_query(oracle=dedup.sql_ngram_jaccard_pairs(
-    "documents", min_jaccard_bp=2000, max_df=200
-))
-def ngram_jaccard_pairs(spark, sf_dir):
-    """Exact n-gram Jaccard via inverted shingle index with a df-cap
-    (stop-shingle pruning) — the non-probabilistic dedup path."""
-    return dedup.ngram_jaccard_pairs(
-        _docs_par(spark, sf_dir), min_jaccard_bp=2000, max_df=200
-    )
-
-
-@_query(oracle=dedup.sql_simhash_near_dup_pairs(_SIMHASH_SQL))
-def simhash_near_dup(spark, sf_dir):
-    return dedup.simhash_near_dup_pairs(_docs_par(spark, sf_dir))
-
-
 # W4 experiment dataset dump shape ({uri,id,lang,len} JSON rows,
 # reference experiments/cc_fastwarc.py:125-129)
 @_query(oracle=f"""
@@ -946,39 +864,6 @@ def experiment_dataset(spark, sf_dir):
         F.col("li_lang").alias("lang"),
         F.length(F.encode(F.col("text"), "UTF-8")).cast("bigint").alias("len"),
     )
-
-
-# ---- training-data ops: similarity search ----
-@_query(oracle=similarity.sql_brute_force_topk(
-    "embeddings", [0, 1, 2, 3, 4], k=10
-))
-def embedding_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.brute_force_topk(emb, [0, 1, 2, 3, 4], k=10)
-
-
-@_query(oracle=similarity.sql_ivf_topk(
-    "embeddings", [20, 21, 22, 23, 24], k=10
-))
-def embedding_ivf_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.ivf_topk(emb, [20, 21, 22, 23, 24], k=10)
-
-
-@_query(oracle=similarity.sql_lsh_bucketed_neighbors(
-    "embeddings", min_cosine=0.2
-))
-def embedding_lsh_neighbors(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.lsh_bucketed_neighbors(emb, min_cosine=0.2)
-
-
-@_query(oracle=similarity.sql_cosine_dedup("embeddings", threshold=0.25))
-def embedding_cosine_dedup(spark, sf_dir):
-    """Near-dup dedup by embedding cosine: LSH candidate pairs ->
-    greedy keep-lowest-id representative (one verdict row/vector)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.cosine_dedup(emb, threshold=0.25)
 
 
 # ---- reference end-to-end pipeline on synthetic pages (P1+P2+F1+L1-L5)
@@ -1720,14 +1605,6 @@ def incremental_span_contamination(spark, sf_dir):
     return spans.incremental_span_contamination(_docs_par(spark, sf_dir))
 
 
-@_query(oracle=sampling.sql_dsir_weights("documents"))
-def dsir_weights(spark, sf_dir):
-    """DSIR (Xie et al. 2023) hashed-unigram importance weights toward
-    the lang='en' slice: two 256-row feature distributions, broadcast
-    weight table, one doc_id aggregate (functions/sampling.py)."""
-    return sampling.dsir_weights(_docs_par(spark, sf_dir))
-
-
 @_query(oracle=sampling.sql_budget_threshold_selection("documents"))
 def budget_threshold_selection(spark, sf_dir):
     """Per-language token-budget selection WITHOUT a global sort:
@@ -1997,20 +1874,6 @@ def mixing_epoch_plan(spark, sf_dir):
     normalize via windows over the |languages|-row relation
     (functions/sampling.py)."""
     return sampling.mixing_epoch_plan(_docs_par(spark, sf_dir))
-
-
-@_query(oracle=similarity.sql_label_centroid_similarity("embeddings"))
-def label_centroid_similarity(spark, sf_dir):
-    """Corpus-geometry report: pairwise centroid similarity across
-    embedding labels as EXACT integers (quantize → integer sums →
-    dot + squared norms; no division, no sqrt — the oracle checks
-    the geometry itself). One corpus exchange; the tiny (label, dim)
-    relation is checkpointed against triple re-planning
-    (functions/similarity.py)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return similarity.label_centroid_similarity(emb)
 
 
 @_query(oracle=dedup.sql_source_overlap_matrix("documents"))

@@ -13,7 +13,7 @@ The headline set covers every layer of the engine:
     three pandas-UDF lang-ID models),
   - the full extract pipeline on synthetic pages (decode -> boilerplate ->
     lang-ID, SURVEY.md §3.1),
-  - training-data ops (MinHash-LSH dedup, embedding top-k),
+  - training-data ops (MinHash-LSH dedup, span removal, decontamination),
   - the frontier (north rule): canonicalize -> seen anti-join -> robots
     broadcast join -> per-host politeness schedule, plus a full crawl round
     with bloom-filter URL-seen probe.
@@ -90,21 +90,14 @@ HEADLINE = [
     "token_quality_stats",
     "source_balanced_sample",
     "lang_stratified_sample",
-    "winnow_fingerprints",
-    "simhash_near_dup",
     "minhash_lsh_pairs",
     "minhash_jaccard_verified",
-    "embedding_topk",
-    "embedding_cosine_dedup",
     "frontier_politeness_schedule",
     "frontier_robots_filter",
     "warc_ingest",
     "pii_redaction",
     "cdx_fetch_plan",
-    "inverted_index",
-    "tfidf_top_terms",
     "duplicated_span_removal",
-    "dsir_weights",
     "kmv_shingle_cardinality",
     "line_dedup",
     "lang_deficit_budget",
@@ -116,7 +109,6 @@ HEADLINE = [
     "sampled_length_quantiles",
     "filter_funnel_report",
     "mixing_epoch_plan",
-    "label_centroid_similarity",
     "source_overlap_matrix",
     "quality_length_moments",
     "source_novelty_report",

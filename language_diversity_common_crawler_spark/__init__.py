@@ -5,7 +5,7 @@ capabilities of the reference repo `medkhabt/Language_diversity_common_crawler`
 Layers
 ------
 - ``functions``  : scalar/vectorized column functions (decode, boilerplate,
-                   language-ID models, text analysis, dedup hashing, similarity)
+                   language-ID models, text analysis, dedup hashing, sampling)
 - ``operators``  : DataFrame-level operators (histogram pivot, stats aggs,
                    crosstab, pagination, diversity indices)
 - ``sources``    : pages table synthesis + snapshot-table catalog

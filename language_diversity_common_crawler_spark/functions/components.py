@@ -1,8 +1,8 @@
 """Connected components over near-duplicate pair graphs — exact dedup
 cluster assignment, the step after pair generation.
 
-The greedy min-id survivor rules in ``dedup.minhash_dedup_survivors`` and
-``similarity.cosine_dedup`` are one-hop: a chain a-b-c keeps both a and c
+The greedy min-id survivor rule in ``dedup.minhash_dedup_survivors`` is
+one-hop: a chain a-b-c keeps both a and c
 (c's only verified neighbor is b). Transitive-closure dedup — "keep exactly
 one document per connected component of the near-dup graph" — needs an
 iterative computation; the reference has no dedup at all (this whole family

@@ -7,9 +7,11 @@
   near-dup candidates come from a self-join on (band, bucket) — the join key
   is the bucket hash, so only genuinely-colliding docs meet. This is the
   scale path: no pairwise O(n²) anywhere.
-- SimHash: see functions.text_analysis.simhash60_exprs.
-- n-gram Jaccard: exact verification on LSH candidates (or, at small scale,
-  on all shingle-sharing pairs) via unnest + join + group.
+- verified Jaccard: exact shingle-set Jaccard over the LSH candidates only,
+  then a greedy min-id survivor per doc (or connected components,
+  functions.components).
+- decontamination: eval-set word-k-gram overlap (binary flag and graded
+  containment ratio) against a broadcast shingle-hash set.
 
 Every expression is dialect-shared (Spark SQL + DuckDB) so the driver's
 oracle validates values exactly. Shingle hashes are 60-bit md5 (hashing.py).
@@ -26,10 +28,6 @@ from .hashing import sql_md5_60, sql_md5_60_salted
 
 N_MINHASH = 8
 N_BANDS = 4  # 2 rows per band
-# production preset (16 hashes / 8 bands, 2 rows per band): steeper LSH
-# S-curve — candidate threshold ~ (1/8)^(1/2) ≈ 0.35 Jaccard with better
-# variance than the 8/4 default; pass to the n_hashes/n_bands parameters
-PRESET_PRODUCTION = (16, 8)
 
 
 _WS = r"\s+"
@@ -86,11 +84,8 @@ def shingles_expr(text: str, dialect: str, k: int = 3) -> str:
 
 MH_P = 2147483647  # 2^31 - 1; a_j * (h % p) + b_j stays inside int64
 _MH_A = [2971215073, 1640531527, 2654435761, 2246822519,
-         3266489917, 668265263, 374761393, 3144134277,
-         2166136261, 16777619, 40503, 2047483691,
-         1099511627, 387420489, 2654435769, 1327217884]
-_MH_B = [97, 193, 389, 769, 1543, 3079, 6151, 12289,
-         24593, 49157, 98317, 196613, 393241, 786433, 1572869, 3145739]
+         3266489917, 668265263, 374761393, 3144134277]
+_MH_B = [97, 193, 389, 769, 1543, 3079, 6151, 12289]
 
 
 def shingle_hash_expr(shingles: str, dialect: str) -> str:
@@ -103,69 +98,34 @@ def shingle_hash_expr(shingles: str, dialect: str) -> str:
 
 
 def shingle_hash60_expr(shingles: str, dialect: str) -> str:
-    """Full 60-bit shingle hashes — for EXACT set operations (inverted-index
-    Jaccard), where the minhash path's mod-(2^31-1) reduction would merge
-    distinct shingles at birthday rates (~23k colliding shingle pairs per
-    10M distinct shingles), silently inflating intersection counts."""
+    """Full 60-bit shingle hashes — for EXACT set operations (distinct-
+    shingle counts), where the minhash path's mod-(2^31-1) reduction would
+    merge distinct shingles at birthday rates (~23k colliding shingle pairs
+    per 10M distinct shingles), silently deflating the counts."""
     h = sql_md5_60("s", dialect)
     fn = "list_transform" if dialect == "duckdb" else "transform"
     return f"{fn}({shingles}, s -> {h})"
 
 
-def _df_capped(postings: DataFrame, key: str, max_df: int | None) -> DataFrame:
-    """Stop-shingle pruning: drop postings whose key's document frequency
-    exceeds max_df BEFORE any self-join (bounds per-key fan-out at max_df²).
-    The cap join is co-partitioned with the groupBy feeding it (same key),
-    so it costs no extra shuffle of the postings."""
-    if max_df is None:
-        return postings
-    keep = (
-        postings.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max_df)
-        .select(key)
-    )
-    return postings.join(keep, key)
-
-
-def _sql_df_cap(key: str, max_df: int | None) -> str:
-    """`postings AS (...)` CTE fragment applying the same df cap to a
-    ``postings0`` CTE in the DuckDB oracle dialect."""
-    if max_df is None:
-        return "postings AS (SELECT * FROM postings0),"
-    return (
-        f"postings AS (SELECT p0.* FROM postings0 p0 JOIN "
-        f"(SELECT {key} FROM postings0 GROUP BY {key} "
-        f"HAVING count(*) <= {max_df}) k USING ({key})),"
-    )
-
-
-def minhash_exprs(hashed: str, dialect: str,
-                  n_hashes: int = N_MINHASH) -> dict[str, str]:
-    """k min-hashes over a shingle-hash-array expression (affine maps mod p,
-    pure int64 arithmetic — identical in Spark and DuckDB).
+def minhash_exprs(hashed: str, dialect: str) -> dict[str, str]:
+    """N_MINHASH min-hashes over a shingle-hash-array expression (affine
+    maps mod p, pure int64 arithmetic — identical in Spark and DuckDB).
     Empty shingle set → NULL (doc too short to near-dup)."""
-    if n_hashes > len(_MH_A):
-        raise ValueError(f"n_hashes <= {len(_MH_A)} (got {n_hashes})")
     out = {}
     amin = "list_min" if dialect == "duckdb" else "array_min"
     fn = "list_transform" if dialect == "duckdb" else "transform"
-    for j in range(n_hashes):
+    for j in range(N_MINHASH):
         a, b = _MH_A[j], _MH_B[j]
         out[f"mh{j}"] = f"{amin}({fn}({hashed}, h -> ({a} * h + {b}) % {MH_P}))"
     return out
 
 
-def band_exprs(dialect: str, n_hashes: int = N_MINHASH,
-               n_bands: int = N_BANDS) -> dict[str, str]:
-    """Band bucket keys: hash of the concatenated row hashes."""
-    if n_hashes % n_bands:
-        raise ValueError(f"n_hashes ({n_hashes}) not divisible by n_bands "
-                         f"({n_bands})")
-    rows_per_band = n_hashes // n_bands
+def band_exprs(dialect: str) -> dict[str, str]:
+    """N_BANDS band bucket keys: hash of the concatenated row hashes."""
+    rows_per_band = N_MINHASH // N_BANDS
     out = {}
     cast_t = "VARCHAR" if dialect == "duckdb" else "STRING"
-    for b in range(n_bands):
+    for b in range(N_BANDS):
         parts = [f"CAST(mh{b * rows_per_band + r} AS {cast_t})"
                  for r in range(rows_per_band)]
         joined = "concat(" + ", ':', ".join(parts) + ")"
@@ -179,9 +139,7 @@ def band_exprs(dialect: str, n_hashes: int = N_MINHASH,
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       n_hashes: int = N_MINHASH,
-                       n_bands: int = N_BANDS) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """Spark: id + mh0..mh{k-1} + band0..band{b-1} (all JVM-side exprs).
     The shingle-hash array is materialized as one intermediate column so the
     md5 pass over shingles runs once, not once per minhash."""
@@ -198,27 +156,24 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     out = hashed.select(
         id_col,
         *[F.expr(e).alias(n)
-          for n, e in minhash_exprs("__sh", "spark", n_hashes).items()],
+          for n, e in minhash_exprs("__sh", "spark").items()],
     )
-    for n, e in band_exprs("spark", n_hashes, n_bands).items():
+    for n, e in band_exprs("spark").items():
         out = out.withColumn(n, F.expr(e))
     return out
 
 
 def sql_minhash_signatures(table: str, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           n_hashes: int = N_MINHASH,
-                           n_bands: int = N_BANDS) -> str:
+                           text_col: str = "text") -> str:
     sh = shingles_expr(text_col, "duckdb")
     hashed = shingle_hash_expr(sh, "duckdb")
     mh = ",\n       ".join(
         f"{e} AS {n}"
-        for n, e in minhash_exprs("__sh", "duckdb", n_hashes).items()
+        for n, e in minhash_exprs("__sh", "duckdb").items()
     )
-    mh_cols = ", ".join(f"mh{j}" for j in range(n_hashes))
+    mh_cols = ", ".join(f"mh{j}" for j in range(N_MINHASH))
     bands = ",\n       ".join(
-        f"{e} AS {n}"
-        for n, e in band_exprs("duckdb", n_hashes, n_bands).items()
+        f"{e} AS {n}" for n, e in band_exprs("duckdb").items()
     )
     return (
         f"SELECT {id_col}, {mh_cols},\n"
@@ -228,19 +183,18 @@ def sql_minhash_signatures(table: str, id_col: str = "doc_id",
     )
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        n_bands: int = N_BANDS) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Self-join per band on the bucket key → distinct candidate pairs a<b.
     Shuffles on the band hash (uniform by construction; no skew salting
     needed unless many identical docs — AQE skew-join covers that)."""
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
+    stack_args = ", ".join(f"{b}, band{b}" for b in range(N_BANDS))
     # persist the (tiny: id + band keys) stacked relation: the self-join's
     # two sides would otherwise EACH recompute the full signature lineage
     # (shingle md5 pass included) — Spark does not reuse the exchange when
     # the sides' output names differ. ContextCleaner unpersists on GC.
     stacked = sigs.select(
         F.col(id_col),
-        F.expr(f"stack({n_bands}, {stack_args}) AS (bi, bk)"),
+        F.expr(f"stack({N_BANDS}, {stack_args}) AS (bi, bk)"),
     ).filter(F.col("bk").isNotNull()).persist(StorageLevel.MEMORY_AND_DISK)
     left = stacked.select(F.col(id_col).alias("a"), "bi", "bk")
     right = stacked.select(F.col(id_col).alias("b"), "bi", "bk")
@@ -272,10 +226,14 @@ def jaccard_verified_pairs(
     toks = docs.select(
         F.col(id_col), F.expr(tokens_expr(text_col, "spark")).alias("__toks")
     )
+    # NULL text has a NULL shingle array; as the empty set it scores 0 bp
+    # against every doc, as in the DuckDB twin (its list_concat and
+    # list_contains read NULL as empty), instead of a NULL Jaccard
     sh = toks.select(
         id_col,
-        F.array_distinct(
-            F.expr(shingles_from_tokens("__toks", "spark"))
+        F.coalesce(
+            F.array_distinct(F.expr(shingles_from_tokens("__toks", "spark"))),
+            F.array().cast("array<string>"),
         ).alias("__sh"),
     )
     need = pairs.select(F.col("a").alias(id_col)).union(
@@ -303,10 +261,9 @@ def minhash_dedup_survivors(
 ) -> DataFrame:
     """Survivor selection over verified MinHash pairs — one row per doc
     with a keep/drop verdict, completing the dedup chain (signatures →
-    LSH candidates → Jaccard verification → THIS). Same greedy min-id
-    rule as ``similarity.cosine_dedup``: a doc is dropped when any
-    lower-id doc is a verified near-duplicate of it; ``dup_of`` is the
-    smallest such neighbor (NULL for kept rows). Deterministic and
+    LSH candidates → Jaccard verification → THIS). Greedy min-id rule:
+    a doc is dropped when any lower-id doc is a verified near-duplicate
+    of it; ``dup_of`` is the smallest such neighbor (NULL for kept rows). Deterministic and
     order-independent (min/max aggregates); exact transitive closure
     would need an iterative join loop. Plan: one groupBy over the tiny
     verified-pair list, then a hash join back to the corpus on the id."""
@@ -376,97 +333,9 @@ FROM j WHERE (CASE WHEN uni = 0 THEN 0
 """
 
 
-def _simhash_band_keys() -> list[str]:
-    """Band bucket keys over a ``simhash60`` column: 8 contiguous bit
-    slices (4x8-bit + 4x7-bit). ``>>`` and ``&`` behave identically on
-    BIGINT in Spark SQL and DuckDB (arithmetic shift + mask; the
-    fingerprint is always non-negative so no sign edge exists)."""
-    from .text_analysis import SIMHASH_BAND_OFFSETS, SIMHASH_BAND_WIDTHS
-
-    return [
-        f"CAST((simhash60 >> {off}) & {(1 << w) - 1} AS INT)"
-        for off, w in zip(SIMHASH_BAND_OFFSETS, SIMHASH_BAND_WIDTHS)
-    ]
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """SimHash near-dup: 60-bit fingerprints banded into EIGHT bands
-    (4x8-bit + 4x7-bit). Pigeonhole: a pair with hamming <= 7 differs in at
-    most 7 bands, so at least one band matches exactly — full recall for
-    ``max_hamming`` up to 7; the exact bit_count(xor) filter then drops
-    anything above it.
-
-    Scale shape: the self-join key is (band, band-bits), so bucket count per
-    band is 2^7..2^8 *per distinct fingerprint prefix* — with 60-bit
-    fingerprints, unrelated documents collide in a band with probability
-    ~2^-7, so candidate volume stays ~linear in corpus size instead of the
-    O(n²/16) the old 16-bit geometry degenerated to."""
-    from .text_analysis import simhash60
-
-    if max_hamming > 7:
-        raise ValueError(
-            "8-band/60-bit SimHash banding only guarantees recall for "
-            f"max_hamming <= 7, got {max_hamming}"
-        )
-    # persist the (id, fingerprint) relation: both join sides read it, and
-    # without the cache each would rerun the per-token md5 + bit votes
-    sigs = simhash60(docs.select(id_col, text_col)).select(
-        id_col, "simhash60"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    keys = _simhash_band_keys()
-    bands = ", ".join(f"{b}, {k}" for b, k in enumerate(keys))
-    banded = sigs.select(
-        id_col,
-        "simhash60",
-        F.expr(f"stack({len(keys)}, {bands}) AS (band, bk)"),
-    )
-    left = banded.select(
-        F.col(id_col).alias("a"), F.col("simhash60").alias("sa"), "band", "bk"
-    )
-    right = banded.select(
-        F.col(id_col).alias("b"), F.col("simhash60").alias("sb"), "band", "bk"
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return (
-        left.join(right, ["band", "bk"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", ham.cast("bigint").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def sql_simhash_near_dup_pairs(
-    simhash_select: str, max_hamming: int = 3
-) -> str:
-    """``simhash_select`` must yield (doc_id, simhash60)."""
-    keys = _simhash_band_keys()
-    band_ids = ", ".join(str(b) for b in range(len(keys)))
-    band_keys = ", ".join(keys)
-    return f"""
-WITH sigs AS ({simhash_select}),
-banded AS (
-  SELECT doc_id, simhash60, band, bk FROM (
-    SELECT doc_id, simhash60,
-           unnest([{band_ids}]) AS band,
-           unnest([{band_keys}]) AS bk
-    FROM sigs))
-SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
-       CAST(bit_count(xor(l.simhash60, r.simhash60)) AS BIGINT) AS hamming
-FROM banded l JOIN banded r ON l.band = r.band AND l.bk = r.bk
-  AND l.doc_id < r.doc_id
-WHERE bit_count(xor(l.simhash60, r.simhash60)) <= {max_hamming}
-"""
-
-
-def sql_lsh_candidate_pairs(sigs_select: str, n_bands: int = N_BANDS) -> str:
+def sql_lsh_candidate_pairs(sigs_select: str) -> str:
     parts = []
-    for b in range(n_bands):
+    for b in range(N_BANDS):
         parts.append(
             f"SELECT l.doc_id AS a, r.doc_id AS b FROM sigs l "
             f"JOIN sigs r ON l.band{b} = r.band{b} AND l.doc_id < r.doc_id"
@@ -475,195 +344,6 @@ def sql_lsh_candidate_pairs(sigs_select: str, n_bands: int = N_BANDS) -> str:
         f"WITH sigs AS ({sigs_select})\n"
         f"SELECT DISTINCT a, b FROM (" + " UNION ALL ".join(parts) + ")"
     )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    min_jaccard_bp: int = 5000,
-    max_df: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via an inverted shingle index —
-    the non-probabilistic sibling of MinHash LSH (reference computes no
-    dedup at all; this is a training-data-pipeline extension).
-
-    Plan: distinct shingle hashes per doc → explode into postings
-    (shingle, doc) → self-join postings on the shingle hash → count common
-    shingles per (a, b) pair → join per-doc set sizes →
-    jaccard = common / (|A| + |B| - common), reported in basis points.
-
-    Scale shape: the postings self-join is shuffled on the shingle hash
-    (uniform), and its cost is Σ df(s)² over shingles — dominated by
-    boilerplate shingles shared by millions of documents. ``max_df`` is the
-    standard fix (df-capped / stop-shingle pruning, cf. prefix filtering in
-    Vernica et al., SIGMOD'10): postings for shingles with document
-    frequency > max_df are dropped BEFORE the join, bounding per-shingle
-    join fan-out at max_df² while leaving discriminative shingles intact.
-    Set sizes are computed AFTER the cap, so the result is exactly Jaccard
-    over the df-capped shingle space in both engines (with max_df=None it
-    is plain exact Jaccard). The df-filter join is co-partitioned with the
-    groupBy that feeds it (same key), so the cap costs no extra shuffle of
-    the postings.
-
-    Output: (a, b, jaccard_bp) with a < b, jaccard_bp >= min_jaccard_bp.
-    """
-    toks = docs.select(
-        F.col(id_col), F.expr(tokens_expr(text_col, "spark")).alias("__toks")
-    )
-    shingled = toks.select(
-        id_col,
-        F.expr(shingles_from_tokens("__toks", "spark")).alias("__shg"),
-    )
-    hashed = shingled.select(
-        id_col,
-        F.array_distinct(
-            F.expr(shingle_hash60_expr("__shg", "spark"))
-        ).alias("__sh"),
-    )
-    postings = hashed.select(
-        F.col(id_col), F.explode("__sh").alias("sh")
-    )
-    postings = _df_capped(postings, "sh", max_df)
-    # both the sizes aggregate and the two self-join sides read the capped
-    # postings — persist so the shingle md5 pass (and the df-cap join) runs
-    # once, not three times
-    postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = postings.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    left = postings.select(F.col(id_col).alias("a"), "sh")
-    right = postings.select(F.col(id_col).alias("b"), "sh")
-    common = (
-        left.join(right, "sh")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("__common"))
-    )
-    # sizes has one row per doc with shingles — no broadcast hint: it is
-    # O(n_docs) and unbounded at corpus scale, so a forced broadcast would
-    # OOM the driver at 10^9 docs; AQE broadcasts it when actually small
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("__sa"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("__sb"))
-    uni = F.col("__sa") + F.col("__sb") - F.col("__common")
-    jacc = F.floor(F.col("__common") * 10000 / uni).cast("bigint")
-    return (
-        common.join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", jacc.alias("jaccard_bp"))
-        .filter(F.col("jaccard_bp") >= min_jaccard_bp)
-    )
-
-
-def sql_ngram_jaccard_pairs(
-    table: str = "documents",
-    min_jaccard_bp: int = 5000,
-    max_df: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB mirror of ngram_jaccard_pairs (identical shingle hashes,
-    df-cap, and basis-point arithmetic)."""
-    sh = shingles_expr(text_col, "duckdb")
-    hashed = shingle_hash60_expr(sh, "duckdb")
-    cap = _sql_df_cap("sh", max_df)
-    return f"""
-WITH postings0 AS (
-  SELECT {id_col}, unnest(list_distinct({hashed})) AS sh FROM {table}),
-{cap}
-sizes AS (SELECT {id_col}, count(*) AS sz FROM postings GROUP BY {id_col}),
-common AS (
-  SELECT l.{id_col} AS a, r.{id_col} AS b, count(*) AS common
-  FROM postings l JOIN postings r
-    ON l.sh = r.sh AND l.{id_col} < r.{id_col}
-  GROUP BY l.{id_col}, r.{id_col})
-SELECT a, b,
-       CAST(floor(common * 10000 / (sa.sz + sb.sz - common)) AS BIGINT)
-         AS jaccard_bp
-FROM common
-JOIN sizes sa ON sa.{id_col} = a
-JOIN sizes sb ON sb.{id_col} = b
-WHERE floor(common * 10000 / (sa.sz + sb.sz - common)) >= {min_jaccard_bp}
-"""
-
-
-def winnow_near_dup_pairs(
-    docs: DataFrame,
-    min_shared: int = 2,
-    max_df: int | None = 64,
-    k: int = 16,
-    w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup candidate pairs from SHARED WINNOWING FINGERPRINTS — the
-    MOSS detection join (Schleimer et al. '03). Same inverted-index shape
-    as ngram_jaccard_pairs, but over the winnowed sample instead of the
-    full shingle set: winnowing keeps ~2/(w+1) of the k-gram hashes while
-    guaranteeing every shared run of length >= k + w - 1 still collides,
-    so the postings table (and the Σ df² self-join cost) shrinks ~(w+1)/2×
-    with no loss of long-match recall. ``max_df`` drops boilerplate
-    fingerprints shared by more than max_df docs before the join
-    (stop-shingle pruning), bounding per-key fan-out at max_df².
-
-    Output: (a, b, n_shared) with a < b and n_shared >= min_shared shared
-    selected fingerprints.
-
-    Geometry: the standalone winnow_fingerprints query keeps the short
-    k=8 default (fine-grained fingerprinting); the DETECTION join defaults
-    to k=16, w=8 — a shared run of >= k + w - 1 = 23 chars guarantees ONE
-    shared fingerprint — which on template-heavy web text is what keeps
-    the candidate set ~1% of all pairs instead of ~75% (measured on the
-    synthetic corpus; short grams collide on boilerplate phrases exactly
-    like under-sized SimHash bands). NOTE the default min_shared=2 asks
-    for two guaranteed windows: it detects a single shared run only at
-    >= k + 2w - 1 = 31 chars (or two disjoint 23-char runs); pass
-    min_shared=1 for the strict single-window guarantee at the price of
-    more boilerplate-driven candidates.
-    """
-    from .text_analysis import winnow_fingerprints
-
-    postings = winnow_fingerprints(docs, id_col=id_col, text_col=text_col,
-                                   k=k, w=w)
-    postings = _df_capped(postings, "fp", max_df)
-    # both self-join sides read the winnowed postings — persist so the
-    # per-gram md5 pass (and the df-cap) runs once
-    postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-    left = postings.select(F.col(id_col).alias("a"), "fp")
-    right = postings.select(F.col(id_col).alias("b"), "fp")
-    return (
-        left.join(right, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-
-
-def sql_winnow_near_dup_pairs(
-    table: str = "documents",
-    min_shared: int = 2,
-    max_df: int | None = 64,
-    k: int = 16,
-    w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB mirror of winnow_near_dup_pairs (identical fingerprint
-    selection, df-cap, and pair counting)."""
-    from .text_analysis import sql_winnow_fingerprints
-
-    fps = sql_winnow_fingerprints(table, id_col=id_col, text_col=text_col,
-                                  k=k, w=w)
-    cap = _sql_df_cap("fp", max_df)
-    return f"""
-WITH postings0 AS ({fps}),
-{cap}
-pairs AS (
-  SELECT l.{id_col} AS a, r.{id_col} AS b, count(*) AS n_shared
-  FROM postings l JOIN postings r
-    ON l.fp = r.fp AND l.{id_col} < r.{id_col}
-  GROUP BY l.{id_col}, r.{id_col})
-SELECT a, b, n_shared FROM pairs WHERE n_shared >= {min_shared}
-"""
 
 
 # ---------------------------------------------------------------------------

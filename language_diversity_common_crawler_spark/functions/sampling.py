@@ -41,9 +41,6 @@ from .text_analysis import with_text_stats
 
 DEFAULT_SOURCE_CAP = 10
 
-# Output columns of source_balanced_sample (shared with the oracle builder).
-_BALANCED_COLS = ("doc_id", "source", "lang", "quality_score", "sample_rank")
-
 
 def source_balanced_sample(
     df: DataFrame, cap: int = DEFAULT_SOURCE_CAP
@@ -277,134 +274,6 @@ WHERE ({bucket}) < r.rate_bp
 """
 
 # ---------------------------------------------------------------------------
-# DSIR-style hashed-unigram importance weights
-# ---------------------------------------------------------------------------
-
-DSIR_BUCKETS = 256
-DSIR_TARGET_LANG = "en"
-
-
-def dsir_weights(
-    docs: DataFrame,
-    target_lang: str = DSIR_TARGET_LANG,
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Data Selection via Importance Resampling (Xie et al. 2023) weights:
-    hashed-unigram bag-of-words importance of each document toward a
-    target domain (here: the corpus's ``lang = target_lang`` slice, so the
-    oracle can compute the identical target distribution).
-
-    Per document: sum over tokens of
-    ``log2(p_target[bucket] / p_raw[bucket])`` with add-one smoothing,
-    bucket = 60-bit md5 of the token mod ``n_buckets``.
-
-    Scale shape: BOTH feature distributions are ``n_buckets`` rows —
-    independent of corpus size — built by ONE bucket-keyed hash aggregate
-    over the exploded token stream (the target count is a conditional sum
-    in the same pass; map-side partials collapse to n_buckets rows per
-    task). The weight
-    table broadcasts; the per-doc pass is Generate → broadcast-join →
-    one doc_id aggregate. No corpus-sized shuffle except the doc_id agg.
-
-    Oracle-determinism: per-bucket weights quantize to exact BIGINT millis
-    BEFORE the per-doc sum (same grid-boundary contract as
-    quality_rules.unigram_lm_score); the final average uses floor(double)
-    because sums can be negative (Spark div truncates toward zero,
-    DuckDB // floors)."""
-    from .dedup import tokens_expr
-
-    tok = docs.select(
-        "doc_id", "lang", F.expr(tokens_expr("text", "spark")).alias("toks")
-    )
-    t = tok.select(
-        "doc_id", "lang", F.explode("toks").alias("tok")
-    ).filter(F.col("tok") != "")
-    t = t.withColumn(
-        "bucket", F.expr(sql_md5_60_tok("spark")) % F.lit(n_buckets)
-    )
-    # both distributions in ONE pass over the token stream: a conditional
-    # count inside the same bucket-keyed aggregate replaces a second
-    # scan+explode+aggregate and the left join that merged them
-    dist = t.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("r_cnt"),
-        F.sum(
-            F.when(F.col("lang") == target_lang, 1).otherwise(0)
-        ).alias("t_cnt"),
-    )
-    totals = dist.agg(
-        F.sum("r_cnt").alias("r_tot"), F.sum("t_cnt").alias("t_tot")
-    )
-    w = dist.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.expr(
-            f"CAST(round(1000.0 * log2("
-            f"(CAST(t_cnt + 1 AS DOUBLE) / CAST(t_tot + {n_buckets} AS DOUBLE))"
-            f" / "
-            f"(CAST(r_cnt + 1 AS DOUBLE) / CAST(r_tot + {n_buckets} AS DOUBLE))"
-            f")) AS BIGINT)"
-        ).alias("w_milli"),
-    )
-    agg = (
-        t.join(F.broadcast(w), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("w_milli").cast("bigint").alias("dsir_milli_sum"),
-        )
-    )
-    return agg.withColumn(
-        "avg_dsir_milli",
-        F.expr(
-            "CAST(floor(CAST(dsir_milli_sum AS DOUBLE) / n_tokens) AS BIGINT)"
-        ),
-    )
-
-
-def sql_md5_60_tok(dialect: str) -> str:
-    """60-bit md5 of the ``tok`` column (shared Spark/DuckDB recipe)."""
-    from .hashing import sql_md5_60
-
-    return sql_md5_60("tok", dialect)
-
-
-def sql_dsir_weights(
-    table: str,
-    target_lang: str = DSIR_TARGET_LANG,
-    n_buckets: int = DSIR_BUCKETS,
-) -> str:
-    """DuckDB twin of :func:`dsir_weights`."""
-    from .dedup import tokens_expr
-
-    return f"""
-WITH tok AS (
-  SELECT doc_id, lang, unnest({tokens_expr('text', 'duckdb')}) AS tok
-  FROM {table}),
-t AS (SELECT doc_id, lang, tok, {sql_md5_60_tok('duckdb')} % {n_buckets}
-        AS bucket
-      FROM tok WHERE tok <> ''),
-dist AS (SELECT bucket, count(*) AS r_cnt,
-                sum(CASE WHEN lang = '{target_lang}' THEN 1 ELSE 0 END)
-                  AS t_cnt
-         FROM t GROUP BY bucket),
-tot AS (SELECT sum(r_cnt) AS r_tot, sum(t_cnt) AS t_tot FROM dist),
-w AS (
-  SELECT bucket,
-         CAST(round(1000.0 * log2(
-           (CAST(t_cnt + 1 AS DOUBLE) / CAST(t_tot + {n_buckets} AS DOUBLE))
-           /
-           (CAST(r_cnt + 1 AS DOUBLE) / CAST(r_tot + {n_buckets} AS DOUBLE))
-         )) AS BIGINT) AS w_milli
-  FROM dist, tot)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(w_milli) AS BIGINT) AS dsir_milli_sum,
-       CAST(floor(CAST(sum(w_milli) AS DOUBLE) / count(*)) AS BIGINT)
-         AS avg_dsir_milli
-FROM t JOIN w USING (bucket)
-GROUP BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # token-budget-thresholded corpus selection (no global sort)
 # ---------------------------------------------------------------------------
 
@@ -535,7 +404,7 @@ def lang_deficit_budget(
     total ≲ 2*10^8 docs. Spark wraps silently past it while DuckDB
     raises, so the engines diverge DIFFERENTLY, not just wrongly. The
     documented scale dial (same convention as
-    ``stats.quality_length_moments`` / ``label_centroid_similarity``):
+    ``stats.quality_length_moments``):
     once total approaches 2^31/√n_langs, quantize the deficit down by a
     fixed power-of-two divisor — ``deficit DIV 2^q`` with
     q = ceil(log2(n_langs·total²/2^62)) — before the cnt·deficit

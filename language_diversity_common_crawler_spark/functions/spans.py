@@ -274,8 +274,8 @@ def duplicated_span_removal_strided(
     only offset-differences divisible by stride (at stride=k only the
     grid-aligned case survives, i.e. the base operator). There is no
     stride that is both cheaper than 1 and offset-independent — that
-    trade needs content-defined sampling (see winnow_fingerprints,
-    text_analysis.py), which detects but cannot bound what to REMOVE.
+    trade needs content-defined sampling (MOSS-style window minima), which
+    detects but cannot bound what to REMOVE.
 
     Precision: at stride < k only FULL k-token windows are hashed (plus
     the whole-doc window for sub-k docs) — clamped tail windows would

@@ -121,194 +121,6 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.drop("__norm", "__pad")
 
 
-def token_hash_expr(toks: str, dialect: str) -> str:
-    """60-bit md5 per token over a token-array column — the ONE expensive
-    pass; simhash bit-sums derive from this array with integer ops only."""
-    h = sql_md5_60("t", dialect)
-    fn = "list_transform" if dialect == "duckdb" else "transform"
-    return f"{fn}({toks}, t -> {h})"
-
-
-SIMHASH_BITS = 60  # md5-60 native width; fits a signed BIGINT in both engines
-# 8 bands (4x8-bit + 4x7-bit) — pigeonhole: a pair with hamming <= 7 differs
-# in at most 7 bands, so at least one of the 8 matches exactly.
-SIMHASH_BAND_OFFSETS = [0, 8, 16, 24, 32, 39, 46, 53]
-SIMHASH_BAND_WIDTHS = [8, 8, 8, 8, 7, 7, 7, 7]
-
-
-def simhash60_from_hashes(th: str, dialect: str) -> str:
-    """60-bit SimHash from a token-hash-array column.
-
-    Spark path: ONE traversal of the token-hash array builds the 60
-    per-bit counts (aggregate with an array accumulator + zip_with), then
-    one cheap pass turns counts into the fingerprint — O(tokens * 60) work
-    with a single array iteration, no per-bit re-traversal. DuckDB (oracle,
-    sf0.01 only) uses the simple per-bit list_sum formula; values are
-    identical (+1/-1 vote per bit, fingerprint bit set iff sum > 0).
-    """
-    n = SIMHASH_BITS
-    if dialect == "duckdb":
-        bits = []
-        for b in range(n):
-            bits.append(
-                f"(CASE WHEN list_sum(list_transform({th}, "
-                f"h -> CASE WHEN (h >> {b}) % 2 = 1 THEN 1 ELSE -1 END)) > 0 "
-                f"THEN (1::BIGINT << {b}) ELSE 0 END)"
-            )
-        return "CAST(" + " + ".join(bits) + " AS BIGINT)"
-    counts = (
-        f"aggregate({th}, transform(sequence(0, {n - 1}), "
-        f"b -> CAST(0 AS BIGINT)), "
-        f"(acc, h) -> zip_with(acc, sequence(0, {n - 1}), "
-        f"(c, b) -> c + (CASE WHEN (h >> b) % 2 = 1 THEN 1 ELSE -1 END)))"
-    )
-    # coalesce: NULL text propagates a NULL array through the aggregates,
-    # but the DuckDB per-bit formula sums 60 CASE..ELSE 0 branches to 0 —
-    # pin the Spark value to the same 0 fingerprint
-    return (
-        f"coalesce(aggregate(zip_with({counts}, sequence(0, {n - 1}), "
-        f"(c, b) -> CASE WHEN c > 0 THEN shiftleft(CAST(1 AS BIGINT), "
-        f"CAST(b AS INT)) ELSE CAST(0 AS BIGINT) END), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x), CAST(0 AS BIGINT))"
-    )
-
-
-def simhash60(df: DataFrame, text_col: str = "text",
-              out_col: str = "simhash60") -> DataFrame:
-    """Spark: staged simhash — norm, token array, token-hash array each
-    materialized once (Spark lambdas get no CSE), then the single-pass
-    count/fingerprint aggregate."""
-    norm = _sql_norm(text_col, "spark")
-    out = (
-        df.withColumn("__toks", F.expr(f"split({norm}, ' ')"))
-        .withColumn("__th", F.expr(token_hash_expr("__toks", "spark")))
-        .withColumn(out_col, F.expr(simhash60_from_hashes("__th", "spark")))
-    )
-    return out.drop("__toks", "__th")
-
-
-def simhash60_exprs(text: str, dialect: str) -> str:
-    """60-bit SimHash over tokens, identical in Spark SQL and DuckDB.
-
-    Token hash = md5-60; bit b contributes +1 if set else -1; simhash bit b
-    is 1 iff the sum is > 0. Unnest-free: computed with higher-order array
-    functions on the token array (JVM-side in Spark, list ops in DuckDB).
-    """
-    norm = _sql_norm(text, dialect)
-    split_fn = "string_split" if dialect == "duckdb" else "split"
-    th = token_hash_expr(f"{split_fn}({norm}, ' ')", dialect)
-    return simhash60_from_hashes(th, dialect)
-
-
-# --- winnowing (rolling-hash document fingerprints) -------------------------
-# Schleimer/Wilkerson/Aiken '03 (MOSS): hash every char k-gram of the
-# normalized text, slide a w-window over the hash sequence, keep each
-# window's minimum — guarantees any shared substring of length >= k + w - 1
-# between two documents yields a shared fingerprint, with ~2/(w+1) of the
-# grams selected. The reference computes no fingerprinting (this is a
-# training-data-pipeline extension); expressed as pure dialect-shared SQL
-# so the hot path is whole-stage-codegen'd JVM work — a shuffle-free map
-# that scales linearly with corpus bytes.
-WINNOW_K = 8  # char-gram length
-WINNOW_W = 4  # winnowing window (in grams)
-
-
-def _winnow_gram_hash(gram: str, dialect: str) -> str:
-    return sql_md5_60(gram, dialect)
-
-
-def winnow_hashes_expr(norm: str, dialect: str, k: int = WINNOW_K) -> str:
-    """Array of k-gram rolling hashes over an already-normalized,
-    ALREADY-LOWERCASED column reference — lowercase in the projection that
-    materializes ``norm``, never here: a lower() inside the per-gram
-    lambda would re-lowercase the whole string for every gram (no CSE in
-    lambda bodies → O(len²) character work per document).
-    Explicit empty-array guard: Spark's sequence(1, 0) produces a
-    DESCENDING [1, 0] (not empty), DuckDB's generate_series(1, 0) is empty
-    — the CASE keeps both engines at [] for short/NULL text."""
-    if dialect == "duckdb":
-        gram = f"substring({norm}, i, {k})"
-        h = _winnow_gram_hash(gram, dialect)
-        return (
-            f"CASE WHEN {norm} IS NULL OR length({norm}) < {k} THEN []::BIGINT[] "
-            f"ELSE list_transform(generate_series(1, length({norm}) - {k - 1}), "
-            f"i -> {h}) END"
-        )
-    gram = f"substring({norm}, CAST(i AS INT), {k})"
-    h = _winnow_gram_hash(gram, dialect)
-    return (
-        f"CASE WHEN {norm} IS NULL OR length({norm}) < {k} "
-        f"THEN CAST(array() AS ARRAY<BIGINT>) "
-        f"ELSE transform(sequence(1, length({norm}) - {k - 1}), i -> {h}) END"
-    )
-
-
-def winnow_select_expr(hashes: str, dialect: str, w: int = WINNOW_W) -> str:
-    """Distinct window minima over a HASH-ARRAY COLUMN reference (pass a
-    materialized column, not the hash expression — lambda bodies get no
-    CSE, so inlining would recompute the md5 array per window). Fewer than
-    ``w`` grams → the single global minimum (every non-empty doc gets at
-    least one fingerprint, per the paper's boundary rule)."""
-    if dialect == "duckdb":
-        win_min = f"list_min(({hashes})[i:i + {w - 1}])"
-        return (
-            f"CASE WHEN len({hashes}) = 0 THEN []::BIGINT[] "
-            f"WHEN len({hashes}) < {w} THEN [list_min({hashes})] "
-            f"ELSE list_distinct(list_transform("
-            f"generate_series(1, len({hashes}) - {w - 1}), i -> {win_min})) END"
-        )
-    win_min = f"array_min(slice({hashes}, CAST(i AS INT), {w}))"
-    return (
-        f"CASE WHEN size({hashes}) = 0 THEN CAST(array() AS ARRAY<BIGINT>) "
-        f"WHEN size({hashes}) < {w} THEN array(array_min({hashes})) "
-        f"ELSE array_distinct(transform("
-        f"sequence(1, size({hashes}) - {w - 1}), i -> {win_min})) END"
-    )
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
-    """(id, fp) — one row per selected winnowing fingerprint. Staged so the
-    lowercased norm and the k-gram hash array each materialize once per
-    row."""
-    norm = df.select(
-        F.col(id_col),
-        F.expr(f"lower({_sql_norm(text_col, 'spark')})").alias("__norm"),
-    )
-    hashed = norm.select(
-        id_col,
-        F.expr(winnow_hashes_expr("__norm", "spark", k)).alias("__wh"),
-    )
-    return hashed.select(
-        F.col(id_col),
-        F.explode(
-            F.expr(winnow_select_expr("__wh", "spark", w))
-        ).alias("fp"),
-    )
-
-
-def sql_winnow_fingerprints(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> str:
-    norm = _sql_norm(text_col, "duckdb")
-    hashes = winnow_hashes_expr("__norm", "duckdb", k)
-    sel = winnow_select_expr("__wh", "duckdb", w)
-    return f"""
-WITH n AS (SELECT {id_col}, lower({norm}) AS __norm FROM {table}),
-h AS (SELECT {id_col}, {hashes} AS __wh FROM n)
-SELECT {id_col}, unnest({sel}) AS fp FROM h
-"""
-
-
 # ---------------------------------------------------------------------------
 # fixed-window document chunking (context-window packing prep)
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
-"""Exact inverted-index n-gram Jaccard dedup: cross-engine parity, df-cap
-semantics, and ground-truth Jaccard values on hand-built documents."""
+"""Kept dedup chain on hand-built documents: verified shingle Jaccard
+(ground-truth values, NULL / empty / short docs, cross-engine parity) and
+eval-set decontamination."""
 
 from __future__ import annotations
 
@@ -27,83 +28,49 @@ def duck():
     return con
 
 
-def _spark_pairs(spark, **kw):
+def _spark_pairs(spark, min_jaccard_bp):
+    """Verified Jaccard over EVERY id pair as the candidate list (the
+    LSH stage skipped), so each hand-built case reaches verification."""
     df = spark.createDataFrame(ROWS, "doc_id bigint, text string")
-    out = dedup.ngram_jaccard_pairs(df, **kw)
+    ids = df.select("doc_id")
+    pairs = ids.alias("l").crossJoin(ids.alias("r")).filter(
+        "l.doc_id < r.doc_id"
+    ).selectExpr("l.doc_id AS a", "r.doc_id AS b")
+    out = dedup.jaccard_verified_pairs(df, pairs, min_jaccard_bp)
     return {(r["a"], r["b"]): r["jaccard_bp"] for r in out.collect()}
 
 
-def _duck_pairs(duck, **kw):
-    sql = dedup.sql_ngram_jaccard_pairs("documents", **kw)
+_ALL_PAIRS_SQL = (
+    "SELECT l.doc_id AS a, r.doc_id AS b FROM documents l "
+    "JOIN documents r ON l.doc_id < r.doc_id"
+)
+
+
+def _duck_pairs(duck, min_jaccard_bp):
+    sql = dedup.sql_jaccard_verified_pairs(_ALL_PAIRS_SQL, min_jaccard_bp)
     return {(a, b): j for a, b, j in duck.execute(sql).fetchall()}
 
 
 def test_ground_truth_values(spark):
     """Docs 1/3 are identical (7 shingles each → jaccard 10000); docs 1/2
-    share 6 of 8 distinct shingles (6/8 = 7500 bp); doc 4 shares nothing;
-    docs 5-7 have no shingles and never pair."""
-    got = _spark_pairs(spark, min_jaccard_bp=0)
+    and 2/3 share 6 of 8 distinct shingles (6/8 = 7500 bp); doc 4 shares
+    nothing; docs 5-7 have no shingles, score 0 and never pass a positive
+    threshold."""
+    got = _spark_pairs(spark, 0)
     assert got[(1, 3)] == 10000
     assert got[(1, 2)] == 7500
     assert got[(2, 3)] == 7500
-    assert not any(4 in p or 5 in p or 6 in p or 7 in p for p in got)
-
-
-def test_cross_engine_parity(spark, duck):
-    for kw in ({"min_jaccard_bp": 0}, {"min_jaccard_bp": 7600},
-               {"min_jaccard_bp": 0, "max_df": 2}):
-        assert _spark_pairs(spark, **kw) == _duck_pairs(duck, **kw), kw
-
-
-def test_df_cap_prunes_hot_shingles(spark, duck):
-    """max_df=2 drops every shingle shared by docs 1, 2 AND 3 (df=3),
-    leaving only the df<=2 shingle space: 1/3 still agree on their
-    remaining shingles (identical sets → 10000), 1/2 keep only their
-    differing tails."""
-    capped = _spark_pairs(spark, min_jaccard_bp=0, max_df=2)
-    uncapped = _spark_pairs(spark, min_jaccard_bp=0)
-    assert capped == _duck_pairs(duck, min_jaccard_bp=0, max_df=2)
-    assert capped[(1, 3)] == 10000
-    # the shared 7-shingle core has df=3 and is gone; 1 and 2 now share
-    # nothing in the capped space, so the pair disappears entirely
-    assert (1, 2) not in capped and (1, 2) in uncapped
+    assert all(j == 0 for p, j in got.items() if {4, 5, 6, 7} & set(p))
+    assert set(_spark_pairs(spark, 1)) == {(1, 2), (1, 3), (2, 3)}
 
 
 def test_threshold_filters(spark):
-    got = _spark_pairs(spark, min_jaccard_bp=8000)
-    assert set(got) == {(1, 3)}
+    assert set(_spark_pairs(spark, 8000)) == {(1, 3)}
 
 
-def test_winnow_near_dup_pairs_parity_and_detection(spark):
-    """Docs sharing a long passage (>= k + w - 1 chars) are paired; both
-    engines agree row-for-row; unrelated docs are absent."""
-    import duckdb
-
-    from language_diversity_common_crawler_spark.functions import dedup
-
-    passage = ("the quick brown fox jumps over the lazy dog while the "
-               "band plays on through the long night")
-    rows = [
-        (1, "intro text alpha " + passage + " closing remarks one"),
-        (2, "different opening " + passage + " other ending"),
-        (3, "totally unrelated content about maritime navigation signals"),
-        (4, None),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = sorted(
-        (r["a"], r["b"], r["n_shared"])
-        for r in dedup.winnow_near_dup_pairs(df, min_shared=2).collect()
-    )
-    con = duckdb.connect()
-    con.execute("CREATE TABLE wnd(doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO wnd VALUES (?, ?)", rows)
-    want = sorted(con.execute(
-        dedup.sql_winnow_near_dup_pairs("wnd", min_shared=2)).fetchall())
-    assert got == want
-    pair_ids = {(a, b) for a, b, _ in got}
-    assert (1, 2) in pair_ids
-    assert all(3 not in p and 4 not in p and 5 not in p for p in pair_ids)
+def test_cross_engine_parity(spark, duck):
+    for min_bp in (0, 1, 7500, 7600):
+        assert _spark_pairs(spark, min_bp) == _duck_pairs(duck, min_bp), min_bp
 
 
 def test_decontaminate_flags_planted_overlap(spark):

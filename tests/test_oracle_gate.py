@@ -36,6 +36,12 @@ def test_registration_requires_an_oracle():
         entrymod._query(entrymod.lang_histogram.__wrapped__)
 
 
+def test_bench_headline_names_registered_keys():
+    import bench
+
+    assert set(bench.HEADLINE) <= set(QUERIES)
+
+
 @pytest.fixture(scope="module")
 def oracles():
     return entrymod.oracle_sql()

@@ -219,19 +219,6 @@ def test_span_removal_dup_join_broadcasts_and_prunes(spark):
         assert "lang" not in read and "source" not in read, s
 
 
-def test_dsir_weight_table_broadcasts(spark):
-    """The 256-row weight table must broadcast onto the token stream;
-    the only corpus-sized hash exchange is the doc_id aggregate (bucket
-    aggregates collapse to n_buckets rows map-side)."""
-    from language_diversity_common_crawler_spark.functions import sampling
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = sampling.dsir_weights(docs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_budget_selection_window_is_post_aggregate(spark):
     """budget_threshold_selection's window must run over the (lang, score)
     aggregate, never the corpus: in the plan tree the Window node's

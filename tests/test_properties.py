@@ -117,51 +117,6 @@ def test_robots_longest_match(disallow, allow, path):
     assert got == (max_dis == 0 or max_alw >= max_dis)
 
 
-def _simhash_bands(fp: int) -> list[int]:
-    from language_diversity_common_crawler_spark.functions.text_analysis import (
-        SIMHASH_BAND_OFFSETS,
-        SIMHASH_BAND_WIDTHS,
-    )
-
-    return [
-        (fp >> off) & ((1 << w) - 1)
-        for off, w in zip(SIMHASH_BAND_OFFSETS, SIMHASH_BAND_WIDTHS)
-    ]
-
-
-def test_simhash_bands_cover_all_bits_disjointly():
-    """The 8 band slices partition exactly bits 0..59 — no gap (a differing
-    bit outside every band would break the pigeonhole recall guarantee) and
-    no overlap (which would waste fingerprint entropy)."""
-    from language_diversity_common_crawler_spark.functions.text_analysis import (
-        SIMHASH_BAND_OFFSETS,
-        SIMHASH_BAND_WIDTHS,
-        SIMHASH_BITS,
-    )
-
-    covered = []
-    for off, w in zip(SIMHASH_BAND_OFFSETS, SIMHASH_BAND_WIDTHS):
-        covered.extend(range(off, off + w))
-    assert sorted(covered) == list(range(SIMHASH_BITS))
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.integers(min_value=0, max_value=(1 << 60) - 1),
-    st.sets(st.integers(min_value=0, max_value=59), max_size=7),
-)
-def test_simhash_banding_pigeonhole_recall(fp, flip_bits):
-    """Any pair at hamming <= 7 shares at least one exact band (8 bands,
-    <= 7 differing bits → pigeonhole), so the banded self-join in
-    dedup.simhash_near_dup_pairs has FULL recall up to max_hamming=7."""
-    other = fp
-    for b in flip_bits:
-        other ^= 1 << b
-    assert any(
-        x == y for x, y in zip(_simhash_bands(fp), _simhash_bands(other))
-    )
-
-
 def test_robots_parse_multi_group():
     body = (
         "User-agent: googlebot\nDisallow: /g/\n\n"

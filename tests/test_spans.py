@@ -1,12 +1,12 @@
 """Duplicated-span operators (functions/spans.py) + the sampling.py
-round-2 additions (DSIR weights, budget-threshold selection).
+budget-threshold selection.
 
 Covers: span-grid semantics vs a plain-Python reference (including the
 clamped last span and the empty-text single-empty-span edge), removal
 semantics on a hand-built corpus with known duplicated spans, the
 all-spans-removed doc keeping its row with clean_text='', incremental
-contamination's newest-vs-history split, DSIR weight sign sanity, and
-budget selection's per-language budget invariant.
+contamination's newest-vs-history split, and budget selection's
+per-language budget invariant.
 """
 
 from __future__ import annotations
@@ -121,26 +121,6 @@ def test_incremental_contamination_vs_python(spark):
            for s in _py_spans(t)}
     new1 = {py_md5_60(s) for s in _py_spans(CORPUS[1][1])}
     assert len(new1 & old) == out[1]
-
-
-def test_dsir_weights_target_docs_score_higher(spark):
-    """Docs of the target domain must average a higher importance weight
-    than non-target docs (that's the point of DSIR); totals must match
-    token counts."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    w = sampling.dsir_weights(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    rows = w.collect()
-    assert len(rows) == docs.filter(F.trim("text") != "").count()
-    en = [r["avg_dsir_milli"] for r in rows if r["lang"] == "en"]
-    rest = [r["avg_dsir_milli"] for r in rows if r["lang"] != "en"]
-    assert en and rest
-    assert sum(en) / len(en) > sum(rest) / len(rest)
-    for r in rows:
-        assert r["avg_dsir_milli"] == math.floor(
-            r["dsir_milli_sum"] / r["n_tokens"]
-        )
 
 
 def test_budget_selection_respects_budget(spark):

@@ -1,148 +1,7 @@
-"""Cross-engine value parity for the text-analysis expressions on edge
-inputs the driver tables don't currently contain (NULL / empty text)."""
+"""Text-analysis operators: fixed-window document chunking (overlap, tail,
+coverage, shuffle-free plan) and the quality/length moments report."""
 
 from __future__ import annotations
-
-import duckdb
-import pytest
-
-from language_diversity_common_crawler_spark.functions import text_analysis as ta
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
-    con.execute(
-        "INSERT INTO documents VALUES (1,'hello world'),(2,NULL),(3,''),"
-        "(4,'a'),(5,'  spaced   out  ')"
-    )
-    return con
-
-
-def test_simhash60_null_and_empty_parity(spark, duck):
-    """NULL text must fingerprint to 0 in BOTH engines (the Spark
-    single-pass aggregate would otherwise propagate NULL while DuckDB's
-    per-bit CASE sum yields 0)."""
-    rows = [(1, "hello world"), (2, None), (3, ""), (4, "a"),
-            (5, "  spaced   out  ")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        r["doc_id"]: r["simhash60"]
-        for r in ta.simhash60(df).select("doc_id", "simhash60").collect()
-    }
-    want = dict(
-        duck.execute(
-            f"SELECT doc_id, {ta.simhash60_exprs('text', 'duckdb')} AS s "
-            "FROM documents"
-        ).fetchall()
-    )
-    assert got == want
-    assert got[2] == 0
-
-
-def test_simhash60_inline_equals_staged(spark):
-    """The staged Spark builder and the inline dialect-shared expression
-    produce identical fingerprints (oracle-generation invariant)."""
-    from pyspark.sql import functions as F
-
-    rows = [(i, t) for i, t in enumerate(
-        ["one two three", "one two three four", "", None, "x y z x y z"]
-    )]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    staged = {r["doc_id"]: r["simhash60"]
-              for r in ta.simhash60(df).collect()}
-    inline = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id", F.expr(ta.simhash60_exprs("text", "spark")).alias("s")
-        ).collect()
-    }
-    assert staged == inline
-
-
-def test_winnow_guarantee_shared_substring(spark):
-    """MOSS guarantee: two documents sharing a substring of length
-    >= k + w - 1 (after norm) must share at least one fingerprint."""
-    k, w = ta.WINNOW_K, ta.WINNOW_W
-    shared = "the quick brown fox jumps over it"[: k + w - 1]
-    assert len(shared) >= k + w - 1
-    rows = [(1, "PREFIX aaaa " + shared + " zz suffix one"),
-            (2, "completely different head " + shared + " other tail")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    fps = ta.winnow_fingerprints(df).collect()
-    s1 = {r["fp"] for r in fps if r["doc_id"] == 1}
-    s2 = {r["fp"] for r in fps if r["doc_id"] == 2}
-    assert s1 & s2
-
-
-def test_winnow_boundaries_and_duckdb_parity(spark, duck):
-    """NULL / empty / shorter-than-k / between-k-and-k+w texts hit every
-    CASE branch; both engines agree row-for-row."""
-    k = ta.WINNOW_K
-    rows = [(1, "hello world"), (2, None), (3, ""), (4, "a" * (k - 1)),
-            (5, "b" * k), (6, "exact gram here"), (7, "  spaced   out  ")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = sorted((r["doc_id"], r["fp"])
-                 for r in ta.winnow_fingerprints(df).collect())
-    duck.execute("CREATE OR REPLACE TABLE wdocs(doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO wdocs VALUES (?, ?)", rows)
-    want = sorted(duck.execute(
-        ta.sql_winnow_fingerprints("wdocs")).fetchall())
-    assert got == want
-    by_id = {}
-    for d, fp in got:
-        by_id.setdefault(d, set()).add(fp)
-    assert 2 not in by_id and 3 not in by_id and 4 not in by_id
-    assert len(by_id[5]) == 1  # single gram -> one global minimum
-
-
-def _py_winnow(text, k=None, w=None):
-    """Independent pure-Python mirror of the winnowing selection (norm ->
-    lower -> k-gram md5-60 hashes -> distinct w-window minima) used to
-    cross-check the two SQL implementations' index arithmetic."""
-    import hashlib
-    import re
-
-    k = k if k is not None else ta.WINNOW_K
-    w = w if w is not None else ta.WINNOW_W
-    if text is None:
-        return set()
-    norm = re.sub(r"\s+", " ", text.strip()).lower()
-    if len(norm) < k:
-        return set()
-    hashes = [
-        int(hashlib.md5(norm[i:i + k].encode()).hexdigest()[:15], 16)
-        for i in range(len(norm) - k + 1)
-    ]
-    if len(hashes) < w:
-        return {min(hashes)}
-    return {min(hashes[i:i + w]) for i in range(len(hashes) - w + 1)}
-
-
-def test_winnow_three_way_parity_on_random_corpus(spark, duck):
-    """Spark, DuckDB, and an independent pure-Python winnower agree on a
-    seeded random ASCII corpus (lengths straddling every CASE boundary)."""
-    import random
-
-    rng = random.Random(1234)
-    alphabet = "abcdefgh XY.,-"
-    rows = [
-        (i, "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40))))
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got_spark = {}
-    for r in ta.winnow_fingerprints(df).collect():
-        got_spark.setdefault(r["doc_id"], set()).add(r["fp"])
-    duck.execute("CREATE OR REPLACE TABLE wrand(doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO wrand VALUES (?, ?)", rows)
-    got_duck = {}
-    for d, fp in duck.execute(ta.sql_winnow_fingerprints("wrand")).fetchall():
-        got_duck.setdefault(d, set()).add(fp)
-    want = {i: _py_winnow(t) for i, t in rows if _py_winnow(t)}
-    assert got_spark == want
-    assert got_duck == want
 
 
 def test_document_chunks_overlap_and_tail(spark):
