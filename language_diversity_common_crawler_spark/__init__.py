@@ -19,4 +19,10 @@ Everything is DataFrame-declarative; heavy text functions are Arrow-vectorized
 pandas UDFs (no per-row Python), per BASELINE.json input_hint.
 """
 
+from . import pyworker
+
+# every Python worker imports the package for its first task: from then on
+# its per-task importlib.invalidate_caches() skips unchanged zip archives
+pyworker.install()
+
 __version__ = "0.1.0"

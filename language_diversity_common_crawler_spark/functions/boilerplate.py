@@ -105,5 +105,3 @@ def html2text_udf(content: Column | str) -> Column:
     c = F.col(content) if isinstance(content, str) else content
     return _UDF(c)
 
-
-text_col = html2text_udf

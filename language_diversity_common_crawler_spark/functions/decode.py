@@ -121,5 +121,3 @@ def decode_udf(html: Column | str, charset: Column | str) -> Column:
     c = F.col(charset) if isinstance(charset, str) else charset
     return _UDF(h, c)
 
-
-decoded_col = decode_udf

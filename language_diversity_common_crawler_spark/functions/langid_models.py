@@ -6,7 +6,8 @@ reference's ``Base.identify(content) -> {'lang','precision'}`` strategy
 interface (/root/reference/src/strategies/language_identification/base.py:4-18).
 
 The model fan-out (L5, language_identification_handler.py:32-37) is three
-``withColumn`` calls — column-parallel, one Arrow hop each, no row loop.
+UDF columns added in one ``withColumns`` — column-parallel, one Arrow hop
+each, no row loop.
 L4 unknown-normalization is applied inside the UDFs (outputs are final).
 
 If the real libraries (resiliparse/langid/pycld2) are importable we delegate
@@ -87,7 +88,6 @@ def _predict_real(model: str, text: pd.Series) -> pd.DataFrame:  # pragma: no co
     return pd.DataFrame({"lang": langs, "precision": precs})
 
 
-detect_fast_udf = None  # populated lazily (UDF creation needs no session but keep import cheap)
 _UDF_CACHE: dict[str, object] = {}
 
 
@@ -98,17 +98,18 @@ def model_udf(model: str):
 
 
 def with_model_predictions(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """L5 fan-out: add df_lang/df_prec, li_lang/li_prec, cld_lang/cld_prec."""
-    prefixes = langspec.MODEL_PREFIX
-    out = df
+    """L5 fan-out: add df_lang/df_prec, li_lang/li_prec, cld_lang/cld_prec.
+
+    One ``withColumns`` per step (the structs, then their fields) instead
+    of a ``withColumn`` per column: PySpark analyses the plan again after
+    each call, and the optimized plan is the same either way."""
+    structs, fields = {}, {}
     for model in langspec.MODELS:
-        p = prefixes[model]
-        struct_col = model_udf(model)(F.col(text_col))
-        out = out.withColumn(f"_{p}", struct_col)
-        out = out.withColumn(f"{p}_lang", F.col(f"_{p}.lang"))
-        out = out.withColumn(f"{p}_prec", F.col(f"_{p}.precision"))
-        out = out.drop(f"_{p}")
-    return out
+        p = langspec.MODEL_PREFIX[model]
+        structs[f"_{p}"] = model_udf(model)(F.col(text_col))
+        fields[f"{p}_lang"] = F.col(f"_{p}.lang")
+        fields[f"{p}_prec"] = F.col(f"_{p}.precision")
+    return df.withColumns(structs).withColumns(fields).drop(*structs)
 
 
 def prediction_struct(model: str, text_col: str | Column = "text") -> Column:

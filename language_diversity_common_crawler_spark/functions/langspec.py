@@ -103,9 +103,6 @@ MODEL_MARKERS: dict[str, dict[str, list[str]]] = {
 # expression is identical in Java regex (Spark), RE2 (DuckDB) and Python.
 CONTROL_RE = r"[\x00-\x1F\x7F]"
 
-FALLBACK = {"detect_fast": "unknown", "langid": "en", "cld2": "un"}
-
-
 def real_models_available() -> bool:
     """True iff the reference's actual model libraries are importable.
     Deliberately NOT cached: the delegation tests flip availability by

@@ -1,4 +1,4 @@
-"""W1/W2/W4 — the reference's sinks.
+"""W1/W2 — the reference's text sinks.
 
 W1: 8-column pipe-delimited log, header + one row per record
 (/root/reference/src/repos/file_repo.py:27-34):
@@ -14,11 +14,10 @@ text log is a PARITY ARTIFACT for golden tests — written deterministically
 ordered. The reference's 100-record buffered flush (repo_handler.py:57-63)
 maps to columnar batch writes / snapshot commits and needs no emulation.
 
-W2: end-of-run stats files (file_repo.py:35-38) — formatted from the
-single-row stats aggregates, reproducing stats/accuracy.py:41-52,
-unknown.py:30-41, performance.py:30-41 (trailing spaces included).
-
-W4: JSON dataset dump (experiments/cc_fastwarc.py:125-129) — df.write.json.
+W2: the text of the accuracy and unknown stats files (file_repo.py:35-38)
+— formatted from the single-row ``accuracy_stats``/``unknown_stats``
+aggregates, reproducing stats/accuracy.py:41-52 and unknown.py:30-41. The
+W4 JSON dataset dump is the ``experiment_dataset`` query's projection.
 """
 
 from __future__ import annotations
@@ -102,28 +101,3 @@ def format_unknown(row) -> str:
         f"{row['unknown_df'] * 100 / s}% {row['unknown_li'] * 100 / s}% "
         f"{row['unknown_cld'] * 100 / s}%\n"
     )
-
-
-def format_performance(df_s: float, li_s: float, cld_s: float, size: int) -> str:
-    """stats/performance.py:30-41 format (trailing space preserved)."""
-    return f"{df_s / size} {li_s / size} {cld_s / size} \n"
-
-
-def write_stats_files(acc_row, unk_row, out_dir: str, seg: str,
-                      perf=(0.0, 0.0, 0.0)) -> None:
-    """W2 — logs/{seg}_{stat}.log triplet (file_repo.py:35-38)."""
-    os.makedirs(out_dir, exist_ok=True)
-    with open(f"{out_dir}/{seg}_accuracy.log", "w", encoding="utf-8") as f:
-        f.write(format_accuracy(acc_row))
-    with open(f"{out_dir}/{seg}_unknown.log", "w", encoding="utf-8") as f:
-        f.write(format_unknown(unk_row))
-    with open(f"{out_dir}/{seg}_performance.log", "w", encoding="utf-8") as f:
-        f.write(format_performance(*perf, size=acc_row["size"]))
-
-
-def write_json_dataset(preds: DataFrame, path: str) -> None:
-    """W4 — experiments dataset {uri, id, lang, len} as JSON lines
-    (the distributed analogue of the indented-array dump)."""
-    preds.select(
-        "uri", "id", F.col("df_lang").alias("lang"), "len"
-    ).write.mode("overwrite").json(path)

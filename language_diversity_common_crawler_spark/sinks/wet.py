@@ -35,8 +35,6 @@ from pyspark.sql import DataFrame
 
 WET_MANIFEST_SCHEMA = "path string, n_records bigint, n_bytes bigint"
 
-_SOFTWARE = "language-diversity-spark-wet/1.0"
-
 
 def wet_record_bytes(
     url: str, warc_ts, text: str, refers_to: str | None = None

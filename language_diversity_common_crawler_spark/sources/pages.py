@@ -207,12 +207,3 @@ def write_golden_extract_parquet(path: str, n: int, seed: int = 42) -> str:
     pq.write_table(pa.table(cols), tmp)
     os.replace(tmp, path)
     return path
-
-
-def write_pages(spark, path: str, n: int, seed: int = 42,
-                partition_by_segment: bool = True) -> None:
-    df = pages_df(spark, n, seed)
-    w = df.write.mode("overwrite")
-    if partition_by_segment:
-        w = w.partitionBy("segment")
-    w.parquet(path)

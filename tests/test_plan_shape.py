@@ -7,9 +7,22 @@ assertion."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from language_diversity_common_crawler_spark.functions.boilerplate import (
+    html2text_udf,
+)
+from language_diversity_common_crawler_spark.functions.decode import decode_udf
+from language_diversity_common_crawler_spark.functions.langid_models import (
+    model_udf,
+)
+from language_diversity_common_crawler_spark.functions.langspec import (
+    MODEL_PREFIX,
+    MODELS,
+)
 from language_diversity_common_crawler_spark.plans.pipeline import (
     extract_pipeline,
 )
@@ -128,6 +141,63 @@ def test_extract_decodes_exactly_once(spark):
     # the early drop survives: a Filter sits between the two UDF stages
     decode_pos = plan.rindex("ArrowEvalPython")
     assert "Filter isnotnull" in plan[:decode_pos]
+
+
+def _sequential_extract(df, parity):
+    """The extract chain as one withColumn/drop per column: the reference
+    form of extract_pipeline's and with_model_predictions' withColumns."""
+    df = df.withColumn(
+        "content_decoded", decode_udf(F.col("html"), F.col("http_charset"))
+    )
+    df = df.filter(F.col("content_decoded").isNotNull())
+    df = df.withColumn("content", html2text_udf(F.col("content_decoded")))
+    if parity:
+        meta = F.lit(None).cast("string")
+    else:
+        meta = F.coalesce(
+            F.nullif(F.regexp_extract(
+                F.col("content_decoded"),
+                '<meta name="language" content="([^"]*)"', 1), F.lit("")),
+            F.nullif(F.regexp_extract(
+                F.col("content_decoded"), '<html lang="([^"]*)"', 1),
+                F.lit("")),
+            F.lit("-"),
+        )
+    df = (
+        df.withColumn("meta", meta)
+        .withColumn("http_header", F.coalesce(
+            F.element_at(F.split(F.col("accept_language"), ","), 1),
+            F.lit("-")))
+        .withColumn("uri", F.col("url"))
+        .withColumn("id", F.col("warc_record_id"))
+        .withColumn("len", F.col("content_length"))
+    )
+    for model in MODELS:
+        p = MODEL_PREFIX[model]
+        df = df.withColumn(f"_{p}", model_udf(model)(F.col("content")))
+        df = df.withColumn(f"{p}_lang", F.col(f"_{p}.lang"))
+        df = df.withColumn(f"{p}_prec", F.col(f"_{p}.precision"))
+        df = df.drop(f"_{p}")
+    return df
+
+
+@pytest.mark.parametrize("parity", [True, False])
+def test_extract_plan_same_as_one_withcolumn_per_column(spark, parity):
+    """extract_pipeline adds its columns with a few withColumns calls; its
+    optimized plan (expression ids aside) and output columns are the ones
+    of the one-withColumn-per-column chain."""
+    src = pages.pages_df(spark, 20, seed=5, n_partitions=2)
+
+    def plan(df):
+        # expression ids and the numbering of generated common-expression
+        # aliases depend on how many expressions were analysed before
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"(#|_common_expr_)\d+", r"\1N", text)
+
+    got = extract_pipeline(src, parity=parity)
+    want = _sequential_extract(src, parity)
+    assert got.columns == want.columns
+    assert plan(got) == plan(want)
 
 
 def test_no_query_duplicates_model_udf_evaluation(spark):
