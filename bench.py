@@ -15,24 +15,37 @@ The headline set covers every layer of the engine:
     lang-ID, SURVEY.md §3.1),
   - training-data ops (MinHash-LSH dedup, span removal, decontamination),
   - the frontier (north rule): canonicalize -> seen anti-join -> robots
-    broadcast join -> per-host politeness schedule, plus a full crawl round
-    with bloom-filter URL-seen probe.
+    broadcast join -> per-host politeness schedule, plus one production
+    crawl round (``frontier_round``).
 
-Extra fields beyond the contract: ``frontier_urls_per_sec`` (frontier URLs
-scheduled/sec in the crawl-round benchmark) and ``extract_rows_per_sec``
-(extracted-text rows/sec), the two throughput numbers BASELINE.json's metric
-names. Scaling efficiency across parallelism levels is measured separately by
-``tools/scaling_bench.py`` and recorded in BASELINE.md.
+Extra fields beyond the contract, the two throughputs BASELINE.json's
+metric names:
+
+- ``frontier_urls_per_sec``: frontier URLs scheduled per second of one
+  production crawl round (``crawl.run_round``, round 1 of a crawl seeded
+  from the orders-derived URLs), ``frontier_urls_scheduled`` /
+  ``queries.frontier_crawl_round``. ``frontier_in_per_sec`` is the same
+  round's frontier URLs in (round 0's ``n_frontier``) per second.
+- ``extract_rows_per_sec``: extracted-text rows per second of the extract
+  pipeline over ``EXTRACT_PAGES`` synthetic pages.
+
+The work is fixed, whatever ``SPARK_GRAFT_CPUS`` is, so runs on different
+core counts compare like with like; ``cpus``, ``frontier_budget`` and
+``extract_pages`` ride in the JSON line. Scaling efficiency across
+parallelism levels is measured separately by ``tools/scaling_bench.py``
+and recorded in BASELINE.md.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,17 +60,19 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "360"))
 _T_START = time.monotonic()
+# Fixed work sizes. EXTRACT_PAGES is the page count every run on <= 7 cpus
+# used before the sizes were pinned. The seeds' 50 hosts at FRONTIER_BUDGET
+# slots each schedule 30,000 URLs at sf0.1 (~3,000 seeds per host).
+EXTRACT_PAGES = 24_000
+FRONTIER_BUDGET = 600
 
 
-def _timed_best(thunk, spark=None, repin=None):
+def _timed_best(thunk, spark=None):
     """Min wall time of ``thunk()`` over REPS runs (capability estimate).
     With ``spark`` given, the SQL cache is cleared before each rep so
-    internally-persisted relations don't hand later reps a warm hit;
-    ``repin`` (one persisted input DataFrame or a dependency-ordered list
-    of them) is re-materialized after the clear, OUTSIDE the timing —
-    inputs stay table-resident, intermediates never leak across reps. Reps after the first are skipped once the
-    whole-bench BUDGET_SEC is exhausted. Returns (last_result,
-    best_seconds)."""
+    internally-persisted relations don't hand later reps a warm hit. Reps
+    after the first are skipped once the whole-bench BUDGET_SEC is
+    exhausted. Returns (last_result, best_seconds)."""
     best = float("inf")
     result = None
     for i in range(REPS):
@@ -65,13 +80,6 @@ def _timed_best(thunk, spark=None, repin=None):
             break
         if spark is not None:
             spark.catalog.clearCache()
-            for df in ([repin] if repin is not None and not isinstance(repin, (list, tuple)) else (repin or [])):
-                # clearCache() drops the persist MARKER too, not just the
-                # cached blocks — without re-persisting, count() scans
-                # without caching and the timed round recomputes the whole
-                # input-synthesis chain (measured 70-110s vs ~3s per round)
-                df.persist(StorageLevel.MEMORY_AND_DISK)
-                df.count()
         t0 = time.perf_counter()
         result = thunk()
         best = min(best, time.perf_counter() - t0)
@@ -119,8 +127,6 @@ def _extract_over_parquet(spark, n_pages: int) -> tuple[int, float]:
     """Time the extract pipeline over a parquet pages table (pre-written
     once, cached in /tmp) — measures the pipeline, not driver-side row
     generation."""
-    from pyspark.sql import functions as F
-
     from language_diversity_common_crawler_spark.plans.pipeline import (
         extract_pipeline,
     )
@@ -151,6 +157,62 @@ def _extract_over_parquet(spark, n_pages: int) -> tuple[int, float]:
         lambda: int(out.agg(*aggs).collect()[0]["n"])
     )
     return n, best
+
+
+def robots_rules(spark, sf_dir: str):
+    """Robots rules of the seed hosts, one per nation row: every third host
+    disallows ``/o/1``, the others ``/private/``."""
+    from language_diversity_common_crawler_spark.frontier import robots
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    return robots.rules_from_bodies(nation.select(
+        F.concat(F.lit("host"), F.col("n_nationkey").cast("string"),
+                 F.lit(".example.com")).alias("host"),
+        F.concat(
+            F.lit("User-agent: *\nDisallow: "),
+            F.when(F.col("n_nationkey") % 3 == 0, F.lit("/o/1"))
+            .otherwise(F.lit("/private/")),
+        ).alias("robots_txt"),
+    ))
+
+
+def frontier_round(spark, sf_dir: str, work: str):
+    """Time the production crawl round, ``crawl.run_round``: round 1 of a
+    crawl seeded with the orders-derived URLs the ``frontier_*`` queries
+    use, under ``robots_rules``, ``FRONTIER_BUDGET`` slots per host.
+
+    Round 0 is committed once under ``work/round0``, untimed, and its seen
+    set compacted, so the round anti-joins the bucketed seen table as a
+    long crawl's does. The warm-up round and each timed rep run on their
+    own copy of that checkpoint, all made before the timer starts, so
+    every rep times the same round. Returns ([(frontier URLs in,
+    URLs scheduled)] per timed rep, read from the rep's manifests; best
+    seconds)."""
+    import __spark_entry__ as entrymod
+    from language_diversity_common_crawler_spark.frontier import crawl
+
+    src = os.path.join(work, "round0")
+    crawl.init_crawl(
+        spark, entrymod._seeds_df(spark, sf_dir).select("url_canon", "host"),
+        src)
+    crawl.ParquetStateBackend(spark, src).compact_seen(0)
+    copies = [shutil.copytree(src, os.path.join(work, f"rep{i}"))
+              for i in range(REPS + 1)]
+    rules = robots_rules(spark, sf_dir)
+
+    def run(ckpt):
+        crawl.run_round(spark, ckpt, budget=FRONTIER_BUDGET, rules=rules)
+        return ckpt
+
+    run(copies.pop())  # warm-up: the JVM's first run of the round's code
+    done = []
+    _, best = _timed_best(lambda: done.append(run(copies.pop())),
+                          spark=spark)
+    return [
+        (crawl.read_manifest(spark, c, 0)["n_frontier"],
+         crawl.read_manifest(spark, c, 1)["n_scheduled"])
+        for c in done
+    ], best
 
 
 def main() -> None:
@@ -194,46 +256,17 @@ def main() -> None:
         )
         timings[name] = round(best, 4)
 
-    # Frontier crawl round: canonicalize + bloom-seen probe + robots +
-    # politeness schedule over the orders-derived seed list; throughput in
-    # frontier URLs scheduled per second. The seed list is replicated to
-    # ~40k URLs per core so the timing measures data throughput, not
-    # fixed stage overhead on near-empty partitions.
-    from language_diversity_common_crawler_spark.frontier import crawl
+    work = tempfile.mkdtemp(prefix="bench_frontier_")
+    try:
+        runs, dt = frontier_round(spark, SF_DIR, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    n_in, n_scheduled = runs[-1]
+    dt = timings["frontier_crawl_round"] = round(dt, 4)
 
-    n_orders = 150_000 if "0.1" in SF_DIR else 15_000
-    mult = max(1, -(-CPUS * 40_000 // n_orders))
-    # seed URL synthesis is data generation, not engine work — a real
-    # crawl reads its frontier from a table; likewise the URL-seen state
-    # (pre_seen + bloom) is READ from the previous round's commit, not
-    # rebuilt inside the round. Materialize both once (untimed), re-pin
-    # after each rep's cache clear (also untimed).
-    n_seeds, seeds_raw = crawl.bench_seeds(spark, SF_DIR, mult)
-    state = crawl.bench_state(spark, SF_DIR, mult, seeds_raw=seeds_raw)
-    # warm at the SAME mult (same plan shape): the crossJoin-expanded plan
-    # codegen-compiles differently from mult=1, and the regex-heavy
-    # canonicalize compile dwarfs a steady-state run
-    crawl.bench_round(spark, SF_DIR, mult=mult, seeds_raw=seeds_raw,
-                      n_seeds=n_seeds, state=state)
-    (_, n_scheduled), dt = _timed_best(
-        lambda: crawl.bench_round(spark, SF_DIR, mult=mult,
-                                  seeds_raw=seeds_raw, n_seeds=n_seeds,
-                                  state=state),
-        spark=spark, repin=[seeds_raw, *state],
-    )
-    timings["frontier_crawl_round"] = round(dt, 4)
-    frontier_urls_per_sec = round(n_seeds / dt, 1)
-
-    # Extract throughput: the full decode -> boilerplate -> 3-model chain
-    # over a parquet pages table. Sized to the parallelism (>=3.2k
-    # pages/core, >=100k at local[32]): at the raw sf0.1 table size (24k
-    # rows over 32 cores) fixed stage/Arrow overhead dominates the timing
-    # and the rows/sec number stops tracking engine throughput.
-    n_extract = max(24000 if "0.1" in SF_DIR else 2000, CPUS * 3200)
-    n_rows_ex, dt_ex = _extract_over_parquet(spark, n_extract)
-    timings["pages_extract_pipeline"] = round(dt_ex, 4)
+    n_rows_ex, dt_ex = _extract_over_parquet(spark, EXTRACT_PAGES)
+    dt_ex = timings["pages_extract_pipeline"] = round(dt_ex, 4)
     row_counts["pages_extract_pipeline"] = n_rows_ex
-    extract_rows_per_sec = round(n_rows_ex / dt_ex, 1)
 
     total = round(sum(timings.values()), 4)
     # North-rule evidence rider: the latest two-parallelism-level scaling
@@ -255,10 +288,14 @@ def main() -> None:
                 "queries": timings,
                 "sf": _sf_of(SF_DIR),
                 "cpus": CPUS,
+                "frontier_budget": FRONTIER_BUDGET,
+                "extract_pages": EXTRACT_PAGES,
                 "rows": row_counts,
-                "frontier_urls_per_sec": frontier_urls_per_sec,
+                "frontier_urls_per_sec": round(n_scheduled / dt, 1),
                 "frontier_urls_scheduled": n_scheduled,
-                "extract_rows_per_sec": extract_rows_per_sec,
+                "frontier_in_per_sec": round(n_in / dt, 1),
+                "frontier_urls_in": n_in,
+                "extract_rows_per_sec": round(n_rows_ex / dt_ex, 1),
                 "timing": (
                     f"min of up to {REPS} runs per query within a "
                     f"{BUDGET_SEC:.0f}s total budget (noisy-box capability "

@@ -45,6 +45,10 @@ Everything that determines crawl order is a pure function of the data
 or wall clock — so the distributed rounds reproduce the sequential oracle's
 crawl order and URL-seen set exactly (tests/test_frontier.py).
 
+``run_round`` is the only round body. The benchmarks (``bench.py``,
+``tools/scaling_bench.py``, perfbench's ``crawl`` workload) time it on a
+committed round-0 checkpoint, one fresh copy per timed round.
+
 The reference has no frontier (it fetches one hardcoded segment,
 /root/reference/main.py:85-87); this is the BASELINE.json extension.
 """
@@ -54,7 +58,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -468,6 +471,10 @@ def run_round(
     ``filter`` surface, which ``init_crawl`` and each round write (through
     ``_commit_bloom``) before their manifest.
 
+    A parquet checkpoint is plain files, so a copy of it under another
+    path resumes the same round: the compacted seen table re-registers
+    itself from its marker under the copy's path (``read_seen_split``).
+
     ``compact_every``: rewrite the seen-delta log into a url_canon-bucketed
     table every N rounds (None disables). Against the bucketed table the
     exact anti-join has NO exchange on the (10^10-row) seen side; only the
@@ -566,115 +573,3 @@ def crawl_order(spark: SparkSession, ckpt) -> DataFrame:
     return df.select("round", "host", "slot", "url_canon", "priority").orderBy(
         "round", "host", "slot"
     )
-
-
-# ---------------------------------------------------------------------------
-# benchmark entry (bench.py)
-# ---------------------------------------------------------------------------
-
-def bench_seeds(spark: SparkSession, sf_dir: str, mult: int = 1):
-    """(n_seeds, persisted raw-seed DataFrame) for bench_round: the
-    orders-derived synthetic URL list, materialized OUTSIDE the timed
-    round. URL string synthesis is data generation, not engine work — a
-    real crawl reads its frontier from a table — and timing it inside the
-    round contaminates the bandwidth profile (BASELINE.md job-v2 note).
-    Callers re-pin with ``.count()`` after any ``clearCache()``."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # repartition the small side BEFORE expansion + the regex-heavy
-    # canonicalize map: the orders file is a single small parquet split,
-    # which would otherwise serialize the whole map into one task
-    par = spark.sparkContext.defaultParallelism * 2
-    base = orders.select("o_orderkey", "o_custkey").repartition(par)
-    n_orders = orders.count()  # parquet footer metadata — no data scan
-    if mult > 1:
-        reps = spark.range(mult).select(F.col("id").alias("rep"))
-        base = base.crossJoin(F.broadcast(reps)).select(
-            (F.col("o_orderkey") * mult + F.col("rep")).alias("o_orderkey"),
-            (F.col("o_custkey") + F.col("rep")).alias("o_custkey"),
-        )
-    raw = base.select(
-        F.col("o_orderkey").alias("seed_id"),
-        F.expr(urlgen.synthetic_url_expr("spark")).alias("url_raw"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    raw.count()
-    return n_orders * mult, raw
-
-
-def bench_state(spark: SparkSession, sf_dir: str, mult: int = 1,
-                seeds_raw=None):
-    """(pre_seen, bloom) persisted — the committed URL-seen state a real
-    round READS (run_round: st.read(prev, 'bloom_words') / read_seen_split);
-    building it belongs to the prior round's commit, not to the round
-    being timed. bench.py materializes this once, untimed, and re-pins it
-    after each cache clear."""
-    if seeds_raw is None:
-        _, seeds_raw = bench_seeds(spark, sf_dir, mult)
-    seeds = urlgen.with_canonical(seeds_raw).select("seed_id", "url_canon",
-                                                    "host")
-    pre_seen = (
-        seeds.filter(F.col("seed_id") % 3 == 0)
-        .select("url_canon")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # words (probe-form) state, as a crawl commit writes it — the timed
-    # round probes this directly (seen.probe_bloom_jvm), no conversion
-    bloom = seen.bloom_words(
-        seen.build_bloom(seen.with_url_hashes(pre_seen, n_parts=N_PARTS))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    pre_seen.count()
-    bloom.count()
-    return pre_seen, bloom
-
-
-def bench_round(
-    spark: SparkSession, sf_dir: str, budget: int = 3, mult: int = 1,
-    seeds_raw=None, n_seeds: int | None = None, state=None,
-) -> tuple[int, int]:
-    """One full in-memory frontier round over orders-derived seeds:
-    canonicalize -> hash -> bloom-probe vs a pre-seen third of the seeds ->
-    exact anti-join -> robots broadcast filter -> two-phase politeness
-    schedule. Returns (n_seed_urls, n_scheduled).
-
-    ``mult`` replicates the seed list (distinct URLs per replica) so the
-    measured round carries enough rows per task at high parallelism —
-    bench.py sizes it to the core count; without it a small sf puts only
-    hundreds of rows per task and the timing measures stage overhead, not
-    the engine. Pass ``seeds_raw``/``n_seeds`` (from bench_seeds) and
-    ``state`` (from bench_state) so the timed round reads materialized
-    inputs — URL synthesis is data generation and the seen state is read
-    from the previous commit in a real round; timing either contaminates
-    the round."""
-    if seeds_raw is None:
-        n_seeds, seeds_raw = bench_seeds(spark, sf_dir, mult)
-    # url-only projection: host is re-derived after the unseen chain
-    # (filter_unseen slim path — the dedup exchange carries just the URL)
-    seeds = urlgen.with_canonical(seeds_raw).select("url_canon")
-
-    if state is None:
-        state = bench_state(spark, sf_dir, mult, seeds_raw=seeds_raw)
-    pre_seen, bloom = state
-    cand = seen.with_url_hashes(seeds, n_parts=N_PARTS)
-    fresh = seen.filter_unseen(
-        cand, pre_seen, bloom=bloom, dedupe=True
-    ).select(
-        "url_canon", urlgen.host_of_canon("url_canon").alias("host")
-    )
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    robots_bodies = nation.select(
-        F.concat(
-            F.lit("host"), F.col("n_nationkey").cast("string"), F.lit(".example.com")
-        ).alias("host"),
-        F.concat(
-            F.lit("User-agent: *\nDisallow: "),
-            F.when(F.col("n_nationkey") % 3 == 0, F.lit("/o/1")).otherwise(
-                F.lit("/private/")
-            ),
-        ).alias("robots_txt"),
-    )
-    rules = robots_mod.rules_from_bodies(robots_bodies)
-    allowed = robots_mod.filter_allowed(fresh, rules)
-
-    sched = scheduler.politeness_schedule(allowed, budget)
-    n_scheduled = sched.count()
-    return n_seeds, n_scheduled

@@ -10,10 +10,9 @@ codegen and the three UDF stages into Arrow passes; the early
 further work.
 
 Parity quirks honored (SURVEY.md §7.3):
-- #1 ``meta`` is always NULL in parity mode: the reference's override drops
-  the return value (warc_extraction.py:60-74) AND extraction runs after
-  boilerplate removal (main.py:29), so there is never a tag to parse. The
-  corrected column (``meta_lang_fixed``) is kept separately.
+- #1 ``meta`` is always NULL: the reference's override drops the return
+  value (warc_extraction.py:60-74) AND extraction runs after boilerplate
+  removal (main.py:29), so there is never a tag to parse.
 - #2/#3 are handled in langid_models / operators.stats.
 
 Scale notes: decode+html2text UDFs are the dominant cost and are pure map
@@ -54,7 +53,6 @@ from ..functions.langid_models import with_model_predictions
 def extract_pipeline(
     pages: DataFrame,
     size: int | None = None,
-    parity: bool = True,
     segment: str | None = None,
 ) -> DataFrame:
     """pages → decoded/extracted/identified predictions DataFrame.
@@ -80,35 +78,14 @@ def extract_pipeline(
     # P2 boilerplate removal → the reference's `content`
     df = df.withColumn("content", html2text_udf(F.col("content_decoded")))
 
-    # P3-P7 extraction (extraction_handler.py:22-26)
-    if parity:
-        meta = F.lit(None).cast("string")  # quirk #1
-    else:
-        meta = F.coalesce(
-            F.nullif(
-                F.regexp_extract(
-                    F.col("content_decoded"),
-                    '<meta name="language" content="([^"]*)"',
-                    1,
-                ),
-                F.lit(""),
-            ),
-            F.nullif(
-                F.regexp_extract(F.col("content_decoded"), '<html lang="([^"]*)"', 1),
-                F.lit(""),
-            ),
-            F.lit("-"),
-        )
-    # One withColumns, not one withColumn per column: PySpark analyses the
-    # whole plan again after every withColumn/drop. Building this plan and
-    # a select of its outputs took 76-85 ms min, 93-113 ms median (of 30,
-    # two runs, driver, 4-core box) with one call per column and 53-59 /
-    # 71-77 ms this way; the optimized plan is the same (pinned by
-    # tests/test_plan_shape.py). `content` stays its own step: in one
-    # projection with the non-parity `meta`, the optimizer places meta's
-    # common sub-expression elsewhere (same rows, another plan).
+    # P3-P7 extraction (extraction_handler.py:22-26). One withColumns, not
+    # one withColumn per column: PySpark analyses the whole plan again
+    # after every withColumn/drop. Building this plan and a select of its
+    # outputs took 76-85 ms min, 93-113 ms median (of 30, two runs, driver,
+    # 4-core box) with one call per column and 53-59 / 71-77 ms this way;
+    # the optimized plan is the same (pinned by tests/test_plan_shape.py).
     df = df.withColumns({
-        "meta": meta,
+        "meta": F.lit(None).cast("string"),  # quirk #1
         "http_header": F.coalesce(
             F.element_at(F.split(F.col("accept_language"), ","), 1), F.lit("-")
         ),

@@ -143,7 +143,7 @@ def test_extract_decodes_exactly_once(spark):
     assert "Filter isnotnull" in plan[:decode_pos]
 
 
-def _sequential_extract(df, parity):
+def _sequential_extract(df):
     """The extract chain as one withColumn/drop per column: the reference
     form of extract_pipeline's and with_model_predictions' withColumns."""
     df = df.withColumn(
@@ -151,20 +151,8 @@ def _sequential_extract(df, parity):
     )
     df = df.filter(F.col("content_decoded").isNotNull())
     df = df.withColumn("content", html2text_udf(F.col("content_decoded")))
-    if parity:
-        meta = F.lit(None).cast("string")
-    else:
-        meta = F.coalesce(
-            F.nullif(F.regexp_extract(
-                F.col("content_decoded"),
-                '<meta name="language" content="([^"]*)"', 1), F.lit("")),
-            F.nullif(F.regexp_extract(
-                F.col("content_decoded"), '<html lang="([^"]*)"', 1),
-                F.lit("")),
-            F.lit("-"),
-        )
     df = (
-        df.withColumn("meta", meta)
+        df.withColumn("meta", F.lit(None).cast("string"))
         .withColumn("http_header", F.coalesce(
             F.element_at(F.split(F.col("accept_language"), ","), 1),
             F.lit("-")))
@@ -181,8 +169,7 @@ def _sequential_extract(df, parity):
     return df
 
 
-@pytest.mark.parametrize("parity", [True, False])
-def test_extract_plan_same_as_one_withcolumn_per_column(spark, parity):
+def test_extract_plan_same_as_one_withcolumn_per_column(spark):
     """extract_pipeline adds its columns with a few withColumns calls; its
     optimized plan (expression ids aside) and output columns are the ones
     of the one-withColumn-per-column chain."""
@@ -194,8 +181,8 @@ def test_extract_plan_same_as_one_withcolumn_per_column(spark, parity):
         text = df._jdf.queryExecution().optimizedPlan().toString()
         return re.sub(r"(#|_common_expr_)\d+", r"\1N", text)
 
-    got = extract_pipeline(src, parity=parity)
-    want = _sequential_extract(src, parity)
+    got = extract_pipeline(src)
+    want = _sequential_extract(src)
     assert got.columns == want.columns
     assert plan(got) == plan(want)
 

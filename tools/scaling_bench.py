@@ -3,24 +3,26 @@
 
 BASELINE.json requires throughput scaling efficiency >= 0.8 from N to 4N
 executors. No real cluster exists in this sandbox, so (per BASELINE.md §
-protocol) we run the IDENTICAL jobs at two local parallelism levels —
-default local[8] vs local[32] — on the same input and report throughput at
-both plus efficiency = (thr_4N / thr_N) / 4.
+protocol) we run the IDENTICAL jobs at two local parallelism levels
+(``--levels``, default local[2] vs local[8]) on the same input and report
+throughput at both plus efficiency = (thr_4N / thr_N) / 4.
 
 Jobs measured (the two throughputs BASELINE.json's metric names):
-  - frontier: canonicalize + bloom-seen probe + exact anti-join + robots
-    broadcast filter + two-phase politeness schedule over orders-derived
-    seed URLs (replicated x MULT for enough work per core) →
-    frontier URLs scheduled+fetch-slots assigned / sec
+  - frontier: the production crawl round, ``crawl.run_round``, as
+    ``bench.py`` times it with every count x MULT: round 0 is committed
+    once, untimed (``init_crawl`` over the orders-derived seed URLs
+    replicated x MULT, then ``compact_seen(0)``), and each rep runs round 1
+    on its own copy of that checkpoint, made before timing →
+    frontier URLs scheduled / sec
   - extract: decode → boilerplate → 3 lang-ID models over a pre-generated
     synthetic pages parquet → extracted-text rows / sec
 
 Each child process warms the JVM/Arrow path first, then times the job; the
 parent compares the two levels and rewrites the "## Scaling" section of
-BASELINE.md.
+BASELINE.md and SCALING.json.
 
-Usage:  python tools/scaling_bench.py            # parent: runs 8 and 32
-        python tools/scaling_bench.py --update-baseline
+Usage:  python tools/scaling_bench.py --levels 1,4
+        python tools/scaling_bench.py --levels 1,4 --update-baseline
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -38,13 +41,9 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PAGES_PATH = "/tmp/scaling_pages_parquet"
 N_PAGES = 300000
-# seed-URL replication factor (orders sf0.1 x40 = 6M URLs). Sized so the
-# 8-core round is ~15s of mostly WORK: with the whole-stage-codegen jvm
-# probe the round's per-URL cost halved, and at 3M units the ~1.2s of
-# fixed per-round cost (filter geometry read, broadcast build, stage
-# barriers) alone capped the measurable efficiency near 0.77 — the same
-# overhead-vs-work sizing already applied to the map job and the extract
-# corpus.
+# seed-URL replication factor (orders sf0.1 x40 = 6M URLs in round 0, and
+# bench.py's per-host budget x40 = 1.2M URLs scheduled): enough rows per
+# task that the round's ~18 jobs of fixed cost do not dominate the timing.
 MULT = int(os.environ.get("SCALING_MULT", "40"))
 # The map stage is pure codegen compute — at 3M units it finishes in <2s on
 # 8 cores, so ~0.4s of fixed job/stage overhead alone caps its measurable
@@ -80,9 +79,9 @@ def _gen_pages_once() -> None:
 
 
 # versioned: the prep-once guard only checks existence, so a state-SHAPE
-# change (v6: bucketed pre_seen table) must land in a fresh directory or
-# stale plain-parquet state from an older protocol would be measured
-STATE_DIR = "/tmp/scaling_state_v8"
+# change must land in a fresh directory or stale state from an older
+# protocol would be measured
+STATE_DIR = "/tmp/scaling_state_v9"
 
 
 def _code_fingerprint() -> str:
@@ -111,12 +110,15 @@ def _code_fingerprint() -> str:
     # projection — the round's big exchange carries only the URL string;
     # v8 probes the committed words-form filter state (STATE_DIR/
     # bloom_words, what crawl.run_round now reads) through the
-    # whole-stage-codegen jvm probe instead of the Arrow paths
-    h.update(b"job-v8")
+    # whole-stage-codegen jvm probe instead of the Arrow paths;
+    # v9 times the production round, crawl.run_round, on a copy of a
+    # committed round-0 checkpoint instead of the hand-built in-memory chain
+    h.update(b"job-v9")
     pkg = os.path.join(REPO, "language_diversity_common_crawler_spark")
     for rel in (
         "frontier/urlgen.py", "frontier/seen.py", "frontier/scheduler.py",
-        "frontier/robots.py", "functions/decode.py",
+        "frontier/robots.py", "frontier/crawl.py", "frontier/fsio.py",
+        "functions/decode.py",
         "functions/boilerplate.py", "functions/langid_models.py",
         "functions/langspec.py", "functions/hashing.py", "session.py",
         "plans/pipeline.py",
@@ -163,7 +165,7 @@ _SEED_CACHE: dict = {}
 
 
 def _cached_seeds(spark, mult: int):
-    """The frontier jobs' INPUT: (seed_id, url_raw) materialized into a
+    """The map job's INPUT: (seed_id, url_raw) materialized into a
     persisted DataFrame (built during warm-up, partitioned 2x the level's
     cores). A real crawl reads its frontier from a table — URL string
     SYNTHESIS is data generation, not engine work, and it is string-concat
@@ -180,118 +182,36 @@ def _cached_seeds(spark, mult: int):
     return _SEED_CACHE[key]
 
 
-def _prep_state_once(mult: int) -> None:
-    """Untimed: materialize the 'already-seen' state (exact set + bloom) a
-    real crawl reads from its snapshot tables — not part of the measured
-    round."""
-    if os.path.isdir(f"{STATE_DIR}/bloom"):
-        return
-    from pyspark.sql import functions as F
-
-    from language_diversity_common_crawler_spark.frontier import crawl, seen, urlgen
+def _round0(mult: int) -> str:
+    """The frontier round's input: round 0 of a crawl over the x mult seed
+    URLs, committed and its seen set compacted (untimed, once per mult) —
+    the committed state a real round reads."""
+    ckpt = f"{STATE_DIR}/round0_x{mult}"
+    if os.path.exists(f"{ckpt}/MANIFEST-0000.json"):
+        return ckpt
+    from language_diversity_common_crawler_spark.frontier import crawl, urlgen
     from language_diversity_common_crawler_spark.session import get_spark
 
+    shutil.rmtree(ckpt, ignore_errors=True)
     spark = get_spark("scaling-prep", cpus=8)
     seeds = urlgen.with_canonical(_raw_seeds(spark, mult))
-    pre = seeds.filter(F.col("seed_id") % 3 == 0).select("url_canon")
-    # production shape: the exact seen set a real round anti-joins is the
-    # url_canon-bucketed+sorted compacted table (crawl.compact_seen), not
-    # plain parquet — bucketing keeps the 10^10-row side exchange-free.
-    # repartition by the bucket column first: bucket id and shuffle
-    # partition use the same murmur3 hash, so each task holds exactly one
-    # bucket and the table lands as PRE_SEEN_BUCKETS files, not tasks x
-    # buckets small files.
-    spark.sql(f"DROP TABLE IF EXISTS {PRE_SEEN_TABLE}")
-    (
-        pre.repartition(PRE_SEEN_BUCKETS, F.col("url_canon"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(PRE_SEEN_BUCKETS, "url_canon")
-        .sortBy("url_canon")
-        .option("path", f"{STATE_DIR}/pre_seen")
-        .saveAsTable(PRE_SEEN_TABLE)
-    )
-    pre = spark.table(PRE_SEEN_TABLE)
-    seen.build_bloom(
-        seen.with_url_hashes(pre, n_parts=crawl.N_PARTS)
-    ).write.mode("overwrite").parquet(f"{STATE_DIR}/bloom")
-    # probe-form (words) state, same as a crawl commit writes (crawl.py
-    # run_round) — the timed round reads THIS, as a real round does
-    seen.bloom_words(
-        spark.read.parquet(f"{STATE_DIR}/bloom")
-    ).write.mode("overwrite").parquet(f"{STATE_DIR}/bloom_words")
+    crawl.init_crawl(spark, seeds.select("url_canon", "host"), ckpt)
+    crawl.ParquetStateBackend(spark, ckpt).compact_seen(0)
     spark.stop()
+    return ckpt
 
 
-PRE_SEEN_TABLE = "ldcc_bench_pre_seen"
-PRE_SEEN_BUCKETS = 32
+def _frontier_round(spark, ckpt: str, mult: int) -> int:
+    """One timed frontier round: ``crawl.run_round`` on ``ckpt`` (a copy
+    of ``_round0``) under bench.py's robots rules and its per-host budget
+    x mult. Returns the URLs scheduled, from the round's manifest."""
+    from bench import FRONTIER_BUDGET, robots_rules
+    from language_diversity_common_crawler_spark.frontier import crawl
 
-
-def _pre_seen(spark):
-    """The pre-built exact seen set, re-registered in this session's
-    catalog from its files (same idempotent-DDL pattern crawl.py's
-    read_seen_split uses on resume — the in-memory catalog of the prep
-    session is gone by the time a child measures)."""
-    if not spark.catalog.tableExists(PRE_SEEN_TABLE):
-        spark.sql(
-            f"CREATE TABLE {PRE_SEEN_TABLE} (url_canon STRING) "
-            "USING PARQUET CLUSTERED BY (url_canon) "
-            f"SORTED BY (url_canon) INTO {PRE_SEEN_BUCKETS} BUCKETS "
-            f"LOCATION '{STATE_DIR}/pre_seen'"
-        )
-    # merge hint: this table STANDS IN for the 10^10-row production seen
-    # set, which is never broadcastable — without the hint the planner
-    # sees a few MB of parquet and picks a broadcast hash join whose
-    # serial relation build would be measured instead of the scale plan
-    # (bucketed sort-merge, big side exchange-free)
-    t = spark.table(PRE_SEEN_TABLE)
-    if os.environ.get("SCALING_PRESEEN_HINT", "merge") == "merge":
-        t = t.hint("merge")
-    return t
-
-
-def _frontier_job(spark, mult: int):
-    """One timed frontier round, single linear pass: canonicalize -> dedup
-    -> bloom probe -> exact anti-join -> robots broadcast -> politeness
-    schedule. Returns (n_urls, n_scheduled)."""
-    from pyspark.sql import functions as F
-
-    from language_diversity_common_crawler_spark.frontier import (
-        crawl,
-        robots as robots_mod,
-        scheduler,
-        seen,
-        urlgen,
-    )
-
-    # shuffle-volume discipline: the timed chain moves millions of rows
-    # through its exchanges — carry ONLY url_canon (+ the hash columns the
-    # probe needs); host is a pure function of url_canon and is re-derived
-    # AFTER the unseen chain, so no exchange ever moves it
-    seeds = urlgen.with_canonical(_cached_seeds(spark, mult)).select(
-        "url_canon"
-    )
-    pre_seen = _pre_seen(spark)
-    bloom = spark.read.parquet(f"{STATE_DIR}/bloom_words")
-    cand = seen.with_url_hashes(seeds, n_parts=crawl.N_PARTS)
-    fresh = seen.filter_unseen(
-        cand, pre_seen, bloom=bloom, dedupe=True
-    ).select(
-        "url_canon", urlgen.host_of_canon("url_canon").alias("host")
-    )
-
-    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    bodies = nation.select(
-        F.concat(F.lit("host"), F.col("n_nationkey").cast("string"),
-                 F.lit(".example.com")).alias("host"),
-        F.lit("User-agent: *\nDisallow: /o/1\n").alias("robots_txt"),
-    )
-    allowed = robots_mod.filter_allowed(
-        fresh, robots_mod.rules_from_bodies(bodies)
-    )
-    sched = scheduler.politeness_schedule(allowed, budget=200)
-    n_sched = sched.count()
-    return 150_000 * mult, n_sched
+    return crawl.run_round(
+        spark, ckpt, budget=FRONTIER_BUDGET * mult,
+        rules=robots_rules(spark, SF_DIR),
+    )["n_scheduled"]
 
 
 def _extract_job(spark):
@@ -372,15 +292,12 @@ def child(cpus: int) -> None:
     out: dict = {"cpus": cpus}
 
     def _reset_caches():
-        """Drop every cached relation EXCEPT the seed input, then re-pin
-        the seeds. filter_unseen persists its probe output and Spark's
-        CacheManager matches by logical plan — with a same-plan warm-up a
-        timed rep would silently read the probe result from cache and the
-        'frontier round' would measure only its tail. clearCache() also
-        evicts the seed input AND drops its persist marker (clearCache
-        unregisters the plan from the CacheManager; a later count() does
-        NOT re-cache — measured, same as bench.py's 93db7ba fix), so
-        re-persist + re-materialize the seeds here, outside the timing."""
+        """Drop every cached relation, then re-pin the map job's seed
+        input. filter_unseen persists its probe output and a timed rep
+        must not read a warm-up's cached relations. clearCache() also
+        evicts the seed input AND drops its persist marker (a later
+        count() does NOT re-cache — measured), so re-persist +
+        re-materialize the seeds here, outside the timing."""
         from pyspark import StorageLevel
 
         spark.catalog.clearCache()
@@ -402,13 +319,21 @@ def child(cpus: int) -> None:
         out[f"{name}_units"] = n
         out[f"{name}_per_sec"] = round(n / best, 1)
 
-    # frontier warm-ups run at FULL mult: the first call builds the cached
-    # seed input (generation excluded from timed reps) and compiles the
-    # exact plan the timed rep will run
     if "frontier" in jobs:
-        _measure("frontier", lambda: _frontier_job(spark, MULT),
-                 lambda: _frontier_job(spark, MULT)[0],
-                 reset=_reset_caches)
+        # one copy of the committed round 0 for the warm-up and each timed
+        # rep, all made before timing; each round advances its copy
+        src = _round0(MULT)
+        copies = [f"{src}_c{cpus}_{i}" for i in range(BEST_OF + 1)]
+        for c in copies:
+            shutil.rmtree(c, ignore_errors=True)
+            shutil.copytree(src, c)
+        try:
+            todo = list(copies)
+            run = lambda: _frontier_round(spark, todo.pop(), MULT)
+            _measure("frontier", run, run, reset=_reset_caches)
+        finally:
+            for c in copies:
+                shutil.rmtree(c, ignore_errors=True)
     if "frontier_map" in jobs:
         _measure("frontier_map", lambda: _frontier_map_job(spark, MAP_MULT),
                  lambda: _frontier_map_job(spark, MAP_MULT),
@@ -425,19 +350,33 @@ def child(cpus: int) -> None:
 
 
 JOB_LABELS = {
-    "frontier": "frontier round (canon+bloom+robots+schedule), urls/s",
+    "frontier": "frontier round (crawl.run_round), scheduled urls/s",
     "frontier_map": "frontier map stage (canonicalize+hash), urls/s",
     "extract": "text extract (decode+boilerplate+3 lang-ID), rows/s",
     "cpu_probe": "control: shuffle-free md5 map, rows/s",
 }
 
 
+def _protocol(lo: int, hi: int) -> str:
+    return (f"taskset-pinned local[{lo}] vs local[{hi}], same input, warm "
+            f"JVM; efficiency = median of paired per-round ratios (both "
+            f"levels run back-to-back each round, same noise regime) "
+            f"accumulated across same-code runs; vs-control = that ratio "
+            f"normalized by the SAME round's shuffle-free control ratio (the "
+            f"box's demonstrated scaling in that window — a real cluster "
+            f"gives each executor dedicated cores; this box demonstrably "
+            f"does not); throughput columns = per-level best "
+            f"(additive-noise capability estimate); frontier = one "
+            f"crawl.run_round on a fresh copy of a committed round-0 "
+            f"checkpoint ({MULT}x the orders seeds), copies made before "
+            f"timing, units = URLs scheduled")
+
+
 def parent(levels: list[int], update_baseline: bool) -> None:
-    import shutil
     import statistics
 
     _gen_pages_once()
-    _prep_state_once(MULT)
+    _round0(MULT)
     # PAIRED-ROUND MEDIANS (the BASELINE.md protocol: medians of >=3 runs
     # after warm-up). Each interleaved round runs BOTH levels back-to-back
     # under the same noise regime, so the per-round efficiency ratio is
@@ -576,19 +515,7 @@ def parent(levels: list[int], update_baseline: bool) -> None:
                                  for job in JOB_LABELS},
         "accumulated_rounds": paired,
         "accumulated_control": paired_ctl,
-        "protocol": (f"taskset-pinned local[{lo}] vs local[{hi}], same "
-                     f"input, warm JVM; efficiency = median of paired "
-                     f"per-round ratios (both levels run back-to-back each "
-                     f"round, same noise regime) accumulated across "
-                     f"same-code runs; vs-control = that ratio normalized "
-                     f"by the SAME round's shuffle-free control ratio (the "
-                     f"box's demonstrated scaling in that window — a real "
-                     f"cluster gives each executor dedicated cores; this "
-                     f"box demonstrably does not); throughput columns = "
-                     f"per-level best (additive-noise capability "
-                     f"estimate); frontier seed URLs pre-materialized into "
-                     f"a cached input during warm-up (synthesis is data "
-                     f"generation, not engine work)"),
+        "protocol": _protocol(lo, hi),
     }
     print(json.dumps(summary))
     if update_baseline:
@@ -705,19 +632,7 @@ def report_only(levels: list[int], update_baseline: bool) -> None:
         "per_round_efficiency": {},
         "accumulated_rounds": paired,
         "accumulated_control": paired_ctl,
-        "protocol": (f"taskset-pinned local[{lo}] vs local[{hi}], same "
-                     f"input, warm JVM; efficiency = median of paired "
-                     f"per-round ratios (both levels run back-to-back each "
-                     f"round, same noise regime) accumulated across "
-                     f"same-code runs; vs-control = that ratio normalized "
-                     f"by the SAME round's shuffle-free control ratio (the "
-                     f"box's demonstrated scaling in that window — a real "
-                     f"cluster gives each executor dedicated cores; this "
-                     f"box demonstrably does not); throughput columns = "
-                     f"per-level best (additive-noise capability "
-                     f"estimate); frontier seed URLs pre-materialized into "
-                     f"a cached input during warm-up (synthesis is data "
-                     f"generation, not engine work)"),
+        "protocol": _protocol(lo, hi),
     }
     print(json.dumps(summary))
     if update_baseline:
