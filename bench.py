@@ -123,6 +123,36 @@ HEADLINE = [
 ]
 
 
+# parquet files of the extract's pages table: the count the earlier
+# repartition(32) Spark write produced, so the extract scans the same splits
+PAGES_FILES = 32
+
+
+def _write_pages(spark, path: str, n_pages: int) -> None:
+    """``n_pages`` synthetic pages (seed 42) as PAGES_FILES parquet files,
+    written on the driver with pyarrow the way
+    ``pages.write_golden_extract_parquet`` writes its golden file. A Spark
+    write of the generated rows would ship them inside its tasks."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from language_diversity_common_crawler_spark.sources import pages as pg
+
+    schema = to_arrow_schema(spark.createDataFrame([], pg.PAGES_SCHEMA).schema)
+    rows = pg.generate_pages(n_pages, seed=42)
+    step = -(-n_pages // PAGES_FILES)
+    tmp = path + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    for i in range(PAGES_FILES):
+        pq.write_table(
+            pa.Table.from_pylist(rows[i * step:(i + 1) * step], schema=schema),
+            os.path.join(tmp, f"part-{i:05d}.parquet"),
+        )
+    os.replace(tmp, path)
+
+
 def _extract_over_parquet(spark, n_pages: int) -> tuple[int, float]:
     """Time the extract pipeline over a parquet pages table (pre-written
     once, cached in /tmp) — measures the pipeline, not driver-side row
@@ -130,13 +160,10 @@ def _extract_over_parquet(spark, n_pages: int) -> tuple[int, float]:
     from language_diversity_common_crawler_spark.plans.pipeline import (
         extract_pipeline,
     )
-    from language_diversity_common_crawler_spark.sources import pages as pg
 
     path = f"/tmp/bench_pages_{n_pages}"
     if not os.path.isdir(path):
-        pg.pages_df(spark, n_pages, seed=42, n_partitions=32).write.mode(
-            "overwrite"
-        ).parquet(path)
+        _write_pages(spark, path, n_pages)
     df = spark.read.parquet(path)
     out = extract_pipeline(df)
     # the aggregate must reference ALL THREE models' outputs — an agg that

@@ -29,9 +29,10 @@ the job count down, and sizes what it writes to its data:
 
 - The filter state commits as ONE uncached write of the ``filter``
   surface (``seen.commit_bloom``: one cogrouped Arrow UDF over the new
-  URLs' hashes and the previous filter). ``bloom``, ``bloom_words`` and
-  ``metrics`` are column projections of it (``SURFACE_VIEWS``), so a
-  probe scans only the ``words`` column chunks.
+  URLs' hashes and the previous filter). Each partition's bitset is
+  stored once, in the ``words`` form the probe reads, next to its
+  lineage metrics. ``bloom``, ``bloom_words`` and ``metrics`` are column
+  projections of it (``SURFACE_VIEWS``).
 - Seen-set compaction writes ``ceil(n_seen / SEEN_ROWS_PER_BUCKET)``
   buckets, one file each.
 - Every snapshot read is pinned to its surface's schema in
@@ -109,21 +110,21 @@ SURFACE_SCHEMAS = {
     "frontier": "url_canon STRING, host STRING",
     "scheduled": "host STRING, url_canon STRING, priority BIGINT, slot INT",
     "seen_delta": "url_canon STRING, host STRING, part_id INT",
-    # seen.COMMIT_SCHEMA + round: the merged bits, their probe-form words
-    # (converted once at commit so no probe pays the bits->words pass) and
-    # the per-partition lineage metrics, written in one pass
-    "filter": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
-               "n_keys BIGINT, words ARRAY<BIGINT>, n_new BIGINT, "
+    # seen.COMMIT_SCHEMA + round: the merged filter and the per-partition
+    # lineage metrics, written in one pass
+    "filter": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
+               "n_hashes INT, n_keys BIGINT, n_new BIGINT, "
                "fill_ratio DOUBLE, est_fpp DOUBLE, round INT"),
 }
 
 # Readable names that are column projections of a physical surface:
 # name -> (surface, SQL select list). Both backends' ``read`` resolve them
-# through read_surface, so a probe of ``bloom_words`` scans only the
-# ``words`` column chunks of ``filter``.
+# through read_surface, so a read of ``bloom`` skips the metric columns of
+# ``filter``. ``bloom_words``, the name the probe reads, is the same
+# projection.
 SURFACE_VIEWS = {
     "bloom": ("filter", tuple(seen.BLOOM_SCHEMA.names)),
-    "bloom_words": ("filter", tuple(seen.WORDS_SCHEMA.names)),
+    "bloom_words": ("filter", tuple(seen.BLOOM_SCHEMA.names)),
     "metrics": ("filter", ("part_id", "n_new", "n_keys AS bloom_keys",
                            "fill_ratio", "est_fpp", "round")),
 }
@@ -386,10 +387,9 @@ def read_seen(spark: SparkSession, ckpt, upto: int) -> DataFrame:
 
 def _commit_bloom(st, k: int, new_urls: DataFrame, prev: DataFrame) -> None:
     """Commit round k's filter state (seen.commit_bloom) as ONE write of
-    the ``filter`` surface: the merged bits, their probe-form words — paid
-    once here so every later probe of the snapshot skips the conversion —
-    and the per-partition lineage metrics, which ``bloom``,
-    ``bloom_words`` and ``metrics`` read back as column projections."""
+    the ``filter`` surface: the merged words and the per-partition lineage
+    metrics, which ``bloom``, ``bloom_words`` and ``metrics`` read back as
+    column projections."""
     st.write(
         seen.commit_bloom(
             seen.with_url_hashes(new_urls.select("url_canon"),

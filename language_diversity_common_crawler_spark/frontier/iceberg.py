@@ -16,8 +16,10 @@ State mapping (one namespace per crawl):
           partition and appends, so a re-run after a crash replaces any
           orphan rows of the uncommitted round instead of duplicating
           them. ``filter`` holds the round's whole filter commit in one
-          write; ``bloom``, ``bloom_words`` and ``metrics`` are read as
-          column projections of it (``crawl.SURFACE_VIEWS``), not tables
+          write: per hash partition, one bitset as ``words
+          ARRAY<BIGINT>`` and its lineage metrics. ``bloom``,
+          ``bloom_words`` and ``metrics`` are read as column projections
+          of it (``crawl.SURFACE_VIEWS``), not tables
     {db}.manifest
         — one row per committed round, appended LAST: the ACID append is
           the commit marker, exactly the role MANIFEST-xxxx.json plays in

@@ -5,18 +5,23 @@ Design for 10^10 URLs (SURVEY.md §4.3):
 
 - The bitset is **partitioned by hash range**: ``part_id =
   pmod(xxhash64(url, 2), n_parts)``. Each partition owns an independent
-  bloom filter over only its keys, stored as one ``binary`` row. The
-  partition hash is independent of the probe hashes ``h1``/``h2``: a
-  ``part_id`` taken from ``h1`` would pin the low bits of ``h1`` that the
-  power-of-two probe mask keeps, and crowd every key of a partition into a
-  fraction of its bit positions. At 1% fpp, 10^10 keys need ~12 GB of
-  bitset total — partitioned over e.g. 4096 parts that is ~3 MB per task,
-  loaded only by the task probing that hash range.
-- There is **one probe**, :func:`probe_bloom_jvm`: slices stored as
-  ``array<bigint>`` words (:func:`bloom_words`) are joined to candidates
-  on ``part_id`` and tested in whole-stage-codegen arithmetic, with ZERO
-  rows crossing the Python boundary. It is exact for power-of-two
-  geometries only, the only ones :func:`build_bloom` builds.
+  bloom filter over only its keys, stored as one row. The partition hash
+  is independent of the probe hashes ``h1``/``h2``: a ``part_id`` taken
+  from ``h1`` would pin the low bits of ``h1`` that the power-of-two probe
+  mask keeps, and crowd every key of a partition into a fraction of its
+  bit positions. At 1% fpp, 10^10 keys need ~12 GB of bitset total —
+  partitioned over e.g. 4096 parts that is ~3 MB per task, loaded only by
+  the task probing that hash range.
+- There is **one encoding**, :data:`BLOOM_SCHEMA`: a partition's bitset is
+  ``words ARRAY<BIGINT>``, where ``words[j]`` is the little-endian int64
+  view of bytes ``8j..8j+7``, so bit ``idx`` lives in word ``idx >> 6`` at
+  in-word position ``idx & 63``. Every function here builds, merges,
+  commits, measures and probes that form; the numpy kernels run on its
+  byte view (``words.view(np.uint8)``).
+- There is **one probe**, :func:`probe_bloom_jvm`: the words are joined to
+  candidates on ``part_id`` and tested in whole-stage-codegen arithmetic,
+  with ZERO rows crossing the Python boundary. It is exact for
+  power-of-two geometries only, the only ones :func:`build_bloom` builds.
 - Membership math is double hashing (Kirsch-Mitzenmacher): bit index
   ``(h1 + i*h2) mod m`` for i in 0..k-1, numpy-vectorized over Arrow
   batches on the build side (no per-row Python).
@@ -27,15 +32,15 @@ Design for 10^10 URLs (SURVEY.md §4.3):
   URLs or brand-new — the bloom collapses the anti-join's probe side to the
   (small) maybe set, which is what makes the 10^10-row anti-join cheap.
 - A crawl round commits its filter in one pass (:func:`commit_bloom`):
-  merged bits, probe-form words and fill/fpp stats from one cogrouped
-  Arrow UDF. :func:`build_bloom`, :func:`merge_bloom`, :func:`bloom_words`
-  and :func:`bloom_stats` stay as the reference it is tested against; all
-  of them share the same numpy bitset kernels.
+  the merged words and fill/fpp stats from one cogrouped Arrow UDF.
+  :func:`build_bloom`, :func:`merge_bloom`, :func:`bloom_words` and
+  :func:`bloom_stats` stay as the reference it is tested against; all of
+  them share the same numpy bitset kernels.
 - Deletions (e.g. recrawl-after-TTL) can't come out of a bloom filter,
   and compaction never removes a seen key. The :class:`CuckooFilter`
-  variant supports ``delete`` in the same per-partition ``binary`` row
-  layout; it stays for that case (the north rule names it), though no
-  crawl round uses it yet.
+  variant supports ``delete`` in a per-partition ``binary`` row layout;
+  it stays for that case (the north rule names it), though no crawl round
+  uses it yet.
 
 The reference has no URL-seen set at all (it re-reads whatever segment the
 config names, /root/reference/main.py:85-87); this module is the frontier
@@ -45,8 +50,8 @@ extension mandated by BASELINE.json's north rule.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,7 +91,7 @@ PART_ID_HASH = "pmod(xxhash64(url, 2), n_parts)"
 BLOOM_SCHEMA = StructType(
     [
         StructField("part_id", IntegerType(), False),
-        StructField("bits", BinaryType(), False),
+        StructField("words", ArrayType(LongType(), False), False),
         StructField("n_bits", LongType(), False),
         StructField("n_hashes", IntegerType(), False),
         StructField("n_keys", LongType(), False),
@@ -149,17 +154,26 @@ def _set_bits(
         np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
 
 
-def _or_bits(bitsets) -> np.ndarray:
-    """Bitwise OR of same-length bitsets (bytes-like), as a new array."""
-    merged = np.frombuffer(bitsets[0], dtype=np.uint8).copy()
-    for x in bitsets[1:]:
-        merged |= np.frombuffer(x, dtype=np.uint8)
-    return merged
+def _or_words(words: pa.ChunkedArray, n_bits: int) -> np.ndarray:
+    """Bitwise OR of a ``words`` column's rows (all of ``n_bits``), as a
+    new, writable array."""
+    rows = pc.list_flatten(words).to_numpy().reshape(len(words), n_bits // 64)
+    return np.bitwise_or.reduce(rows, axis=0)
 
 
-def _words(bits: np.ndarray) -> np.ndarray:
-    """Little-endian int64 word view of a bitset (see :func:`bloom_words`)."""
-    return bits.view("<i8")
+def _bloom_row(part_id: int, words: np.ndarray, n_bits: int, n_hashes: int,
+               n_keys: int) -> dict:
+    """The :data:`BLOOM_SCHEMA` columns of one partition's filter row."""
+    return {
+        "part_id": pa.array([part_id], type=pa.int32()),
+        "words": pa.ListArray.from_arrays(
+            pa.array([0, words.size], type=pa.int32()), pa.array(words),
+            type=pa.list_(pa.field("element", pa.int64(), nullable=False)),
+        ),
+        "n_bits": pa.array([n_bits], type=pa.int64()),
+        "n_hashes": pa.array([n_hashes], type=pa.int32()),
+        "n_keys": pa.array([n_keys], type=pa.int64()),
+    }
 
 
 def _fill_ratio(bits: np.ndarray, n_bits: int) -> float:
@@ -173,14 +187,6 @@ def _check_mergeable(fn: str, part_id: int, n_bits, n_hashes) -> None:
             f"{fn}: incompatible filter geometries in part {part_id}: "
             f"n_bits={set(n_bits)} n_hashes={set(n_hashes)} — merging "
             "filters with different geometry would create false negatives"
-        )
-
-
-def _check_word_aligned(fn: str, n_bits: int) -> None:
-    if n_bits % 64:
-        raise ValueError(
-            f"{fn}: n_bits={n_bits} is not a multiple of 64 — "
-            "the word encoding requires whole int64 words"
         )
 
 
@@ -207,23 +213,15 @@ def build_bloom(
             "of two and at least 64 — probe_bloom_jvm cannot probe any "
             "other geometry"
         )
-    n_bytes = n_bits_per_part // 8
 
     def _build(tbl: pa.Table) -> pa.Table:
-        bits = np.zeros(n_bytes, dtype=np.uint8)
-        _set_bits(bits, n_bits_per_part, n_hashes,
+        words = np.zeros(n_bits_per_part // 64, dtype="<i8")
+        _set_bits(words.view(np.uint8), n_bits_per_part, n_hashes,
                   _u64_col(tbl, "h1"), _u64_col(tbl, "h2"))
-        return pa.table(
-            {
-                "part_id": pa.array(
-                    [tbl.column("part_id")[0].as_py()], type=pa.int32()
-                ),
-                "bits": pa.array([bits.tobytes()], type=pa.binary()),
-                "n_bits": pa.array([n_bits_per_part], type=pa.int64()),
-                "n_hashes": pa.array([n_hashes], type=pa.int32()),
-                "n_keys": pa.array([tbl.num_rows], type=pa.int64()),
-            }
-        )
+        return pa.table(_bloom_row(
+            tbl.column("part_id")[0].as_py(), words, n_bits_per_part,
+            n_hashes, tbl.num_rows,
+        ))
 
     return (
         hashed.select("part_id", "h1", "h2")
@@ -232,24 +230,27 @@ def build_bloom(
     )
 
 
+def _or_parts(fn: str, bloom: DataFrame) -> DataFrame:
+    """One row per ``part_id``: the OR of the part's filter rows, which
+    must share one geometry, with ``n_keys`` summed (an upper bound)."""
+
+    def _merge(tbl: pa.Table) -> pa.Table:
+        part_id = tbl.column("part_id")[0].as_py()
+        nb = tbl.column("n_bits").to_pylist()
+        nh = tbl.column("n_hashes").to_pylist()
+        _check_mergeable(fn, part_id, nb, nh)
+        return pa.table(_bloom_row(
+            part_id, _or_words(tbl.column("words"), nb[0]), nb[0], nh[0],
+            sum(tbl.column("n_keys").to_pylist()),
+        ))
+
+    return bloom.groupBy("part_id").applyInArrow(_merge, BLOOM_SCHEMA)
+
+
 def merge_bloom(a: DataFrame, b: DataFrame) -> DataFrame:
     """OR two compatible per-partition filter sets (e.g. snapshot + delta).
     Bloom filters of identical geometry merge by bitwise OR."""
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_mergeable("merge_bloom", int(pdf["part_id"].iloc[0]),
-                         pdf["n_bits"], pdf["n_hashes"])
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "bits": [_or_bits(list(pdf["bits"])).tobytes()],
-                "n_bits": [int(pdf["n_bits"].iloc[0])],
-                "n_hashes": [int(pdf["n_hashes"].iloc[0])],
-                "n_keys": [int(pdf["n_keys"].sum())],  # upper bound
-            }
-        )
-
-    return a.unionByName(b).groupBy("part_id").applyInPandas(_merge, BLOOM_SCHEMA)
+    return _or_parts("merge_bloom", a.unionByName(b))
 
 
 def bloom_stats(bloom: DataFrame) -> DataFrame:
@@ -262,22 +263,21 @@ def bloom_stats(bloom: DataFrame) -> DataFrame:
     partitions."""
 
     def _stats(batches):
-        for pdf in batches:
-            rows = []
-            for part_id, bits, n_bits, n_hashes, n_keys in zip(
-                pdf["part_id"], pdf["bits"], pdf["n_bits"],
-                pdf["n_hashes"], pdf["n_keys"],
-            ):
-                fill = _fill_ratio(np.frombuffer(bits, dtype=np.uint8), n_bits)
-                rows.append(
-                    (int(part_id), int(n_keys), fill, fill ** int(n_hashes))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["part_id", "n_keys", "fill_ratio", "est_fpp"],
+        for b in batches:
+            fill = np.array([
+                _fill_ratio(w.values.to_numpy().view(np.uint8), nb)
+                for w, nb in zip(b.column("words"),
+                                 b.column("n_bits").to_pylist())
+            ])
+            k = b.column("n_hashes").to_numpy()
+            yield pa.RecordBatch.from_arrays(
+                [b.column("part_id"), b.column("n_keys"),
+                 pa.array(fill, type=pa.float64()),
+                 pa.array(fill ** k, type=pa.float64())],
+                names=["part_id", "n_keys", "fill_ratio", "est_fpp"],
             )
 
-    return bloom.mapInPandas(
+    return bloom.mapInArrow(
         _stats,
         "part_id int, n_keys long, fill_ratio double, est_fpp double",
     )
@@ -322,47 +322,16 @@ def _dedupe_min_struct(
     return agged.select(*cols, "maybe_seen")
 
 
-WORDS_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType(), False),
-        StructField("words", ArrayType(LongType(), False), False),
-        StructField("n_bits", LongType(), False),
-        StructField("n_hashes", IntegerType(), False),
-    ]
-)
-
-
 def bloom_words(bloom: DataFrame) -> DataFrame:
-    """Per-partition bitsets re-encoded as ``array<bigint>`` words for the
-    JVM probe: ``words[j]`` is the little-endian int64 view of bytes
-    ``8j..8j+7`` of the bitset, so bit ``idx`` lives in word ``idx >> 6``
-    at in-word position ``idx & 63`` — exactly the layout numpy's
-    ``bits[idx >> 3] |= 1 << (idx & 7)`` writes. Multiple rows per part
-    (snapshot + delta) are OR-merged here, riding the same grouped
-    exchange — the jvm probe therefore never needs a separate
-    ``merge_bloom`` pass."""
-
-    def _conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_mergeable("bloom_words", int(pdf["part_id"].iloc[0]),
-                         pdf["n_bits"], pdf["n_hashes"])
-        n_bits = int(pdf["n_bits"].iloc[0])
-        _check_word_aligned("bloom_words", n_bits)
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "words": [_words(_or_bits(list(pdf["bits"])))],
-                "n_bits": [n_bits],
-                "n_hashes": [int(pdf["n_hashes"].iloc[0])],
-            }
-        )
-
-    return bloom.groupBy("part_id").applyInPandas(_conv, WORDS_SCHEMA)
+    """The probe's filter set: one row per part, multiple rows per part
+    (snapshot + delta) OR-merged in one grouped exchange, so the probe
+    never needs a separate :func:`merge_bloom` pass."""
+    return _or_parts("bloom_words", bloom)
 
 
 COMMIT_SCHEMA = StructType(
     BLOOM_SCHEMA.fields
     + [
-        StructField("words", ArrayType(LongType(), False), False),
         StructField("n_new", LongType(), False),
         StructField("fill_ratio", DoubleType(), False),
         StructField("est_fpp", DoubleType(), False),
@@ -372,22 +341,19 @@ COMMIT_SCHEMA = StructType(
 
 def commit_bloom(new_hashed: DataFrame, prev: DataFrame) -> DataFrame:
     """A round's whole filter commit in one pass: per ``part_id``, the
-    merged bitset (the :data:`BLOOM_SCHEMA` columns), its probe-form
-    ``words``, ``n_new`` (the part's keys in ``new_hashed``), ``fill_ratio``
-    and ``est_fpp``.
+    merged filter (the :data:`BLOOM_SCHEMA` columns), ``n_new`` (the
+    part's keys in ``new_hashed``), ``fill_ratio`` and ``est_fpp``.
 
     Equal bit for bit to the reference composition ``merge_bloom(prev,
-    build_bloom(new_hashed))``, then :func:`bloom_words` and
-    :func:`bloom_stats` of the merge, plus a per-part count of
-    ``new_hashed``: a part with no new keys carries its previous row
-    forward with ``n_new`` 0, and ``prev`` may be empty (round 0). New
-    keys go in at the default geometry (:data:`N_BITS_PER_PART`,
-    :data:`N_HASHES`), which ``prev`` rows must share. It is
-    one cogrouped ``applyInArrow`` over ``(part_id, h1, h2)`` and the
-    previous rows, so the commit crosses the Python boundary once and
-    reads back nothing it wrote."""
-    n_bytes = (N_BITS_PER_PART + 7) // 8
-    words_type = pa.list_(pa.field("element", pa.int64(), nullable=False))
+    build_bloom(new_hashed))``, then :func:`bloom_stats` of the merge,
+    plus a per-part count of ``new_hashed``: a part with no new keys
+    carries its previous row forward with ``n_new`` 0, and ``prev`` may be
+    empty (round 0). New keys go in at the default geometry
+    (:data:`N_BITS_PER_PART`, :data:`N_HASHES`), which ``prev`` rows must
+    share. It is one cogrouped ``applyInArrow`` over ``(part_id, h1, h2)``
+    and the previous rows: the previous words are ORed, the new keys' bits
+    set in place, and one bitset emitted, so the commit crosses the Python
+    boundary once and reads back nothing it wrote."""
 
     def _commit(new: pa.Table, old: pa.Table) -> pa.Table:
         part_id = (new if new.num_rows else old).column("part_id")[0].as_py()
@@ -400,34 +366,22 @@ def commit_bloom(new_hashed: DataFrame, prev: DataFrame) -> DataFrame:
                 nb.append(N_BITS_PER_PART)
                 nh.append(N_HASHES)
             _check_mergeable("commit_bloom", part_id, nb, nh)
-            bits = _or_bits([b.as_buffer() for b in old.column("bits")])
             n_bits, k = nb[0], nh[0]
+            words = _or_words(old.column("words"), n_bits)
             n_keys = sum(old.column("n_keys").to_pylist())
         else:
-            bits = np.zeros(n_bytes, dtype=np.uint8)
             n_bits, k, n_keys = N_BITS_PER_PART, N_HASHES, 0
-        _check_word_aligned("commit_bloom", n_bits)
+            words = np.zeros(n_bits // 64, dtype="<i8")
+        bits = words.view(np.uint8)
         if new.num_rows:
             _set_bits(bits, n_bits, k, _u64_col(new, "h1"), _u64_col(new, "h2"))
-        words = _words(bits)
         fill = _fill_ratio(bits, n_bits)
-        return pa.table(
-            {
-                "part_id": pa.array([part_id], type=pa.int32()),
-                "bits": pa.array([bits.tobytes()], type=pa.binary()),
-                "n_bits": pa.array([n_bits], type=pa.int64()),
-                "n_hashes": pa.array([k], type=pa.int32()),
-                "n_keys": pa.array([n_keys + new.num_rows], type=pa.int64()),
-                "words": pa.ListArray.from_arrays(
-                    pa.array([0, words.size], type=pa.int32()),
-                    pa.array(words),
-                    type=words_type,
-                ),
-                "n_new": pa.array([new.num_rows], type=pa.int64()),
-                "fill_ratio": pa.array([fill], type=pa.float64()),
-                "est_fpp": pa.array([fill ** int(k)], type=pa.float64()),
-            }
-        )
+        return pa.table({
+            **_bloom_row(part_id, words, n_bits, k, n_keys + new.num_rows),
+            "n_new": pa.array([new.num_rows], type=pa.int64()),
+            "fill_ratio": pa.array([fill], type=pa.float64()),
+            "est_fpp": pa.array([fill ** int(k)], type=pa.float64()),
+        })
 
     return (
         new_hashed.select("part_id", "h1", "h2")
@@ -437,23 +391,13 @@ def commit_bloom(new_hashed: DataFrame, prev: DataFrame) -> DataFrame:
     )
 
 
-def _require_words(fn: str, bloom: DataFrame) -> None:
-    """A bits-form set would otherwise fail with an opaque analysis error."""
-    if "words" not in bloom.columns:
-        raise ValueError(
-            f"{fn}: the filter set must be the words form (a committed "
-            "bloom_words snapshot, or seen.bloom_words over the bits form); "
-            f"got columns {bloom.columns}"
-        )
-
-
-def _words_geometry(fn: str, words: DataFrame) -> tuple[int, int, int]:
-    """``(n_bits, n_hashes, total_bits)`` of a words-form filter set from
+def _filter_geometry(fn: str, bloom: DataFrame) -> tuple[int, int, int]:
+    """``(n_bits, n_hashes, total_bits)`` of a filter set from
     one small ``collect()`` of ``(part_id, n_bits, n_hashes)``: the probe
     needs the geometry as literals and the size to choose broadcast or
     shuffle-hash. Refuses an empty set, mixed geometries and duplicate
     ``part_id`` rows."""
-    rows = words.select("part_id", "n_bits", "n_hashes").collect()
+    rows = bloom.select("part_id", "n_bits", "n_hashes").collect()
     if not rows:
         raise ValueError(f"{fn}: empty filter set — no geometry to probe")
     nb = {int(r["n_bits"]) for r in rows}
@@ -466,10 +410,9 @@ def _words_geometry(fn: str, words: DataFrame) -> tuple[int, int, int]:
     n_parts = len({r["part_id"] for r in rows})
     if n_parts != len(rows):
         raise ValueError(
-            f"{fn}: words-form filter has {len(rows)} rows over {n_parts} "
+            f"{fn}: filter set has {len(rows)} rows over {n_parts} "
             "partitions — a duplicate part_id would duplicate candidate rows "
-            "through the probe join; pre-merge the state (bloom_words "
-            "merges the bits form)"
+            "through the probe join; pre-merge it with bloom_words"
         )
     return nb.pop(), nh.pop(), sum(int(r["n_bits"]) for r in rows)
 
@@ -514,8 +457,8 @@ def probe_bloom_jvm(
     broadcast: bool | None = None,
     geometry: tuple[int, int, int] | None = None,
 ) -> DataFrame:
-    """Flag each candidate row ``maybe_seen``: the words-form filter set
-    (:func:`bloom_words`, or a committed ``bloom_words`` snapshot) is
+    """Flag each candidate row ``maybe_seen``: the filter set (one row per
+    part: :func:`bloom_words`, or a committed ``bloom_words`` snapshot) is
     joined on ``part_id`` and :func:`_bloom_hit_expr` tests membership
     inside whole-stage codegen. No Python/Arrow boundary — BASELINE.md's
     stage diagnosis measured the earlier Arrow probe as the round's
@@ -527,15 +470,14 @@ def probe_bloom_jvm(
     set (~12 GB over e.g. 4096 parts) takes a shuffle-hash join on
     ``part_id``: each task's hash map holds only its ~3 MB slices.
     ``broadcast`` forces one of the two. ``geometry`` = ``(n_bits,
-    n_hashes, total_bits)`` from :func:`_words_geometry` skips that
+    n_hashes, total_bits)`` from :func:`_filter_geometry` skips that
     collect when the caller already ran it. ``dedupe_on`` drops duplicate
     candidates after the probe (:func:`_dedupe_min_struct`).
 
     Candidates carrying a pre-existing ``maybe_seen`` column raise (the
     output barrier appends, it does not replace)."""
-    _require_words("probe_bloom_jvm", bloom)
     if geometry is None:
-        geometry = _words_geometry("probe_bloom_jvm", bloom)
+        geometry = _filter_geometry("probe_bloom_jvm", bloom)
     n_bits, n_hashes, total_bits = geometry
     if broadcast is None:
         broadcast = total_bits // 8 <= BROADCAST_MAX_BYTES
@@ -572,7 +514,7 @@ def filter_unseen(
     """Exact unseen set: bloom pre-filter, then a precise anti-join.
 
     ``seen_urls`` is the exact table (a ``url_canon`` column at minimum),
-    ``bloom`` its words-form filter set. Definitely-new rows (bloom miss)
+    ``bloom`` its filter set, one row per part. Definitely-new rows (bloom miss)
     bypass the anti-join; only the maybe-seen remainder is joined.
     ``dedupe=True`` also drops duplicate candidate URLs in one exchange:
 
@@ -592,9 +534,8 @@ def filter_unseen(
     The geometry check runs the filter's plan — a full build for a
     computed filter set — so the filter is persisted first and the probe
     reuses it."""
-    _require_words("filter_unseen", bloom)
     bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-    geometry = _words_geometry("filter_unseen", bloom)
+    geometry = _filter_geometry("filter_unseen", bloom)
     slim = dedupe and set(candidates.columns) == {
         url_col, "h1", "h2", "part_id"
     }

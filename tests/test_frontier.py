@@ -65,10 +65,11 @@ def test_canonicalize_parity(spark):
 
 def _numpy_probe(hashed, bloom) -> set:
     """Driver-side reference probe: {(url_canon, maybe_seen)} from
-    seen._probe_hashes over the collected bits-form filter set (one row
-    per part), the hash math the codegen probe must reproduce."""
+    seen._probe_hashes over the byte view of the collected filter set's
+    words (one row per part), the hash math the codegen probe must
+    reproduce."""
     parts = {
-        r["part_id"]: (np.frombuffer(r["bits"], dtype=np.uint8),
+        r["part_id"]: (np.array(r["words"], dtype="<i8").view(np.uint8),
                        r["n_bits"], r["n_hashes"])
         for r in bloom.collect()
     }
@@ -85,10 +86,10 @@ def _numpy_probe(hashed, bloom) -> set:
 
 
 def _local_words(spark, bloom):
-    """The words form of ``bloom`` as a local relation, so a probe plan
+    """``bloom`` merged per part as a local relation, so a probe plan
     holds no exchange or Python stage of the filter build itself."""
     return spark.createDataFrame(
-        seen.bloom_words(bloom).collect(), seen.WORDS_SCHEMA
+        seen.bloom_words(bloom).collect(), seen.BLOOM_SCHEMA
     )
 
 
@@ -161,7 +162,7 @@ def test_probe_jvm_merges_snapshot_plus_delta(spark):
     grouped exchange, so the probe over the words of an UNMERGED
     snapshot+delta equals the reference probe of merge_bloom(snapshot,
     delta) — and a left join on part_id never duplicates candidate rows.
-    A words-form set with two rows for one part is refused."""
+    A filter set with two rows for one part is refused."""
     urls = spark.createDataFrame(
         [(f"https://h{i % 6}.ex/p/{i}",) for i in range(400)], ["url_canon"]
     )
@@ -235,8 +236,8 @@ def test_probe_jvm_geometry_guards(spark):
 
     def words(*geoms):
         return spark.createDataFrame(
-            [(p, [0] * (nb // 64), nb, 7) for p, nb in geoms],
-            seen.WORDS_SCHEMA,
+            [(p, [0] * (nb // 64), nb, 7, 0) for p, nb in geoms],
+            seen.BLOOM_SCHEMA,
         )
 
     odd = words((0, 96_000))
@@ -258,7 +259,7 @@ def test_filter_unseen_probe_modes_agree(spark, monkeypatch):
     Slim (url, h1, h2, part_id) candidates take the probe-first path within
     the budget and the dedup-first path beyond it; candidates with a host
     column dedupe after the probe. None puts a Python/Arrow stage on the
-    candidate path. A bits-form filter set is refused."""
+    candidate path."""
     rows = [
         (f"https://h{i % 5}.ex/p/{i % 120}", f"h{i % 5}.ex") for i in range(300)
     ]
@@ -286,17 +287,12 @@ def test_filter_unseen_probe_modes_agree(spark, monkeypatch):
                 for bad in ("FlatMapCoGroupsInArrow", "MapInArrow",
                             "ArrowEvalPython", "BatchEvalPython"):
                     assert bad not in plan, (bad, cols, budget, plan)
-    with pytest.raises(ValueError, match="bloom_words"):
-        seen.filter_unseen(cand, seen_urls, bloom=bloom)
-    with pytest.raises(ValueError, match="bloom_words"):
-        seen.probe_bloom_jvm(cand, bloom)
 
 
 def test_filter_unseen_words_form_state(spark, tmp_path):
-    """A words-form filter persisted the way a crawl commit writes
-    bloom_words (parquet, read back pinned to seen.WORDS_SCHEMA) must
-    probe to the exact unseen set, with and without dedupe, and the bits
-    form it was converted from must be refused loudly."""
+    """A filter set persisted the way a crawl commit writes it (parquet,
+    read back pinned to seen.BLOOM_SCHEMA) must probe to the exact unseen
+    set, with and without dedupe."""
     all_urls = spark.createDataFrame(
         [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
         ["url_canon"],
@@ -308,7 +304,7 @@ def test_filter_unseen_words_form_state(spark, tmp_path):
     bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
     path = str(tmp_path / "bloom_words")
     seen.bloom_words(bloom).write.parquet(path)
-    words = spark.read.schema(seen.WORDS_SCHEMA).parquet(path)
+    words = spark.read.schema(seen.BLOOM_SCHEMA).parquet(path)
     plain = all_urls.join(seen_urls, "url_canon", "left_anti")
     for dedupe in (True, False):
         got = sorted(
@@ -319,8 +315,6 @@ def test_filter_unseen_words_form_state(spark, tmp_path):
         )
         want = plain.distinct() if dedupe else plain
         assert got == sorted(r["url_canon"] for r in want.collect()), dedupe
-    with pytest.raises(ValueError, match="bloom_words"):
-        seen.filter_unseen(cand, seen_urls, bloom=bloom)
 
 
 def test_dedupe_survivor_row_matches_across_probe_paths(spark):
@@ -1239,32 +1233,38 @@ def test_seen_compaction_sized_to_seen_set(spark, tmp_path, monkeypatch):
 
 def test_filter_write_crash_leaves_round_uncommitted(
         spark, tmp_path, monkeypatch):
-    """A fault in the one filter write, of init_crawl or of a round,
-    propagates and leaves that round without a manifest. Re-run after the
-    fault, the crawl order and seen set equal the sequential oracle's."""
+    """A fault in any surface write, of init_crawl (frontier, seen_delta,
+    filter) or of a round (scheduled, seen_delta, filter, frontier),
+    propagates and leaves that round without a manifest. Faulted at each
+    write in turn on one checkpoint and then re-run, the crawl order and
+    seen set equal the sequential oracle's."""
     ckpt = str(tmp_path / "ckpt")
     write = crawl.ParquetStateBackend.write
 
-    def failing_write(self, df, k, sub, count=False):
-        if sub == "filter":
-            raise OSError(f"injected fault writing round {k}'s filter")
-        return write(self, df, k, sub, count)
+    def crash_at(surface, k, step):
+        def failing_write(self, df, k, sub, count=False):
+            if sub == surface:
+                raise OSError(f"injected fault writing round {k}'s {sub}")
+            return write(self, df, k, sub, count)
 
-    with monkeypatch.context() as m:
-        m.setattr(crawl.ParquetStateBackend, "write", failing_write)
-        with pytest.raises(OSError, match="round 0's filter"):
-            crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
-    assert crawl.latest_round(spark, ckpt) is None
-    assert not os.path.exists(os.path.join(ckpt, "MANIFEST-0000.json"))
+        with monkeypatch.context() as m:
+            m.setattr(crawl.ParquetStateBackend, "write", failing_write)
+            with pytest.raises(OSError, match=f"round {k}'s {surface}"):
+                step()
+        assert not os.path.exists(
+            os.path.join(ckpt, f"MANIFEST-{k:04d}.json")), (surface, k)
 
-    crawl.init_crawl(spark, _spark_seeds(spark, 60), ckpt)
+    seeds = _spark_seeds(spark, 60)
+    for surface in ("frontier", "seen_delta", "filter"):
+        crash_at(surface, 0, lambda: crawl.init_crawl(spark, seeds, ckpt))
+        assert crawl.latest_round(spark, ckpt) is None
+    crawl.init_crawl(spark, seeds, ckpt)
+
     rules = _spark_rules(spark)
-    with monkeypatch.context() as m:
-        m.setattr(crawl.ParquetStateBackend, "write", failing_write)
-        with pytest.raises(OSError, match="round 1's filter"):
-            crawl.run_round(spark, ckpt, budget=2, rules=rules)
-    assert crawl.latest_round(spark, ckpt) == 0
-    assert not os.path.exists(os.path.join(ckpt, "MANIFEST-0001.json"))
+    for surface in ("scheduled", "seen_delta", "filter", "frontier"):
+        crash_at(surface, 1, lambda: crawl.run_round(
+            spark, ckpt, budget=2, rules=rules))
+        assert crawl.latest_round(spark, ckpt) == 0
 
     for _ in range(2):
         crawl.run_round(spark, ckpt, budget=2, rules=rules)
@@ -1278,17 +1278,23 @@ def test_filter_write_crash_leaves_round_uncommitted(
 
 def test_resume_refuses_checkpoint_of_other_filter_layout(spark, tmp_path):
     """A checkpoint whose state format names the current part_id
-    derivation but not the filter layout (one written before the filter
-    became one surface) must not resume: its pinned reads of the missing
-    `filter` columns would return NULL words, every candidate would probe
-    new, and seen URLs would be crawled again."""
+    derivation but another filter layout must not resume: its pinned
+    reads of the `filter` columns it lacks would return NULL words, every
+    candidate would probe new, and seen URLs would be crawled again.
+    Refused: a format with no filter layout (written before the filter
+    became one surface), and the layout that stored each bitset twice,
+    as `bits BINARY` and as `words`."""
     ckpt = str(tmp_path / "ckpt")
     crawl.init_crawl(spark, _spark_seeds(spark, 20), ckpt)
     st = crawl.ParquetStateBackend(spark, ckpt)
-    st.write_format({"part_id_hash": seen.PART_ID_HASH})
-    with pytest.raises(ValueError, match="re-initialize"):
-        crawl.run_round(spark, ckpt, budget=2)
-    assert crawl.latest_round(spark, ckpt) == 0
+    two_forms = ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
+                 "n_keys BIGINT, words ARRAY<BIGINT>, n_new BIGINT, "
+                 "fill_ratio DOUBLE, est_fpp DOUBLE, round INT")
+    for layout in ({}, {"filter_layout": two_forms}):
+        st.write_format({"part_id_hash": seen.PART_ID_HASH, **layout})
+        with pytest.raises(ValueError, match="re-initialize"):
+            crawl.run_round(spark, ckpt, budget=2)
+        assert crawl.latest_round(spark, ckpt) == 0
 
 
 def test_sitemaps_expr_three_way(spark):

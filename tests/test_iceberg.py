@@ -238,7 +238,7 @@ def test_read_resolves_filter_views(spark):
     st = iceberg.IcebergStateBackend(fake)
     tables = {
         "filter": spark.createDataFrame(
-            [(p, b"\x01" * 8, 64, 7, 3, [1], 2, 0.5, 0.01, k)
+            [(p, [1], 64, 7, 3, 2, 0.5, 0.01, k)
              for k in (0, 1) for p in (0, 1)],
             crawl.SURFACE_SCHEMAS["filter"]),
         "frontier": spark.createDataFrame(
@@ -252,7 +252,7 @@ def test_read_resolves_filter_views(spark):
 
     fake.table = table
     assert st.read(1, "bloom").columns == seen.BLOOM_SCHEMA.names
-    assert st.read(1, "bloom_words").columns == seen.WORDS_SCHEMA.names
+    assert st.read(1, "bloom_words").columns == seen.BLOOM_SCHEMA.names
     metrics = st.read(1, "metrics")
     assert metrics.columns == ["part_id", "n_new", "bloom_keys",
                                "fill_ratio", "est_fpp", "round"]

@@ -17,8 +17,11 @@ Jobs measured (the two throughputs BASELINE.json's metric names):
   - extract: decode → boilerplate → 3 lang-ID models over a pre-generated
     synthetic pages parquet → extracted-text rows / sec
 
-Each child process warms the JVM/Arrow path first, then times the job; the
-parent compares the two levels and rewrites the "## Scaling" section of
+The one-time inputs are prepared in a child process too, so the parent
+never holds a JVM. Each child's driver heap is sized from the box's memory
+(``_driver_mem``) unless ``SPARK_GRAFT_DRIVER_MEM`` is set. Each measured
+child warms the JVM/Arrow path first, then times the job; the parent
+compares the two levels and rewrites the "## Scaling" section of
 BASELINE.md and SCALING.json.
 
 Usage:  python tools/scaling_bench.py --levels 1,4
@@ -80,8 +83,9 @@ def _gen_pages_once() -> None:
 
 # versioned: the prep-once guard only checks existence, so a state-SHAPE
 # change must land in a fresh directory or stale state from an older
-# protocol would be measured
-STATE_DIR = "/tmp/scaling_state_v9"
+# protocol would be measured (v10: the filter stores one bitset form, and
+# run_round refuses a checkpoint of the older filter layout)
+STATE_DIR = "/tmp/scaling_state_v10"
 
 
 def _code_fingerprint() -> str:
@@ -372,11 +376,36 @@ def _protocol(lo: int, hi: int) -> str:
             f"timing, units = URLs scheduled")
 
 
-def parent(levels: list[int], update_baseline: bool) -> None:
-    import statistics
-
+def _prep() -> None:
+    """The one-time inputs of every level: the pages table and the
+    committed round 0."""
     _gen_pages_once()
     _round0(MULT)
+
+
+def _driver_mem() -> str:
+    """Driver heap for each child: 3/8 of the box's memory (6g of 16 GB),
+    so the JVM's RSS, its heap plus off-heap overhead, and the Python
+    workers stay near half the box; at most session.py's 24g default."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f
+                   if ln.startswith("MemTotal:"))
+    return f"{min(kib * 3 // 8 // 1024, 24 << 10)}m"
+
+
+def parent(levels: list[int], update_baseline: bool) -> None:
+    import multiprocessing
+    import statistics
+
+    # children inherit the heap size; an explicit setting wins
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem())
+    # the prep's Spark session runs in a child as the measured levels do,
+    # so no JVM stays alive in this process for the whole campaign
+    prep = multiprocessing.get_context("spawn").Process(target=_prep)
+    prep.start()
+    prep.join()
+    if prep.exitcode:
+        raise RuntimeError(f"scaling prep failed (exit {prep.exitcode})")
     # PAIRED-ROUND MEDIANS (the BASELINE.md protocol: medians of >=3 runs
     # after warm-up). Each interleaved round runs BOTH levels back-to-back
     # under the same noise regime, so the per-round efficiency ratio is
