@@ -143,7 +143,7 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + df/li/cld predictions (L5 fan-out, three pandas UDFs)."""
+    """documents + df/li/cld predictions (L5 fan-out, one pandas UDF)."""
     return with_model_predictions(_docs(spark, sf_dir), "text")
 
 
@@ -986,16 +986,11 @@ SELECT host, url_canon, priority, slot FROM (
 ) WHERE slot <= 3
 """)
 def frontier_politeness_schedule(spark, sf_dir):
-    seeds = _seeds_df(spark, sf_dir).dropDuplicates(["url_canon"])
-    prio = (md5_60(F.concat(F.lit("prio:"), F.col("url_canon"))) % 1000000).alias(
-        "priority"
+    seeds = _seeds_df(spark, sf_dir).dropDuplicates(["url_canon"]).select(
+        "url_canon", "host"
     )
-    seeds = seeds.select("url_canon", "host", prio)
-    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_canon"))
-    return (
-        seeds.withColumn("slot", F.row_number().over(w))
-        .filter(F.col("slot") <= 3)
-        .select("host", "url_canon", "priority", "slot")
+    return scheduler.politeness_schedule(seeds, 3).select(
+        "host", "url_canon", "priority", "slot"
     )
 
 

@@ -10,7 +10,7 @@ line::
 
 The headline set covers every layer of the engine:
   - the reference's primary analytical query (A1 language histogram via the
-    three pandas-UDF lang-ID models),
+    three-model lang-ID pandas UDF),
   - the full extract pipeline on synthetic pages (decode -> boilerplate ->
     lang-ID, SURVEY.md §3.1),
   - training-data ops (MinHash-LSH dedup, span removal, decontamination),
@@ -166,9 +166,8 @@ def _extract_over_parquet(spark, n_pages: int) -> tuple[int, float]:
         _write_pages(spark, path, n_pages)
     df = spark.read.parquet(path)
     out = extract_pipeline(df)
-    # the aggregate must reference ALL THREE models' outputs — an agg that
-    # touches only df_lang lets Catalyst prune the li/cld model UDFs out of
-    # the plan, and the "extract" time silently becomes a 1-model number
+    # the aggregate references ALL THREE models' outputs (the models are
+    # one UDF, so an agg of df_lang alone would still run all three)
     aggs = [
         F.count("df_lang").alias("n"),
         F.sum(F.length("content")).alias("chars"),

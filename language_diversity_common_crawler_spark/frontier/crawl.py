@@ -464,12 +464,12 @@ def run_round(
     the manifest dict. Idempotent on crash: an uncommitted round is simply
     re-run.
 
-    The seen-set probe reads the previous round's committed
-    ``bloom_words`` — one filter covering every earlier round, never
-    rebuilt from the (10^10-row) seen set — and the round's commit merges
-    its new URLs into the previous ``bloom``. Both are projections of the
-    ``filter`` surface, which ``init_crawl`` and each round write (through
-    ``_commit_bloom``) before their manifest.
+    The previous round's committed filter (``bloom_words``, a projection
+    of the ``filter`` surface that ``init_crawl`` and each round write
+    through ``_commit_bloom`` before their manifest) is read once: the
+    seen-set probe tests against it — one filter covering every earlier
+    round, never rebuilt from the (10^10-row) seen set — and the round's
+    commit merges its new URLs into it.
 
     A parquet checkpoint is plain files, so a copy of it under another
     path resumes the same round: the compacted seen table re-registers
@@ -517,9 +517,8 @@ def run_round(
     # committed filter covers BOTH, so a URL seen only in a delta still
     # flags maybe_seen and is caught by the second anti-join.
     exact_base = compacted if compacted is not None else deltas
-    new = seen.filter_unseen(
-        cand, exact_base, bloom=st.read(prev, "bloom_words"), dedupe=True
-    )
+    prev_filter = st.read(prev, "bloom_words")
+    new = seen.filter_unseen(cand, exact_base, bloom=prev_filter, dedupe=True)
     if compacted is not None and deltas is not None:
         new = new.join(deltas.select("url_canon"), "url_canon", "left_anti")
 
@@ -537,7 +536,7 @@ def run_round(
     # (scale observability: one row per hash partition, not per URL) with
     # the committed bloom's fill ratio / estimated fpp so operators see the
     # filter saturating
-    _commit_bloom(st, k, new_urls, st.read(prev, "bloom"))
+    _commit_bloom(st, k, new_urls, prev_filter)
 
     next_frontier = frontier.join(
         sched.select("url_canon"), "url_canon", "left_anti"

@@ -107,7 +107,7 @@ def real_models_available() -> bool:
     """True iff the reference's actual model libraries are importable.
     Deliberately NOT cached: the delegation tests flip availability by
     monkeypatching sys.modules; the hot path snapshots the answer once at
-    UDF construction instead (langid_models._make_udf)."""
+    UDF construction instead (langid_models._identify_udf)."""
     try:  # pragma: no cover - not installed in this sandbox
         import langid  # noqa: F401
         import pycld2  # noqa: F401

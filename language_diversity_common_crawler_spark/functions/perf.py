@@ -8,11 +8,12 @@ durations per segment, and reports mean seconds/record
 (stats/performance.py:18-19,41).
 
 Spark surface: the hot path stays clean (bench.py remains the headline
-harness); when instrumentation is requested, each model UDF is wrapped so
-every Arrow batch adds its ``process_time`` delta and row count to SPARK
-ACCUMULATORS — executor-side totals stream back to the driver with task
-completion, no extra jobs, no per-row Python beyond the model call the
-batch already makes. The x100 repetition is intentionally NOT reproduced
+harness); when instrumentation is requested, the one model UDF
+(``langid_models``) times each model's call, so every Arrow batch adds
+each model's ``process_time`` delta and row count to SPARK ACCUMULATORS
+— executor-side totals stream back to the driver with task completion,
+no extra jobs, no per-row Python beyond the model calls the batch
+already makes. The x100 repetition is intentionally NOT reproduced
 in-engine (it was the reference's micro-benchmark-stabilization for
 per-record timing, README.md:17; batch timing amortizes that noise
 already).
@@ -20,16 +21,9 @@ already).
 
 from __future__ import annotations
 
-import time
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from . import langid_models, langspec
-
-_RESULT_TYPE = "lang: string, precision: double"
 
 
 class ModelPerf:
@@ -47,38 +41,10 @@ class ModelPerf:
 
     def with_predictions(self, df: DataFrame,
                          text_col: str = "text") -> DataFrame:
-        """L5 fan-out with timing: df_lang/df_prec, li_lang/li_prec,
-        cld_lang/cld_prec columns, accumulators fed per Arrow batch."""
-        out = df
-        for model in langspec.MODELS:
-            p = langspec.MODEL_PREFIX[model]
-            sec_acc = self.seconds[model]
-            row_acc = self.rows[model]
-
-            # snapshot the real-library probe once (same contract as
-            # langid_models._make_udf): the instrumented pipeline must time
-            # the SAME models the uninstrumented one runs — real libs when
-            # importable, deterministic langspec otherwise
-            use_real = langspec.real_models_available()
-
-            def make(model=model, sec_acc=sec_acc, row_acc=row_acc,
-                     use_real=use_real):
-                def fn(text: pd.Series) -> pd.DataFrame:
-                    t0 = time.process_time()
-                    res = langid_models.predict_batch(model, text, use_real)
-                    sec_acc.add(time.process_time() - t0)
-                    row_acc.add(len(text))
-                    return res
-
-                fn.__name__ = f"{model}_identify_timed"
-                return pandas_udf(_RESULT_TYPE)(fn)
-
-            struct_col = make()(F.col(text_col))
-            out = out.withColumn(f"_{p}", struct_col)
-            out = out.withColumn(f"{p}_lang", F.col(f"_{p}.lang"))
-            out = out.withColumn(f"{p}_prec", F.col(f"_{p}.precision"))
-            out = out.drop(f"_{p}")
-        return out
+        """``with_model_predictions``'s columns from a UDF that times each
+        model's call on every Arrow batch into these accumulators."""
+        return langid_models._add_predictions(
+            df, text_col, langid_models._identify_udf(timer=self))
 
     def mean_seconds_per_record(self) -> dict[str, float]:
         return {

@@ -2,8 +2,11 @@
 
 Fix one model's prediction to a language; count the other two models'
 predicted languages; sort desc by count (K2, `sort -k3 -rn`).
-Spark: filter → explode (model, lang) pairs → ONE hash aggregate (the
-same idiom as operators/histogram.py A1). An earlier two-group-bys-
+Spark: explode (model, lang) pairs → ONE hash aggregate (the same idiom
+as operators/histogram.py A1). The fixed-language test is a CASE inside
+the explode, not a Filter: Catalyst pushes a Filter on a prediction
+column below the projection of the one model UDF, which then runs twice
+per row (caught by tests/test_plan_shape.py). An earlier two-group-bys-
 unioned shape re-planned the source once per branch, so the upstream
 model UDFs executed twice over every row (caught by the plan audit);
 the single-pass explode computes each prediction once and shuffles one
@@ -21,7 +24,6 @@ from ..functions.langspec import MODEL_PREFIX, MODELS
 def fixed_lang_crosstab(preds: DataFrame, fixed_model: str, fixed_lang: str) -> DataFrame:
     others = [m for m in MODELS if m != fixed_model]
     fixed_col = f"{MODEL_PREFIX[fixed_model]}_lang"
-    filtered = preds.filter(F.col(fixed_col) == fixed_lang)
     pairs = F.array(*[
         F.struct(
             F.lit(m).alias("model"),
@@ -30,7 +32,8 @@ def fixed_lang_crosstab(preds: DataFrame, fixed_model: str, fixed_lang: str) -> 
         for m in others
     ])
     return (
-        filtered.select(F.explode(pairs).alias("p"))
+        preds.select(F.explode(
+            F.when(F.col(fixed_col) == fixed_lang, pairs)).alias("p"))
         .groupBy(F.col("p.model").alias("model"), F.col("p.lang").alias("lang"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .select("model", "lang", "cnt")

@@ -22,10 +22,22 @@ partition column, so per-segment runs are partition-pruned scans.
 decode_udf is flagged non-deterministic purely as an optimizer fence so
 the F1 filter does not duplicate the decode below itself (see
 functions/decode.py docstring): the plan is ArrowEvalPython[decode] →
-Filter → ArrowEvalPython[html2text + 3 models], decode exactly once per
-row and the two Python worker pools overlapping across batches.
+Filter → ArrowEvalPython[html2text, identify(html2text)], decode exactly
+once per row and the two Python worker pools overlapping across batches.
+``identify`` is the one UDF that runs all three models
+(functions/langid_models.py). The worker evaluates each chained UDF
+argument on its own, so html2text runs twice per row: once for the
+``content`` column, once as identify's input.
 
-Measured negative result (keep the chain UNFUSED): a variant fusing
+Measured on 3,000 pages in 6 segments (``local[4]`` on a 4-core box,
+outputs equal row for row, interleaved pairs, medians):
+- Fencing html2text with ``asNondeterministic()`` makes it run once, but
+  adds a third ArrowEvalPython stage, and it was SLOWER than the unfenced
+  chain: 2.06 → 2.39 s, 6/6 pairs. Do not retry it.
+- Fusing html2text and the three models into one UDF was faster: 2.22 →
+  1.93 s, 7/8 pairs. Not done yet; it is the next step for this stage.
+
+Measured negative result (keep decode UNFUSED): a variant fusing
 decode → boilerplate → all 3 models into ONE pandas UDF (html in once,
 one struct out once, ~7→2 large-string boundary crossings) benchmarked
 13-20% SLOWER than this chain at pinned local[8] over 270k pages,
@@ -34,10 +46,8 @@ chained ArrowEvalPython stage gets its own Python worker pool, so
 batches overlap across stages (decode batch k+1 runs while models chew
 batch k); that pipeline parallelism is worth more than the extra Arrow
 crossings, which are cheap next to the per-string codec/regex work.
-Caveat when benchmarking this chain: an aggregate that references only
-one model's output lets Catalyst prune the other two model UDFs out of
-the plan entirely — reference all six model columns or the number is a
-1-model number.
+The three models are one UDF, so a query that references one model's
+output still runs all three (Catalyst can prune the UDF only whole).
 """
 
 from __future__ import annotations

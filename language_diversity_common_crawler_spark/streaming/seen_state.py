@@ -10,10 +10,12 @@ memory trade every real crawler makes (false positives drop a URL that was
 never seen, at the configured fpp; false negatives cannot happen).
 
 The grouping key is ``part_id = pmod(xxhash64(url, 2), n_parts)`` — the
-SAME partitioning as the batch seen-set (frontier/seen.py), so a batch-built
-bloom snapshot could seed the stream state and vice versa. Bit math is the
-batch filter's own kernels (Kirsch-Mitzenmacher double hashing,
-numpy-vectorized per batch).
+SAME partitioning as the batch seen-set (frontier/seen.py), but the
+stored forms differ: the batch filter stores each partition's bitset as
+``words ARRAY<BIGINT>``, the stream state as ``bits BINARY``. A snapshot
+of one could seed the other only through a conversion, which no code
+here does. Bit math is the batch filter's own kernels (Kirsch-Mitzenmacher
+double hashing, numpy-vectorized per batch).
 """
 
 from __future__ import annotations

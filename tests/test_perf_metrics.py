@@ -19,9 +19,9 @@ def test_perf_accumulators_and_parity(spark):
     ).filter("text IS NOT NULL")
 
     perf = ModelPerf(spark)
-    timed = perf.with_predictions(df, "text").select(
-        "url", "df_lang", "li_lang", "cld_lang"
-    )
+    cols = ["url", "df_lang", "df_prec", "li_lang", "li_prec", "cld_lang",
+            "cld_prec"]
+    timed = perf.with_predictions(df, "text").select(*cols)
     got = sorted(tuple(r) for r in timed.collect())
 
     # accumulators populated by the action above
@@ -34,9 +34,7 @@ def test_perf_accumulators_and_parity(spark):
     # timing must not change predictions
     want = sorted(
         tuple(r)
-        for r in with_model_predictions(df, "text")
-        .select("url", "df_lang", "li_lang", "cld_lang")
-        .collect()
+        for r in with_model_predictions(df, "text").select(*cols).collect()
     )
     assert got == want
 

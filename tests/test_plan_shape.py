@@ -17,12 +17,10 @@ from language_diversity_common_crawler_spark.functions.boilerplate import (
 )
 from language_diversity_common_crawler_spark.functions.decode import decode_udf
 from language_diversity_common_crawler_spark.functions.langid_models import (
-    model_udf,
+    _fields,
+    _identify_udf,
 )
-from language_diversity_common_crawler_spark.functions.langspec import (
-    MODEL_PREFIX,
-    MODELS,
-)
+from language_diversity_common_crawler_spark.functions.langspec import MODELS
 from language_diversity_common_crawler_spark.plans.pipeline import (
     extract_pipeline,
 )
@@ -114,7 +112,7 @@ def test_extract_segment_is_partition_pruned(spark, tmp_path):
 
 
 def test_lang_histogram_scan_prunes_unused_columns(spark):
-    """The flagship query (3 pandas-UDF models -> explode -> one hash agg)
+    """The flagship query (3-model pandas UDF -> explode -> one hash agg)
     must not drag unused document columns through the Arrow boundary."""
     import __spark_entry__ as entrymod
 
@@ -143,6 +141,21 @@ def test_extract_decodes_exactly_once(spark):
     assert "Filter isnotnull" in plan[:decode_pos]
 
 
+def test_extract_models_share_one_html2text_input(spark):
+    """The second extract stage evaluates html2text for the content column
+    and for the one model UDF that runs all three models: the worker
+    evaluates each chained UDF argument on its own, so the name appears
+    (and runs) twice per row. A UDF per model gave each model its own
+    chained copy: four html2text runs per row."""
+    df = extract_pipeline(pages.pages_df(spark, 50, seed=3, n_partitions=2))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    stage2 = next(line for line in plan.splitlines()
+                  if "ArrowEvalPython" in line and "_html2text_batch(" in line)
+    assert stage2.count("_html2text_batch(") == 2, stage2
+    assert stage2.count("identify(_html2text_batch(") == 1, stage2
+    assert "_decode_batch(" not in stage2, stage2
+
+
 def _sequential_extract(df):
     """The extract chain as one withColumn/drop per column: the reference
     form of extract_pipeline's and with_model_predictions' withColumns."""
@@ -160,13 +173,10 @@ def _sequential_extract(df):
         .withColumn("id", F.col("warc_record_id"))
         .withColumn("len", F.col("content_length"))
     )
-    for model in MODELS:
-        p = MODEL_PREFIX[model]
-        df = df.withColumn(f"_{p}", model_udf(model)(F.col("content")))
-        df = df.withColumn(f"{p}_lang", F.col(f"_{p}.lang"))
-        df = df.withColumn(f"{p}_prec", F.col(f"_{p}.precision"))
-        df = df.drop(f"_{p}")
-    return df
+    df = df.withColumn("_lid", _identify_udf()(F.col("content")))
+    for c in _fields(MODELS):
+        df = df.withColumn(c, F.col(f"_lid.{c}"))
+    return df.drop("_lid")
 
 
 def test_extract_plan_same_as_one_withcolumn_per_column(spark):
@@ -193,15 +203,17 @@ def test_no_query_duplicates_model_udf_evaluation(spark):
     union re-planning its source per branch, silently doubles the most
     expensive work at 100 TB (both happened: decode under the F1 filter,
     detect_fast under the crosstab's two-branch union). Counts TOP-LEVEL
-    entries of each ArrowEvalPython node's expression list — nested
-    chained references print the name again without re-evaluating."""
+    entries of each ArrowEvalPython node's expression list. A chained
+    reference nested inside another UDF's arguments prints the name again
+    and IS evaluated again (the worker evaluates each chained argument on
+    its own); test_extract_models_share_one_html2text_input pins how
+    often that happens in the extract chain."""
     import collections
     import re
 
     import __spark_entry__ as entrymod
 
-    udfs = ("_decode_batch", "_html2text_batch", "detect_fast_identify",
-            "langid_identify", "cld2_identify")
+    udfs = ("_decode_batch", "_html2text_batch", "identify")
 
     def top_level_entries(bracket: str) -> list[str]:
         out, depth, cur = [], 0, []

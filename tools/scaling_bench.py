@@ -228,9 +228,8 @@ def _extract_job(spark):
 
     df = spark.read.parquet(PAGES_PATH)
     out = extract_pipeline(df)
-    # reference ALL THREE models' outputs: an agg touching only df_lang
-    # lets Catalyst prune the li/cld model UDFs from the plan, silently
-    # turning the "extract" time into a 1-model number
+    # reference ALL THREE models' outputs (the models are one UDF, so an
+    # agg of df_lang alone would still run all three)
     row = out.agg(
         F.count("df_lang").alias("n"),
         F.sum(F.length("content")).alias("chars"),
